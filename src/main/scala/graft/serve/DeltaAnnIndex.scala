@@ -18,14 +18,16 @@ package graft.serve
   * same order, same score bits. The base tier is consulted for
   * k + |shadowed ∪ removed| candidates, which is sufficient even if
   * every hidden base row ranked above the true top-k; the delta tier
-  * scans its live slots with the same pinned cosine fold; the k-bounded
-  * merge uses the engine's (score DESC, id ASC) rule.
+  * scans its live slots with the same pinned cosine fold (row norms kept
+  * per slot, [[Cosine]]); both feed one k-bounded [[TopK]].
   *
   * `add` is an UPSERT: it shadows any base row with the same id and
   * supersedes any earlier delta slot — latest-wins at serving, the same
   * SCD-1 rule the batch tier's [[graft.operators.Upsert]] applies.
   * `delete` tombstones both tiers. Ids never seen are fine (a delete
-  * racing the rebuild that already dropped the row is ordinary).
+  * racing the rebuild that already dropped the row is ordinary). An
+  * all-zero vector is refused (IllegalArgumentException), as the rebuilt
+  * index's loader refuses it.
   *
   * Write cost: O(1) amortized per add — slots APPEND into
   * capacity-doubling arrays (written slots are never mutated, so
@@ -37,27 +39,15 @@ package graft.serve
   * at the class's own 1k-writes/s envelope would have copied ~450 GB).
   *
   * Thread-safety: writers serialize on this object; readers are
-  * wait-free on an immutable [[State]] snapshot (volatile-published
-  * AFTER the slot bytes are written, so a reader that sees `len` sees
-  * the slot). Readers during a write serve the previous state — the
-  * same visibility rule as [[ServingIndex.current]].
+  * wait-free on an immutable [[DenseDelta.State]] snapshot
+  * (volatile-published AFTER the slot bytes are written, so a reader
+  * that sees `len` sees the slot). Readers during a write serve the
+  * previous state — the same visibility rule as [[ServingIndex.current]].
   */
 final class DeltaAnnIndex(base: MemoryAnnIndex)
   extends DeltaTier[DeltaAnnIndex] {
 
-  /** Immutable per-write snapshot. `ids`/`vecs` are append-only buffers
-    * (only slots < len are readable; written slots never mutate);
-    * `latest` maps id → its newest slot; `removed` holds deleted ids.
-    * A slot r is LIVE iff latest(ids(r)) == r && !removed(ids(r)).
-    */
-  private final case class State(ids: Array[Long], vecs: Array[Float],
-                                 len: Int,
-                                 latest: Map[Long, Int],
-                                 removed: Set[Long])
-
-  @volatile private var state: State =
-    State(new Array[Long](8), new Array[Float](8 * base.dim), 0,
-      Map.empty, Set.empty)
+  private val slots = new DenseDelta(base.dim)
 
   // the DeltaPostingsIndex seal: a write after republish() fails loudly
   @volatile private var republished: Boolean = false
@@ -70,10 +60,7 @@ final class DeltaAnnIndex(base: MemoryAnnIndex)
   def dim: Int = base.dim
 
   /** Live delta rows (superseded and deleted slots excluded). */
-  def deltaSize: Long = {
-    val s = state
-    s.latest.count { case (id, _) => !s.removed(id) }.toLong
-  }
+  def deltaSize: Long = slots.snapshot.size
 
   /** Fold the delta into a NEW immutable base ([[DeltaTier.republish]]):
     * the folded index is [[MemoryAnnIndex.fromRows]] over
@@ -106,39 +93,24 @@ final class DeltaAnnIndex(base: MemoryAnnIndex)
       survivors ++ folded, base.centroids.map(_.toSeq)))
   }
 
-  def tombstoneCount: Int = {
-    val s = state
-    (s.latest.keySet ++ s.removed).size
-  }
+  def tombstoneCount: Int = tombstonedIds.size
 
   /** Upsert `id` with `vec`: searchable by the next `topK` call. */
   def add(id: Long, vec: Seq[Float]): Unit = this.synchronized {
     checkLive()
     require(vec.length == dim, s"vec dim ${vec.length} != index dim $dim")
-    val s = state
-    val (ids, vecs) =
-      if (s.len < s.ids.length) (s.ids, s.vecs)
-      else {
-        val cap = s.ids.length * 2
-        val ni = new Array[Long](cap)
-        val nv = new Array[Float](cap * dim)
-        System.arraycopy(s.ids, 0, ni, 0, s.len)
-        System.arraycopy(s.vecs, 0, nv, 0, s.len * dim)
-        (ni, nv)
-      }
-    ids(s.len) = id
-    var j = 0
-    while (j < dim) { vecs(s.len * dim + j) = vec(j); j += 1 }
-    // slot bytes written BEFORE the volatile state store publishes len
-    state = State(ids, vecs, s.len + 1,
-      s.latest + (id -> s.len), s.removed - id)
+    // the rule a rebuilt MemoryAnnIndex applies at load: a zero vector
+    // has no direction, so the fold/rebuild would refuse it
+    if (vec.forall(_ == 0.0f))
+      throw new IllegalArgumentException(
+        s"DeltaAnnIndex: id $id has an all-zero vector (cosine would be NaN)")
+    slots.add(id, vec)
   }
 
   /** Delete `id` from both tiers: gone by the next `topK` call. */
   def delete(id: Long): Unit = this.synchronized {
     checkLive()
-    val s = state
-    state = s.copy(removed = s.removed + id)
+    slots.delete(id)
   }
 
   /** Merged top-k over (base ∖ hidden) ∪ live delta — bit-identical to
@@ -148,50 +120,105 @@ final class DeltaAnnIndex(base: MemoryAnnIndex)
     */
   def topK(query: Seq[Float], k: Int,
            filters: Seq[MetaFilter] = Nil): Seq[(Long, Double)] = {
-    val s = state
-    val hidden = s.latest.keySet ++ s.removed
-    val fromBase = base.topK(query, k + hidden.size, filters)
-      .filterNot { case (id, _) => hidden(id) }
-    val q = query.toArray
-    val fromDelta = (0 until s.len).iterator
-      .filter { r =>
-        val id = s.ids(r)
-        s.latest(id) == r && !s.removed(id)
-      }
-      .map { r =>
-        var dot = 0.0; var na = 0.0; var nb = 0.0
-        var j = 0
-        val bse = r * dim
-        while (j < dim) {
-          val x = s.vecs(bse + j).toDouble; val y = q(j).toDouble
-          dot += x * y; na += x * x; nb += y * y; j += 1
-        }
-        (s.ids(r), dot / (math.sqrt(na) * math.sqrt(nb)))
-      }.toSeq
-    (fromBase ++ fromDelta)
-      .sortBy { case (id, sc) => (-sc, id) }.take(k)
+    val s = slots.snapshot
+    val hidden = s.hidden
+    val fromBase = base.topK(query, TopK.satAdd(k, hidden.size), filters)
+    val top = TopK.largest(k, TopK.satAdd(fromBase.size, s.len))
+    fromBase.foreach { case (id, sc) => if (!hidden(id)) top.offer(sc, id) }
+    s.offerLive(top, query)
+    top.toSeq
   }
 
   /** The live delta rows, id-ascending — what the next Spark rebuild
     * unions into the base corpus (tombstones translate to an anti-join
     * on [[tombstonedIds]]).
     */
-  def deltaRows: Seq[(Long, Seq[Float])] = {
-    val s = state
-    (0 until s.len)
-      .filter { r =>
-        val id = s.ids(r)
-        s.latest(id) == r && !s.removed(id)
-      }
-      .map(r => (s.ids(r), (0 until dim).map(j => s.vecs(r * dim + j))))
-      .sortBy(_._1)
-  }
+  def deltaRows: Seq[(Long, Seq[Float])] = slots.snapshot.rows
 
   /** Ids the rebuild anti-joins away from the BASE: every id the delta
     * shadows (its newest value lives in [[deltaRows]]) or removed.
     */
-  def tombstonedIds: Set[Long] = {
+  def tombstonedIds: Set[Long] = slots.snapshot.hidden
+}
+
+/** The append-only slot segment both dense delta tiers ([[DeltaAnnIndex]],
+  * [[DeltaHnswIndex]]) keep beside their immutable base: an upsert
+  * appends a slot (id, vector, its [[Cosine]] norm) into
+  * capacity-doubling buffers, a delete tombstones the id. Writers
+  * serialize on the owning tier; readers take one immutable
+  * [[DenseDelta.State]] snapshot.
+  */
+private[serve] final class DenseDelta(dim: Int) {
+  import DenseDelta.State
+
+  @volatile private var state: State =
+    State(dim, new Array[Long](8), new Array[Float](8 * dim),
+      new Array[Double](8), 0, Map.empty, Set.empty)
+
+  def snapshot: State = state
+
+  /** Append `vec` as `id`'s newest slot (the caller serializes writers). */
+  def add(id: Long, vec: Seq[Float]): Unit = {
     val s = state
-    s.latest.keySet ++ s.removed
+    val (ids, vecs, norms) =
+      if (s.len < s.ids.length) (s.ids, s.vecs, s.norms)
+      else {
+        val cap = s.ids.length * 2
+        (java.util.Arrays.copyOf(s.ids, cap),
+          java.util.Arrays.copyOf(s.vecs, cap * dim),
+          java.util.Arrays.copyOf(s.norms, cap))
+      }
+    ids(s.len) = id
+    var j = 0
+    while (j < dim) { vecs(s.len * dim + j) = vec(j); j += 1 }
+    norms(s.len) = Cosine.norm(vecs, s.len * dim, dim)
+    // slot bytes written BEFORE the volatile state store publishes len
+    state = State(dim, ids, vecs, norms, s.len + 1,
+      s.latest + (id -> s.len), s.removed - id)
+  }
+
+  def delete(id: Long): Unit = {
+    val s = state
+    state = s.copy(removed = s.removed + id)
+  }
+}
+
+private[serve] object DenseDelta {
+
+  /** Immutable per-write snapshot. `ids`/`vecs`/`norms` are append-only
+    * buffers (only slots < len are readable; written slots never
+    * mutate); `latest` maps id → its newest slot; `removed` holds
+    * deleted ids.
+    */
+  final case class State(dim: Int, ids: Array[Long], vecs: Array[Float],
+                         norms: Array[Double], len: Int,
+                         latest: Map[Long, Int], removed: Set[Long]) {
+
+    /** Slot r is LIVE iff it is its id's newest and the id is not deleted. */
+    def live(r: Int): Boolean = latest(ids(r)) == r && !removed(ids(r))
+
+    /** Live rows (superseded and deleted slots excluded). */
+    def size: Long = latest.count { case (id, _) => !removed(id) }.toLong
+
+    /** Ids the base must not serve: shadowed by a slot, or deleted. */
+    def hidden: Set[Long] = latest.keySet ++ removed
+
+    /** Offer every live slot's exact cosine to `top`. */
+    def offerLive(top: TopK, query: Seq[Float]): Unit = {
+      val q = Cosine.query(query)
+      val qNorm = Cosine.queryNorm(q, dim)
+      var r = 0
+      while (r < len) {
+        if (live(r))
+          top.offer(Cosine.score(vecs, r * dim, norms(r), q, qNorm, dim), ids(r))
+        r += 1
+      }
+    }
+
+    /** The live rows, id-ascending. */
+    def rows: Seq[(Long, Seq[Float])] =
+      (0 until len).filter(live)
+        .map(r => (ids(r), (0 until dim).map(j => vecs(r * dim + j))))
+        .sortBy(_._1)
   }
 }

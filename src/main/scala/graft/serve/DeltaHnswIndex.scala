@@ -15,7 +15,7 @@ package graft.serve
   * NEW deterministically rebuilt graph.
   *
   * Result contract (HnswSpec pins it): `topK` returns EXACTLY the
-  * k-bounded (score DESC, id ASC) merge of
+  * k-bounded (score DESC, id ASC) merge, in one [[TopK]], of
   *
   *  - the base graph walk with every tombstoned/shadowed id EXCLUDED
   *    from the result beam via [[MemoryHnswIndex.topKWhere]] — hidden
@@ -23,7 +23,8 @@ package graft.serve
   *    hnswlib filtering rule) but never surface, and the beam counts
   *    `ef` SURVIVORS, so hidden rows don't eat recall; and
   *  - an exhaustive scan of the live delta slots with the engine's
-  *    pinned cosine fold (exact — the delta is the fresh, small tier).
+  *    pinned cosine fold, row norms kept per slot ([[Cosine]]) (exact —
+  *    the delta is the fresh, small tier).
   *
   * The GRAPH walk is approximate (HNSW's candidate set always is; the
   * scores and the merge order are exact — the tier's documented
@@ -42,33 +43,23 @@ package graft.serve
   * invisible but artifact-identical, so the in-band fold and the
   * periodic Spark rebuild literally converge on the same bytes.
   *
-  * Write cost: O(1) amortized per add (append-only capacity-doubling
-  * buffers, same machinery as [[DeltaAnnIndex]]); the fold is the full
+  * Write cost: O(1) amortized per add (the append-only [[DenseDelta]]
+  * segment [[DeltaAnnIndex]] uses too); the fold is the full
   * O(n·efC·M) graph build — which is why this tier pairs with
   * [[BoundedDelta]]'s maintenance-thread option at high churn, and why
   * `maxDeltaDocs` for the graph tier trades fold frequency against the
   * delta-scan bound exactly as the class doc of [[BoundedDelta]] says.
   *
   * Thread-safety: writers serialize on this object; readers are
-  * wait-free on an immutable volatile-published [[State]] snapshot
-  * (slot bytes written BEFORE the `len` publish), the same visibility
-  * rule as [[DeltaAnnIndex]].
+  * wait-free on an immutable volatile-published [[DenseDelta.State]]
+  * snapshot (slot bytes written BEFORE the `len` publish), the same
+  * segment and visibility rule as [[DeltaAnnIndex]].
   */
 final class DeltaHnswIndex(val base: MemoryHnswIndex,
                            m: Int = 16, efConstruction: Int = 100)
   extends DeltaTier[DeltaHnswIndex] {
 
-  /** Immutable per-write snapshot — see [[DeltaAnnIndex.State]]: a slot
-    * r is LIVE iff latest(ids(r)) == r && !removed(ids(r)).
-    */
-  private final case class State(ids: Array[Long], vecs: Array[Float],
-                                 len: Int,
-                                 latest: Map[Long, Int],
-                                 removed: Set[Long])
-
-  @volatile private var state: State =
-    State(new Array[Long](8), new Array[Float](8 * base.dim), 0,
-      Map.empty, Set.empty)
+  private val slots = new DenseDelta(base.dim)
 
   @volatile private var republished: Boolean = false
 
@@ -80,15 +71,9 @@ final class DeltaHnswIndex(val base: MemoryHnswIndex,
   def dim: Int = base.dim
 
   /** Live delta rows (superseded and deleted slots excluded). */
-  def deltaSize: Long = {
-    val s = state
-    s.latest.count { case (id, _) => !s.removed(id) }.toLong
-  }
+  def deltaSize: Long = slots.snapshot.size
 
-  def tombstoneCount: Int = {
-    val s = state
-    (s.latest.keySet ++ s.removed).size
-  }
+  def tombstoneCount: Int = tombstonedIds.size
 
   /** Upsert `id` with `vec`: searchable by the next `topK` call;
     * shadows any base row with the same id (latest-wins, the SCD-1
@@ -97,23 +82,7 @@ final class DeltaHnswIndex(val base: MemoryHnswIndex,
   def add(id: Long, vec: Seq[Float]): Unit = this.synchronized {
     checkLive()
     require(vec.length == dim, s"vec dim ${vec.length} != index dim $dim")
-    val s = state
-    val (ids, vecs) =
-      if (s.len < s.ids.length) (s.ids, s.vecs)
-      else {
-        val cap = s.ids.length * 2
-        val ni = new Array[Long](cap)
-        val nv = new Array[Float](cap * dim)
-        System.arraycopy(s.ids, 0, ni, 0, s.len)
-        System.arraycopy(s.vecs, 0, nv, 0, s.len * dim)
-        (ni, nv)
-      }
-    ids(s.len) = id
-    var j = 0
-    while (j < dim) { vecs(s.len * dim + j) = vec(j); j += 1 }
-    // slot bytes written BEFORE the volatile state store publishes len
-    state = State(ids, vecs, s.len + 1,
-      s.latest + (id -> s.len), s.removed - id)
+    slots.add(id, vec)
   }
 
   /** Delete `id` from both tiers: gone by the next `topK` call. Unknown
@@ -121,8 +90,7 @@ final class DeltaHnswIndex(val base: MemoryHnswIndex,
     */
   def delete(id: Long): Unit = this.synchronized {
     checkLive()
-    val s = state
-    state = s.copy(removed = s.removed + id)
+    slots.delete(id)
   }
 
   /** Merged approximate top-k over (base ∖ hidden) ∪ live delta — see
@@ -130,28 +98,13 @@ final class DeltaHnswIndex(val base: MemoryHnswIndex,
     * the base walk (0 → the tier default 4·k), counting SURVIVORS.
     */
   def topK(query: Seq[Float], k: Int, ef: Int = 0): Seq[(Long, Double)] = {
-    val s = state
-    val hidden = s.latest.keySet ++ s.removed
-    val fromBase =
-      base.topKWhere(query, k, id => !hidden(id), ef)
-    val q = query.toArray
-    val fromDelta = (0 until s.len).iterator
-      .filter { r =>
-        val id = s.ids(r)
-        s.latest(id) == r && !s.removed(id)
-      }
-      .map { r =>
-        var dot = 0.0; var na = 0.0; var nb = 0.0
-        var j = 0
-        val bse = r * dim
-        while (j < dim) {
-          val x = s.vecs(bse + j).toDouble; val y = q(j).toDouble
-          dot += x * y; na += x * x; nb += y * y; j += 1
-        }
-        (s.ids(r), dot / (math.sqrt(na) * math.sqrt(nb)))
-      }.toSeq
-    (fromBase ++ fromDelta)
-      .sortBy { case (id, sc) => (-sc, id) }.take(k)
+    val s = slots.snapshot
+    val hidden = s.hidden
+    val fromBase = base.topKWhere(query, k, id => !hidden(id), ef)
+    val top = TopK.largest(k, TopK.satAdd(fromBase.size, s.len))
+    fromBase.foreach { case (id, sc) => top.offer(sc, id) }
+    s.offerLive(top, query)
+    top.toSeq
   }
 
   /** Fold the delta into a NEW deterministically rebuilt graph
@@ -175,20 +128,8 @@ final class DeltaHnswIndex(val base: MemoryHnswIndex,
   /** The live delta rows, id-ascending — what the next Spark rebuild
     * unions into the base corpus.
     */
-  def deltaRows: Seq[(Long, Seq[Float])] = {
-    val s = state
-    (0 until s.len)
-      .filter { r =>
-        val id = s.ids(r)
-        s.latest(id) == r && !s.removed(id)
-      }
-      .map(r => (s.ids(r), (0 until dim).map(j => s.vecs(r * dim + j))))
-      .sortBy(_._1)
-  }
+  def deltaRows: Seq[(Long, Seq[Float])] = slots.snapshot.rows
 
   /** Ids the rebuild anti-joins away from the BASE: shadowed or removed. */
-  def tombstonedIds: Set[Long] = {
-    val s = state
-    s.latest.keySet ++ s.removed
-  }
+  def tombstonedIds: Set[Long] = slots.snapshot.hidden
 }

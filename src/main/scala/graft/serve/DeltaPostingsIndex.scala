@@ -1,7 +1,5 @@
 package graft.serve
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -234,9 +232,7 @@ final class DeltaPostingsIndex private (
       bp.foreach { case (id, tf, dl) => fold(id, tf, dl) }
       dp.foreach { case (id, tf, dl) => fold(id, tf, dl) }
     }
-    acc.entrySet().asScala.toSeq
-      .map(e => (e.getKey.toLong, e.getValue.toDouble))
-      .sortBy { case (id, s) => (-s, id) }.take(k)
+    TopK.best(acc, k)
   }
 
   /** Per-term max of the AVGDL-FREE tf part, over the base postings:
@@ -297,20 +293,10 @@ final class DeltaPostingsIndex private (
         (tfD + k1 * ((1.0 - b) + b * (dl.toDouble / avgdl))))
     }
 
-    // worst-first heap under (score DESC, id ASC): head = current loser
-    val heap = new java.util.PriorityQueue[(Long, Double)](k,
-      (a: (Long, Double), b0: (Long, Double)) => {
-        val c = java.lang.Double.compare(a._2, b0._2)
-        if (c != 0) c else java.lang.Long.compare(b0._1, a._1)
-      })
-    def offer(id: Long, s: Double): Unit =
-      if (heap.size < k) heap.add((id, s)): Unit
-      else {
-        val worst = heap.peek()
-        if (s > worst._2 || (s == worst._2 && id < worst._1)) {
-          heap.poll(); heap.add((id, s)): Unit
-        }
-      }
+    val top = TopK.largest(k, present.map { t =>
+      base.get(t).map(_.length).getOrElse(0) +
+        d.postings.get(t).map(_.length).getOrElse(0)
+    }.sum)
 
     // 1) delta segment: exhaustive, term-ascending per-doc fold
     val dacc = new java.util.HashMap[Long, Double]()
@@ -320,7 +306,7 @@ final class DeltaPostingsIndex private (
         dacc.put(id, dacc.getOrDefault(id, 0.0) + contrib(w, tf, dl)): Unit
       }
     }
-    dacc.entrySet().asScala.foreach(e => offer(e.getKey, e.getValue))
+    dacc.forEach((id, s) => top.offer(s, id))
 
     // 2) WAND over the base cursors
     final class Cur(val arr: Array[(Long, Long, Long)], val w: Double,
@@ -348,8 +334,7 @@ final class DeltaPostingsIndex private (
     var active = true
     while (active && curs.nonEmpty) {
       val sorted = curs.sortBy(_.id)
-      val theta =
-        if (heap.size < k) Double.NegativeInfinity else heap.peek()._2
+      val theta = if (top.isFull) top.rootScore else Double.NegativeInfinity
       var acc2 = 0.0
       var pivot = -1
       var i = 0
@@ -377,7 +362,7 @@ final class DeltaPostingsIndex private (
             }
           }
           evaluated += 1
-          offer(pivotDoc, s)
+          top.offer(s, pivotDoc)
         } else {
           var j = 0
           while (j < pivot) {
@@ -389,9 +374,7 @@ final class DeltaPostingsIndex private (
         curs = curs.filterNot(_.done)
       }
     }
-    val out = Iterator.continually(heap.poll()).takeWhile(_ != null)
-      .toSeq.sortBy { case (id, s) => (-s, id) }
-    (out, evaluated, skipped)
+    (top.toSeq, evaluated, skipped)
   }
 }
 

@@ -137,33 +137,30 @@ final class FleetClient(ports: Seq[Int], host: String = "127.0.0.1",
     * the global (score DESC, id ASC) rule — exact over live shards).
     */
   def lex(terms: Seq[String], k: Int): Seq[(Long, Double)] =
-    fanOut(
+    TopK.merge(fanOut(
       { out =>
         out.writeByte(OpLex); out.writeInt(k); out.writeInt(terms.length)
         terms.foreach(out.writeUTF)
       },
-      readList).flatten
-      .sortBy { case (id, s) => (-s, id) }.take(k)
+      readList), k)
 
   /** Dense cosine top-k over the fleet. */
   def dense(qv: Seq[Float], k: Int): Seq[(Long, Double)] =
-    fanOut(
+    TopK.merge(fanOut(
       { out =>
         out.writeByte(OpDense); out.writeInt(k); out.writeInt(qv.length)
         qv.foreach(out.writeFloat)
       },
-      readList).flatten
-      .sortBy { case (id, s) => (-s, id) }.take(k)
+      readList), k)
 
   /** Learned-sparse integer top-k over the fleet. */
   def sparse(q: Map[String, Long], k: Int): Seq[(Long, Long)] =
-    fanOut(
+    TopK.mergeLong(fanOut(
       { out =>
         out.writeByte(OpSparse); out.writeInt(k); out.writeInt(q.size)
         q.foreach { case (t, w) => out.writeUTF(t); out.writeLong(w) }
       },
-      in => Seq.fill(in.readInt())((in.readLong(), in.readLong()))).flatten
-      .sortBy { case (id, s) => (-s, id) }.take(k)
+      in => Seq.fill(in.readInt())((in.readLong(), in.readLong()))), k)
 
   /** Hybrid request over the fleet: both legs fan out in ONE frame per
     * shard, merge to poolK per leg, RRF-fuse locally — the
@@ -178,9 +175,9 @@ final class FleetClient(ports: Seq[Int], host: String = "127.0.0.1",
         terms.foreach(out.writeUTF)
       },
       in => (readList(in), readList(in)))
-    val d = per.flatMap(_._1).sortBy { case (id, s) => (-s, id) }.take(poolK)
+    val d = TopK.merge(per.map(_._1), poolK)
       .zipWithIndex.map { case ((id, _), i) => (id, i + 1) }
-    val l = per.flatMap(_._2).sortBy { case (id, s) => (-s, id) }.take(poolK)
+    val l = TopK.merge(per.map(_._2), poolK)
       .zipWithIndex.map { case ((id, _), i) => (id, i + 1) }
     Bm25.rrfFuseLocal(Seq(d, l), c, k)
   }

@@ -3,8 +3,6 @@ package graft.serve
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import scala.jdk.CollectionConverters._
-
 /** Binary (1-bit sign) memory index — the smallest serving replica on
   * the compression ladder next to [[MemorySq8Index]] (4×) and
   * [[MemoryPqIndex]] (dim·32/m·8 ×): ⌈dim/64⌉ longs per vector = 32×
@@ -14,8 +12,8 @@ import scala.jdk.CollectionConverters._
   * ~30 GB → ~0.96 GB of codes). The code rule is
   * [[graft.operators.Quantize.packSigns]] (bit set iff x_i > 0),
   * identical to the codegen [[graft.functions.SignPack]] the DataFrame
-  * tier stages, so [[topK]] (Hamming prune + exact cosine rerank over
-  * retained floats) returns exactly what
+  * tier stages, so [[topK]] (Hamming prune + exact [[Cosine]] rerank
+  * over retained floats) returns exactly what
   * [[graft.operators.Quantize.topKBinary]] returns, bit-for-bit
   * (ServeSpec + the q192 oracle pin it). Construct approx-only
   * ([[MemoryBinaryIndex.fromDataFrameApproxOnly]]) for the
@@ -32,6 +30,8 @@ final class MemoryBinaryIndex private (
     vecs: Option[Array[Float]]) { // dim-strided, only if rerank retained
 
   def size: Int = ids.length
+
+  private val norms = vecs.map(Cosine.norms(_, ids.length, dim))
 
   private def hammingAll(qbits: Array[Long]): Array[Int] = {
     require(qbits.length == wordsPerVec,
@@ -52,26 +52,12 @@ final class MemoryBinaryIndex private (
     out
   }
 
-  // bounded k-selection by (hamming ASC, id ASC): heap head = current
-  // losers' worst = (hamming DESC, id DESC)
-  private def rank(ham: Array[Int], k: Int): Seq[Int] = {
-    val heap = new java.util.PriorityQueue[Integer](
-      math.max(k, 1),
-      (a: Integer, b: Integer) => {
-        val c = java.lang.Integer.compare(ham(b), ham(a))
-        if (c != 0) c else java.lang.Long.compare(ids(b), ids(a))
-      })
+  // bounded k-selection by (hamming ASC, id ASC), rows as payload
+  private def rank(ham: Array[Int], k: Int): Array[Int] = {
+    val top = TopK.smallest(k, ham.length)
     var r = 0
-    while (r < ham.length) {
-      if (heap.size < k) heap.add(r)
-      else {
-        val w = heap.peek()
-        val c = java.lang.Integer.compare(ham(r), ham(w))
-        if (c < 0 || (c == 0 && ids(r) < ids(w))) { heap.poll(); heap.add(r): Unit }
-      }
-      r += 1
-    }
-    heap.asScala.toSeq.map(_.intValue).sortBy(r => (ham(r), ids(r)))
+    while (r < ham.length) { top.offerLong(ham(r), ids(r), r); r += 1 }
+    top.rowsBestFirst()
   }
 
   /** Hamming top-k straight off the codes (no floats needed — the
@@ -81,7 +67,7 @@ final class MemoryBinaryIndex private (
     require(query.length == dim, s"query dim ${query.length} != index dim $dim")
     if (k <= 0) return Nil
     val ham = hammingAll(graft.operators.Quantize.packSigns(query).toArray)
-    rank(ham, k).map(r => (ids(r), ham(r)))
+    rank(ham, k).toSeq.map(r => (ids(r), ham(r)))
   }
 
   /** Hamming prune + exact cosine rerank over the retained vectors —
@@ -93,18 +79,14 @@ final class MemoryBinaryIndex private (
     require(query.length == dim, s"query dim ${query.length} != index dim $dim")
     if (k <= 0) return Nil
     val ham = hammingAll(graft.operators.Quantize.packSigns(query).toArray)
-    val cand = rank(ham, math.max(k, rerankFactor * k))
-    cand.map { r =>
-      // exact codegen-fold cosine over the float vector
-      var dot = 0.0; var na = 0.0; var nb = 0.0
-      var j = 0
-      val base = r * dim
-      while (j < dim) {
-        val x = vs(base + j).toDouble; val y = query(j).toDouble
-        dot += x * y; na += x * x; nb += y * y; j += 1
-      }
-      (ids(r), dot / (math.sqrt(na) * math.sqrt(nb)))
-    }.sortBy { case (id, s) => (-s, id) }.take(k)
+    val pool = rank(ham, math.max(k, TopK.satMul(rerankFactor, k)))
+    // exact codegen-fold cosine over the float vector
+    val q = Cosine.query(query)
+    val qNorm = Cosine.queryNorm(q, dim)
+    val top = TopK.largest(k, pool.length)
+    pool.foreach(r =>
+      top.offer(Cosine.score(vs, r * dim, norms.get(r), q, qNorm, dim), ids(r)))
+    top.toSeq
   }
 }
 

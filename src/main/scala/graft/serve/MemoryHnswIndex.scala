@@ -42,28 +42,11 @@ final class MemoryHnswIndex private (
 
   def size: Int = ids.length
 
-  // Per-row norms, precomputed once: every cosine is dot/(||row||·||q||),
-  // and the row-norm accumulator in the fused loop was independent of the
-  // query — so hoisting it out of the per-candidate loop drops the hot
-  // sim() from 6 flops/element to 2 with BIT-IDENTICAL results (same
-  // j-ascending accumulation, same sqrt, same multiply — HnswSpec pins
-  // the adjacency and stays green). A graph walk evaluates sim against
-  // ef·M candidates per insert/query, so this is the dominant-loop cut
-  // (guide §1.2 step 2 — per-task work, measured r17 on q298's fold
-  // chain: 18 full graph builds per bench run).
-  private val norms: Array[Double] = {
-    val out = new Array[Double](ids.length)
-    var r = 0
-    while (r < ids.length) {
-      var na = 0.0
-      var j = 0
-      val base = r * dim
-      while (j < dim) { val x = vecs(base + j).toDouble; na += x * x; j += 1 }
-      out(r) = math.sqrt(na)
-      r += 1
-    }
-    out
-  }
+  // per-row norms hoisted to load ([[Cosine]]): a graph walk evaluates
+  // sim against ef·M candidates per insert/query, so the hot sim() costs
+  // one dot product with BIT-IDENTICAL results (HnswSpec pins the
+  // adjacency)
+  private val norms: Array[Double] = Cosine.norms(vecs, ids.length, dim)
 
   // persistence surface (MemoryHnswIndex.save reads the graph out)
   private[serve] def idAt(row: Int): Long = ids(row)
@@ -86,21 +69,8 @@ final class MemoryHnswIndex private (
     links(r).length - 1
   }
 
-  /** Query norm by the same j-ascending fold the fused loop used. */
-  private def normOf(q: Array[Double]): Double = {
-    var nb = 0.0
-    var j = 0
-    while (j < dim) { val y = q(j); nb += y * y; j += 1 }
-    math.sqrt(nb)
-  }
-
-  private def sim(q: Array[Double], qNorm: Double, r: Int): Double = {
-    var dot = 0.0
-    var j = 0
-    val base = r * dim
-    while (j < dim) { dot += vecs(base + j).toDouble * q(j); j += 1 }
-    dot / (norms(r) * qNorm)
-  }
+  private def sim(q: Array[Double], qNorm: Double, r: Int): Double =
+    Cosine.score(vecs, r * dim, norms(r), q, qNorm, dim)
 
   /** Beam search one layer (Algorithm 2), optionally filter-aware: the
     * walk TRAVERSES every neighborhood (a failing node still routes —
@@ -143,9 +113,9 @@ final class MemoryHnswIndex private (
   private def topKImpl(query: Seq[Float], k: Int, ef: Int,
                        accept: Int => Boolean): Seq[(Long, Double)] = {
     require(query.length == dim, s"query dim ${query.length} != index dim $dim")
-    val q = query.map(_.toDouble).toArray
-    val qNorm = normOf(q)
-    val beam = if (ef > 0) math.max(ef, k) else math.max(4 * k, k)
+    val q = Cosine.query(query)
+    val qNorm = Cosine.queryNorm(q, dim)
+    val beam = if (ef > 0) math.max(ef, k) else math.max(TopK.satMul(4, k), k)
     var ep = (entryPoint, sim(q, qNorm, entryPoint))
     var level = topLevel
     while (level > 0) {
@@ -174,9 +144,9 @@ final class MemoryHnswIndex private (
 
 /** Fan-out serving over per-shard HNSW graphs (the [[MemoryHnswIndex
   * .buildSharded]] artifact): each shard walks its own graph with the
-  * same `ef`, the k-bounded lists merge by the engine's (score DESC,
-  * id ASC) rule. A deployment puts shards on separate replicas; this
-  * in-process form IS that merge, minus the network.
+  * same `ef`, the k-bounded lists merge by [[TopK.merge]]. A deployment
+  * puts shards on separate replicas; this in-process form IS that merge,
+  * minus the network.
   */
 final class ShardedHnswIndex private[serve] (val shards: Seq[MemoryHnswIndex]) {
 
@@ -185,8 +155,7 @@ final class ShardedHnswIndex private[serve] (val shards: Seq[MemoryHnswIndex]) {
   def size: Int = shards.map(_.size).sum
 
   def topK(query: Seq[Float], k: Int, ef: Int = 0): Seq[(Long, Double)] =
-    shards.flatMap(_.topK(query, k, ef))
-      .sortBy { case (id, s) => (-s, id) }.take(k)
+    TopK.merge(shards.map(_.topK(query, k, ef)), k)
 }
 
 object MemoryHnswIndex {
@@ -200,66 +169,11 @@ object MemoryHnswIndex {
     * loop. Optionally filter-aware: the walk TRAVERSES every
     * neighborhood (a failing node still routes), but only rows passing
     * `accept` enter the RESULT beam, which counts accepted survivors.
+    * Both frontiers are primitive [[TopK]] heaps (a graph build visits
+    * millions of nodes, so a boxed tuple per visit would dominate it):
+    * the candidates a best-first queue, the results an `ef`-bounded
+    * selector, under the one (sim DESC, id ASC) total order.
     */
-  /** Primitive binary heap of (sim: Double, row: Int) pairs in parallel
-    * arrays — the beam search's inner structures used to be
-    * `java.util.PriorityQueue[(Int, Double)]`, which boxes a tuple per
-    * visited node and calls a comparator closure per sift step; a graph
-    * build visits millions of nodes (measured r17: ~0.7 s per 2000-node
-    * build, ~8 s of q298's fold chain, nearly all allocation/indirection).
-    * `less(a, b)` must implement EXACTLY the comparator it replaces —
-    * total-order Double.compare plus the id tie-break — so results are
-    * bit-identical (HnswSpec pins the adjacency; q298 pins fold == batch
-    * rebuild).
-    */
-  private final class SimHeap(initCap: Int,
-                              // true => a sorts before b (heap root = first)
-                              less: (Double, Int, Double, Int) => Boolean) {
-    private var sims = new Array[Double](math.max(initCap, 8))
-    private var rows = new Array[Int](math.max(initCap, 8))
-    private var n = 0
-    def size: Int = n
-    def isEmpty: Boolean = n == 0
-    def peekSim: Double = sims(0)
-    def peekRow: Int = rows(0)
-    def clear(): Unit = n = 0
-    def add(s: Double, r: Int): Unit = {
-      if (n == sims.length) {
-        sims = java.util.Arrays.copyOf(sims, n * 2)
-        rows = java.util.Arrays.copyOf(rows, n * 2)
-      }
-      var i = n
-      n += 1
-      while (i > 0 && {
-        val p = (i - 1) >> 1
-        less(s, r, sims(p), rows(p))
-      }) {
-        val p = (i - 1) >> 1
-        sims(i) = sims(p); rows(i) = rows(p); i = p
-      }
-      sims(i) = s; rows(i) = r
-    }
-    def poll(): Unit = {
-      n -= 1
-      val s = sims(n); val r = rows(n)
-      var i = 0
-      var done = n == 0
-      while (!done) {
-        val l = 2 * i + 1
-        if (l >= n) done = true
-        else {
-          val c = if (l + 1 < n && less(sims(l + 1), rows(l + 1), sims(l), rows(l))) l + 1 else l
-          if (less(sims(c), rows(c), s, r)) {
-            sims(i) = sims(c); rows(i) = rows(c); i = c
-          } else done = true
-        }
-      }
-      if (n > 0) { sims(i) = s; rows(i) = r }
-    }
-    def toPairs: Array[(Int, Double)] =
-      Array.tabulate(n)(i => (rows(i), sims(i)))
-  }
-
   private[serve] def beamSearch(
       eps: Seq[(Int, Double)], ef: Int,
       visited: java.util.BitSet,
@@ -267,28 +181,19 @@ object MemoryHnswIndex {
       neighborsOf: Int => scala.collection.IndexedSeq[Int],
       simOf: Int => Double,
       accept: Int => Boolean): ArrayBuffer[(Int, Double)] = {
-    // candidates: best-first (sim DESC, id ASC); results: worst-first
-    // (sim ASC, id DESC), capped at ef — the exact comparators the boxed
-    // PriorityQueues used, total-order Double.compare throughout
-    val cand = new SimHeap(math.max(ef, 1), (sa, ra, sb, rb) => {
-      val c = java.lang.Double.compare(sb, sa)
-      c < 0 || (c == 0 && idOf(ra) < idOf(rb))
-    })
-    val res = new SimHeap(math.max(ef, 1), (sa, ra, sb, rb) => {
-      val c = java.lang.Double.compare(sa, sb)
-      c < 0 || (c == 0 && idOf(rb) < idOf(ra))
-    })
-    eps.foreach { e =>
-      if (!visited.get(e._1)) {
-        visited.set(e._1)
-        cand.add(e._2, e._1)
-        if (accept(e._1)) res.add(e._2, e._1)
+    val cand = TopK.queue(math.min(ef, visited.size))
+    val res = TopK.largest(ef, visited.size)
+    eps.foreach { case (r, s) =>
+      if (!visited.get(r)) {
+        visited.set(r)
+        cand.offer(s, idOf(r), r)
+        if (accept(r)) res.offer(s, idOf(r), r)
       }
     }
     while (!cand.isEmpty) {
-      val cSim = cand.peekSim; val cRow = cand.peekRow
+      val cSim = cand.rootScore; val cRow = cand.rootRow
       cand.poll()
-      if (res.size >= ef && java.lang.Double.compare(cSim, res.peekSim) < 0) {
+      if (res.isFull && java.lang.Double.compare(cSim, res.rootScore) < 0) {
         cand.clear() // best candidate can no longer improve the beam
       } else {
         val ns = neighborsOf(cRow)
@@ -298,27 +203,20 @@ object MemoryHnswIndex {
           if (!visited.get(n)) {
             visited.set(n)
             val s = simOf(n)
-            // total-order compare (-0.0 < 0.0, NaN greatest) — the same
-            // order the res heap uses; IEEE <,== would treat -0.0 == 0.0
-            val cmp = if (res.size < ef) 1
-                      else java.lang.Double.compare(s, res.peekSim)
-            if (cmp > 0 || (cmp == 0 && idOf(n) < idOf(res.peekRow))) {
-              cand.add(s, n)
-              if (accept(n)) {
-                res.add(s, n)
-                if (res.size > ef) res.poll()
-              }
+            val id = idOf(n)
+            if (res.admits(s, id)) {
+              cand.offer(s, id, n)
+              if (accept(n)) res.offer(s, id, n)
             }
           }
           i += 1
         }
       }
     }
-    val out = ArrayBuffer.empty[(Int, Double)]
-    res.toPairs.foreach(out += _)
-    out.sortInPlace()(Ordering.by[(Int, Double), (Double, Long)] {
-      case (r, s) => (-s, idOf(r))
-    })
+    val m = res.sortBestFirst()
+    val out = new ArrayBuffer[(Int, Double)](m)
+    var p = 0
+    while (p < m) { out += ((res.rowAt(p), res.scoreAt(p))); p += 1 }
     out
   }
 
@@ -542,21 +440,9 @@ object MemoryHnswIndex {
 
     // per-row norms hoisted out of the O(n·efC·M) distance loop — the
     // same bit-identical factoring as the serving-side `norms` field
-    // (independent accumulators, same j order, same sqrt/multiply)
-    val norms: Array[Double] = Array.tabulate(n) { r2 =>
-      var na = 0.0
-      var j = 0
-      val base = r2 * dim
-      while (j < dim) { val x = vecs(base + j).toDouble; na += x * x; j += 1 }
-      math.sqrt(na)
-    }
-    def sim(q: Array[Double], qNorm: Double, row: Int): Double = {
-      var dot = 0.0
-      var j = 0
-      val base = row * dim
-      while (j < dim) { dot += vecs(base + j).toDouble * q(j); j += 1 }
-      dot / (norms(row) * qNorm)
-    }
+    val norms = Cosine.norms(vecs, n, dim)
+    def sim(q: Array[Double], qNorm: Double, row: Int): Double =
+      Cosine.score(vecs, row * dim, norms(row), q, qNorm, dim)
     def simRows(a: Int, b: Int): Double = {
       var dot = 0.0
       var j = 0

@@ -36,21 +36,22 @@ final case class MetaFilter(col: String, min: Long, max: Long)
   * [[AnnIndexMeta]] sidecar written by the index build) into flat primitive
   * arrays and answers top-k with zero job launches.
   *
-  * Result contract: BIT-IDENTICAL to the DataFrame path. Scoring uses the
-  * same sequential double fold as the codegen [[graft.functions.CosineSimilarity]]
-  * (via [[Ann.cosine]]), cell probing uses [[Ann.topKIvf]]'s exact rule
-  * (cosine to centroids, ties to the lower cell id), and ranking ties
-  * break by ascending id — so `topK`/`topKIvf` return exactly the rows
-  * `Ann.topK`/`Ann.topKIvf` would, in the same order, with the same score
-  * bits (ServeSpec pins this).
+  * Result contract: BIT-IDENTICAL to the DataFrame path. Scoring is the
+  * codegen [[graft.functions.CosineSimilarity]] fold with the row norms
+  * hoisted to load ([[Cosine]]), cell probing uses [[Ann.topKIvf]]'s
+  * exact rule (cosine to centroids, ties to the lower cell id), and
+  * selection is [[TopK]]'s (score DESC, id ASC) total order — so
+  * `topK`/`topKIvf` return exactly the rows `Ann.topK`/`Ann.topKIvf`
+  * would, in the same order, with the same score bits (ServeSpec pins
+  * this, NaN scores included).
   *
   * Scale posture: memory is nDocs × dim × 4 bytes (+16/doc) — the
   * reference's 10 K-doc envelope is ~3 MB at dim 768; 10 M docs at dim
   * 768 is ~30 GB, which is where a deployment shards CELLS across serving
   * replicas (each node loads a cell subset; the probe fans out to the
-  * owners and merges k-bounded lists — the same merge [[Ann.TopKBuf]]
-  * does inside Spark). The batch/build tier stays Spark; this tier is
-  * rebuilt/swapped per index publish (cheap: one sequential parquet read).
+  * owners and merges k-bounded lists with [[TopK.merge]]). The
+  * batch/build tier stays Spark; this tier is rebuilt/swapped per index
+  * publish (cheap: one sequential parquet read).
   *
   * Thread-safety: immutable after construction — serve from any number of
   * request threads.
@@ -63,6 +64,8 @@ final class MemoryAnnIndex private (
     val centroids: IndexedSeq[IndexedSeq[Float]],
     meta: Map[String, Array[Long]], // parallel numeric metadata columns
     dicts: Map[String, Map[String, Long]]) { // string cols: value -> code
+
+  private val norms = Cosine.norms(vecs, ids.length, dim)
 
   /** Resolve a string-equality filter against a dictionary-encoded
     * column (the notebook's `sport_type`/`difficulty` `@eq` shape). An
@@ -232,13 +235,9 @@ final class MemoryAnnIndex private (
     if (hi - lo > scanFraction * size) return topK(query, k, filters)
     val rest = filters.filterNot(_ eq bestF)
       .map(f => (meta(f.col), f.min, f.max))
-    val q = query.toArray
-    val heap = new java.util.PriorityQueue[(Double, Long)](
-      math.max(k, 1),
-      (a: (Double, Long), b: (Double, Long)) => {
-        val c = java.lang.Double.compare(a._1, b._1)
-        if (c != 0) c else java.lang.Long.compare(b._2, a._2)
-      })
+    val q = Cosine.query(query)
+    val qNorm = Cosine.queryNorm(q, dim)
+    val top = TopK.largest(k, hi - lo)
     var p = lo
     while (p < hi) {
       val r = sorted(p)
@@ -250,29 +249,10 @@ final class MemoryAnnIndex private (
         pass = v >= mn && v <= mx
         fi += 1
       }
-      if (pass) {
-        var dot = 0.0; var na = 0.0; var nb = 0.0
-        var i = 0
-        val base = r * dim
-        while (i < dim) {
-          val x = vecs(base + i).toDouble; val y = q(i).toDouble
-          dot += x * y; na += x * x; nb += y * y; i += 1
-        }
-        val score = dot / (math.sqrt(na) * math.sqrt(nb))
-        val cand = (score, ids(r))
-        if (heap.size < k) heap.add(cand)
-        else {
-          val worst = heap.peek()
-          val c = java.lang.Double.compare(score, worst._1)
-          if (c > 0 || (c == 0 && cand._2 < worst._2)) {
-            heap.poll(); heap.add(cand): Unit
-          }
-        }
-      }
+      if (pass) top.offer(Cosine.score(vecs, r * dim, norms(r), q, qNorm, dim), ids(r))
       p += 1
     }
-    heap.asScala.toSeq.sortBy { case (s, id) => (-s, id) }
-      .map { case (s, id) => (id, s) }
+    top.toSeq
   }
 
   /** Exact match count for a conjunction (the planner's selectivity
@@ -317,12 +297,11 @@ final class MemoryAnnIndex private (
     // Double.compare, not IEEE </==: ranking everywhere else uses the
     // total order, and at a page boundary of -0.0 vs +0.0 the IEEE admit
     // rule would disagree with the sort — skipping or duplicating a row
-    val all = topKInCellsWhere(query, k, 0 until nCells, filters,
+    topKInCellsWhere(query, k, 0 until nCells, filters,
       (s, id) => {
         val c = java.lang.Double.compare(s, afterScore)
         c < 0 || (c == 0 && id > afterId)
       })
-    all
   }
 
   private def topKInCells(query: Seq[Float], k: Int,
@@ -343,15 +322,9 @@ final class MemoryAnnIndex private (
         f.min, f.max)
     }
     require(query.length == dim, s"query dim ${query.length} != index dim $dim")
-    val q = query.toArray
-    // bounded selection: a k-element min-heap ordered worst-first
-    // ((score ASC, id DESC) so the head is the current loser)
-    val heap = new java.util.PriorityQueue[(Double, Long)](
-      math.max(k, 1),
-      (a: (Double, Long), b: (Double, Long)) => {
-        val c = java.lang.Double.compare(a._1, b._1)
-        if (c != 0) c else java.lang.Long.compare(b._2, a._2)
-      })
+    val q = Cosine.query(query)
+    val qNorm = Cosine.queryNorm(q, dim)
+    val top = TopK.largest(k, size)
     cells.foreach { cell =>
       var r = cellOffsets(cell)
       val end = cellOffsets(cell + 1)
@@ -365,33 +338,13 @@ final class MemoryAnnIndex private (
           fi += 1
         }
         if (pass) {
-          // same fold as the codegen CosineSimilarity: in-order double
-          // accumulation of dot/na/nb, one expression shape
-          var dot = 0.0; var na = 0.0; var nb = 0.0
-          var i = 0
-          val base = r * dim
-          while (i < dim) {
-            val x = vecs(base + i).toDouble; val y = q(i).toDouble
-            dot += x * y; na += x * x; nb += y * y; i += 1
-          }
-          val score = dot / (math.sqrt(na) * math.sqrt(nb))
-          val cand = (score, ids(r))
-          if (admit(score, cand._2)) {
-            if (heap.size < k) heap.add(cand)
-            else {
-              val worst = heap.peek()
-              val c = java.lang.Double.compare(score, worst._1)
-              if (c > 0 || (c == 0 && cand._2 < worst._2)) {
-                heap.poll(); heap.add(cand): Unit
-              }
-            }
-          }
+          val score = Cosine.score(vecs, r * dim, norms(r), q, qNorm, dim)
+          if (admit(score, ids(r))) top.offer(score, ids(r))
         }
         r += 1
       }
     }
-    heap.asScala.toSeq.sortBy { case (s, id) => (-s, id) }
-      .map { case (s, id) => (id, s) }
+    top.toSeq
   }
 }
 
@@ -410,9 +363,9 @@ object MemoryAnnIndex {
       "metaVals must parallel rows")
     val dim = rows.head._2.length
     require(rows.forall(_._2.length == dim), "MemoryAnnIndex: ragged dims")
-    // an all-zero vector scores NaN cosine, and NaN ordering diverges
-    // between the heaps' total order and Spark's sort — a degenerate
-    // embedding is rejected at load, not served wrong (the MaxSim rule)
+    // an all-zero vector has no direction (its cosine is 0/0 against
+    // every query) — a degenerate embedding is rejected at load, like
+    // MaxSim's zero parts and the delta tier's zero adds
     rows.find(_._2.forall(_ == 0.0f)).foreach { case (id, _, _) =>
       throw new IllegalArgumentException(
         s"MemoryAnnIndex: id $id has an all-zero embedding " +
@@ -458,6 +411,18 @@ object MemoryAnnIndex {
   def fromDataFrame(df0: DataFrame, idCol: String, embCol: String,
                     cellCol: String, centroids: Seq[Seq[Float]],
                     metaCols: Seq[String] = Nil): MemoryAnnIndex = {
+    val (collected, isString) = collectRows(df0, idCol, embCol, cellCol, metaCols)
+    fromCollected(collected, centroids, metaCols, isString)
+  }
+
+  /** One collect of (id, embedding, cell, metadata…) rows — the single
+    * evaluation of the input plan that [[fromDataFrame]] and
+    * [[ShardedAnnIndex.fromDataFrame]] both load from — plus which
+    * metadata columns are strings.
+    */
+  private[serve] def collectRows(df0: DataFrame, idCol: String, embCol: String,
+                                 cellCol: String, metaCols: Seq[String])
+      : (Array[org.apache.spark.sql.Row], Map[String, Boolean]) = {
     // the DataFrame tier's scans filter embCol.isNotNull — the loader
     // applies the same rule so both tiers serve the same logical corpus
     val df = df0.where(col(embCol).isNotNull)
@@ -469,12 +434,19 @@ object MemoryAnnIndex {
           metaCols.map(c =>
             if (isString(c)) col(c) else col(c).cast("long")): _*)
       .collect()
+    (collected, isString)
+  }
+
+  private[serve] def fromCollected(collected: Array[org.apache.spark.sql.Row],
+                                   centroids: Seq[Seq[Float]],
+                                   metaCols: Seq[String],
+                                   isString: Map[String, Boolean]): MemoryAnnIndex = {
     // deterministic dictionaries: distinct values, lexicographic codes.
     // A null metadata value has no code (and the DataFrame tier's WHERE
     // would never match it) — the load names the offending row instead
     // of NPE-ing in the sort
     val dicts: Map[String, Map[String, Long]] = metaCols.filter(isString)
-      .zipWithIndex.map { case (c, _) =>
+      .map { c =>
         val pos = 3 + metaCols.indexOf(c)
         collected.find(_.isNullAt(pos)).foreach { r =>
           throw new IllegalArgumentException(
@@ -516,11 +488,12 @@ object MemoryAnnIndex {
   * rows hash-shard by id into disjoint [[MemoryAnnIndex]] slices (in a
   * deployment, one slice per serving replica; here one object holds
   * them to make the contract testable), a query fans out to every
-  * shard, and the k-bounded per-shard results merge under the global
-  * (score DESC, id ASC) order. Merged results are BIT-IDENTICAL to the
-  * unsharded index: shards cover the corpus disjointly, each row's
-  * score uses the same fold wherever it lives, and the global top-k is
-  * contained in the union of shard top-k's. IVF probing composes
+  * shard, and the k-bounded per-shard results merge by [[TopK.merge]]
+  * under the global (score DESC, id ASC) order. Merged results are
+  * BIT-IDENTICAL to the unsharded index: shards cover the corpus
+  * disjointly, each row's score uses the same fold wherever it lives,
+  * and the global top-k is contained in the union of shard top-k's. IVF
+  * probing composes
   * because every shard carries the SAME centroid set — each shard
   * probes the same query-nearest cells over its own row subset, so the
   * union of scanned rows equals the unsharded probe's scan set.
@@ -538,8 +511,7 @@ final class ShardedAnnIndex private[serve] (val shards: Seq[MemoryAnnIndex]) {
 
   private def merge(k: Int,
                     per: MemoryAnnIndex => Seq[(Long, Double)]): Seq[(Long, Double)] =
-    shards.flatMap(per)
-      .sortBy { case (id, s) => (-s, id) }.take(k)
+    TopK.merge(shards.map(per), k)
 
   def topK(query: Seq[Float], k: Int,
            filters: Seq[MetaFilter] = Nil): Seq[(Long, Double)] =
@@ -580,22 +552,21 @@ object ShardedAnnIndex {
   /** Shard the same assigned frame [[MemoryAnnIndex.fromDataFrame]]
     * takes. All shards receive the full centroid set (the IVF probe
     * contract above); empty shards are dropped (a tiny corpus on many
-    * shards serves from the occupied ones).
+    * shards serves from the occupied ones). The input plan is evaluated
+    * ONCE and partitioned driver-side by the shard rule, as
+    * [[ShardedSparseIndex]] does (a per-shard isEmpty + collect would run
+    * it 2·nShards times).
     */
   def fromDataFrame(df: DataFrame, idCol: String, embCol: String,
                     cellCol: String, centroids: Seq[Seq[Float]],
                     nShards: Int,
                     metaCols: Seq[String] = Nil): ShardedAnnIndex = {
     require(nShards >= 1, s"nShards $nShards must be >= 1")
-    val n = nShards
-    val shardUdf = udf((id: Long) => shardOf(id, n))
-    val tagged = df.withColumn("__shard", shardUdf(col(idCol).cast("long")))
-    val shards = (0 until nShards).flatMap { sh =>
-      val slice = tagged.where(col("__shard") === sh).drop("__shard")
-      if (slice.isEmpty) None
-      else Some(MemoryAnnIndex.fromDataFrame(slice, idCol, embCol,
-        cellCol, centroids, metaCols))
-    }
+    val (rows, isString) =
+      MemoryAnnIndex.collectRows(df, idCol, embCol, cellCol, metaCols)
+    val bySh = rows.groupBy(r => shardOf(r.getLong(0), nShards))
+    val shards = (0 until nShards).flatMap(sh => bySh.get(sh).map(
+      MemoryAnnIndex.fromCollected(_, centroids, metaCols, isString)))
     new ShardedAnnIndex(shards)
   }
 }
@@ -612,13 +583,13 @@ object ShardedAnnIndex {
   * bit-for-bit: approx cos(q, mn + c·s) =
   * (mn·Σq + s·Σqᵢcᵢ) / (√(dim·mn² + 2·mn·s·Σc + s²·Σc²)·‖q‖), one
   * byte-fold per row. [[topK]] then re-ranks the `rerankFactor·k` best
-  * candidates with the exact cosine over the retained float vectors —
-  * the same prune-then-rerank contract, so results match the DataFrame
-  * SQ8 path exactly (ServeSpec pins both layers). Construct WITHOUT
-  * vectors ([[MemorySq8Index.fromDataFrameApproxOnly]]) for the
-  * compressed-only deployment that serves [[topKApprox]] — e.g. the
-  * reference's threshold cache-hit decision, which tolerates
-  * approximate scores.
+  * candidates with the exact cosine over the retained float vectors
+  * ([[Cosine]], row norms from load) — the same prune-then-rerank
+  * contract, so results match the DataFrame SQ8 path exactly (ServeSpec
+  * pins both layers). Construct WITHOUT vectors
+  * ([[MemorySq8Index.fromDataFrameApproxOnly]]) for the compressed-only
+  * deployment that serves [[topKApprox]] — e.g. the reference's threshold
+  * cache-hit decision, which tolerates approximate scores.
   */
 final class MemorySq8Index private (
     val dim: Int,
@@ -658,27 +629,16 @@ final class MemorySq8Index private (
     (out, qd)
   }
 
-  // bounded k-selection (same contract as MemoryAnnIndex's heap: order
-  // by score DESC, id ASC) — a full sortBy over every row index boxes
-  // and sorts the whole corpus per request and measured ~4x the scan
-  private def rank(scores: Array[Double], k: Int): Seq[Int] = {
-    val heap = new java.util.PriorityQueue[Integer](
-      math.max(k, 1),
-      (a: Integer, b: Integer) => {
-        val c = java.lang.Double.compare(scores(a), scores(b))
-        if (c != 0) c else java.lang.Long.compare(ids(b), ids(a))
-      })
+  private val norms = vecs.map(Cosine.norms(_, ids.length, dim))
+
+  // bounded k-selection by (score DESC, id ASC), rows as payload — a
+  // full sortBy over every row index boxes and sorts the whole corpus
+  // per request and measured ~4x the scan
+  private def rank(scores: Array[Double], k: Int): Array[Int] = {
+    val top = TopK.largest(k, scores.length)
     var r = 0
-    while (r < scores.length) {
-      if (heap.size < k) heap.add(r)
-      else {
-        val w = heap.peek()
-        val c = java.lang.Double.compare(scores(r), scores(w))
-        if (c > 0 || (c == 0 && ids(r) < ids(w))) { heap.poll(); heap.add(r): Unit }
-      }
-      r += 1
-    }
-    heap.asScala.toSeq.map(_.intValue).sortBy(r => (-scores(r), ids(r)))
+    while (r < scores.length) { top.offer(scores(r), ids(r), r); r += 1 }
+    top.rowsBestFirst()
   }
 
   /** Approximate top-k straight off the codes (no float vectors needed —
@@ -687,7 +647,7 @@ final class MemorySq8Index private (
   def topKApprox(query: Seq[Float], k: Int): Seq[(Long, Double)] = {
     if (k <= 0) return Nil
     val (scores, _) = approxScores(query)
-    rank(scores, k).map(r => (ids(r), scores(r)))
+    rank(scores, k).toSeq.map(r => (ids(r), scores(r)))
   }
 
   /** Approximate prune + exact re-rank over the retained vectors — the
@@ -697,19 +657,13 @@ final class MemorySq8Index private (
     val vs = vecs.getOrElse(sys.error(
       "MemorySq8Index built approx-only (no vectors retained for rerank)"))
     if (k <= 0) return Nil
-    val (scores, _) = approxScores(query)
-    val cand = rank(scores, math.max(k, rerankFactor * k))
-    cand.map { r =>
-      // exact codegen-fold cosine over the float vector
-      var dot = 0.0; var na = 0.0; var nb = 0.0
-      var j = 0
-      val base = r * dim
-      while (j < dim) {
-        val x = vs(base + j).toDouble; val y = query(j).toDouble
-        dot += x * y; na += x * x; nb += y * y; j += 1
-      }
-      (ids(r), dot / (math.sqrt(na) * math.sqrt(nb)))
-    }.sortBy { case (id, s) => (-s, id) }.take(k)
+    val (scores, qd) = approxScores(query)
+    val pool = rank(scores, math.max(k, TopK.satMul(rerankFactor, k)))
+    val qNorm = Cosine.queryNorm(qd, dim)
+    val top = TopK.largest(k, pool.length)
+    pool.foreach(r =>
+      top.offer(Cosine.score(vs, r * dim, norms.get(r), qd, qNorm, dim), ids(r)))
+    top.toSeq
   }
 }
 
@@ -781,15 +735,16 @@ object MemorySq8Index {
   * .topKMatryoshka]]'s memory twin): the first `prefixDim` coordinates
   * live in their OWN contiguous array — the candidate scan touches
   * prefixDim/dim of the vector bytes (the same resident-set argument as
-  * [[MemorySq8Index]]'s byte packing: a strided read over the full
-  * array would save nothing) — and the k·rerankFactor survivors rerank
-  * over the full vectors with the exact pinned cosine fold. Results are
-  * bit-identical to `Ann.topKMatryoshka` over the same rows (ServeSpec):
-  * same prefix fold, same (prefix score DESC, id ASC) candidate rule,
-  * same exact rerank order. Like every tier here, the candidate SET is
-  * the approximation — returned scores are always the exact full-dim
-  * fold. Meaningful recall needs MRL-trained embeddings (RECALL.md's
-  * mrl rows measure the untrained floor).
+  * [[MemorySq8Index]]'s byte packing: a strided read over the full array
+  * would save nothing) — and the k·rerankFactor survivors rerank over the
+  * full vectors with the exact pinned cosine fold ([[Cosine]]; prefix and
+  * full-row norms both computed at load). Results are bit-identical to
+  * `Ann.topKMatryoshka` over the same rows (ServeSpec): same prefix fold,
+  * same (prefix score DESC, id ASC) candidate rule, same exact rerank
+  * order. Like every tier here, the candidate SET is the approximation —
+  * returned scores are always the exact full-dim fold. Meaningful recall
+  * needs MRL-trained embeddings (RECALL.md's mrl rows measure the
+  * untrained floor).
   */
 final class MemoryMrlIndex private (
     val dim: Int, val prefixDim: Int,
@@ -799,64 +754,31 @@ final class MemoryMrlIndex private (
 
   def size: Int = ids.length
 
-  // id -> row, built once (ids are unique by the load contract)
-  private lazy val rowOf: scala.collection.mutable.LongMap[Int] = {
-    val m = scala.collection.mutable.LongMap[Int]()
-    var j = 0
-    while (j < ids.length) { m(ids(j)) = j; j += 1 }
-    m
-  }
+  private val prefixNorms = Cosine.norms(prefix, ids.length, prefixDim)
+  private val norms = Cosine.norms(vecs, ids.length, dim)
 
   /** Prefix-prune + exact full-dim re-rank. */
   def topK(query: Seq[Float], k: Int, rerankFactor: Int = 4): Seq[(Long, Double)] = {
     if (k <= 0) return Nil
     require(query.length == dim, s"query dim ${query.length} != index dim $dim")
     require(rerankFactor >= 1, s"rerankFactor $rerankFactor must be >= 1")
-    val q = query.toArray
-    val poolK = k * rerankFactor
-    // candidate heap under (prefix score ASC, id DESC) — head = loser;
-    // ties keep the LOWER id, matching the DataFrame stage's
-    // (pfx DESC, id ASC) TakeOrderedAndProject rule
-    val heap = new java.util.PriorityQueue[(Double, Long)](
-      math.max(poolK, 1),
-      (a: (Double, Long), b: (Double, Long)) => {
-        val c = java.lang.Double.compare(a._1, b._1)
-        if (c != 0) c else java.lang.Long.compare(b._2, a._2)
-      })
+    val q = Cosine.query(query)
+    // candidate pool by (prefix score DESC, id ASC) — the DataFrame
+    // stage's TakeOrderedAndProject rule over the SLICED column
+    val pool = TopK.largest(TopK.satMul(k, rerankFactor), ids.length)
+    val qPrefixNorm = Cosine.queryNorm(q, prefixDim)
     var r = 0
     while (r < ids.length) {
-      // same fold as the codegen CosineSimilarity over the SLICED column
-      var dot = 0.0; var na = 0.0; var nb = 0.0
-      var i = 0
-      val base = r * prefixDim
-      while (i < prefixDim) {
-        val x = prefix(base + i).toDouble; val y = q(i).toDouble
-        dot += x * y; na += x * x; nb += y * y; i += 1
-      }
-      val s = dot / (math.sqrt(na) * math.sqrt(nb))
-      val cand = (s, ids(r))
-      if (heap.size < poolK) heap.add(cand): Unit
-      else {
-        val worst = heap.peek()
-        val c = java.lang.Double.compare(s, worst._1)
-        if (c > 0 || (c == 0 && cand._2 < worst._2)) {
-          heap.poll(); heap.add(cand): Unit
-        }
-      }
+      pool.offer(Cosine.score(prefix, r * prefixDim, prefixNorms(r), q,
+        qPrefixNorm, prefixDim), ids(r), r)
       r += 1
     }
     // exact rerank over the pool (bounded: k·rerankFactor rows)
-    heap.asScala.toSeq.map { case (_, id) =>
-      val row = rowOf(id)
-      var dot = 0.0; var na = 0.0; var nb = 0.0
-      var i = 0
-      val base = row * dim
-      while (i < dim) {
-        val x = vecs(base + i).toDouble; val y = q(i).toDouble
-        dot += x * y; na += x * x; nb += y * y; i += 1
-      }
-      (id, dot / (math.sqrt(na) * math.sqrt(nb)))
-    }.sortBy { case (id, s) => (-s, id) }.take(k)
+    val qNorm = Cosine.queryNorm(q, dim)
+    val top = TopK.largest(k, pool.size)
+    pool.rowsBestFirst().foreach(row =>
+      top.offer(Cosine.score(vecs, row * dim, norms(row), q, qNorm, dim), ids(row)))
+    top.toSeq
   }
 }
 
@@ -901,17 +823,17 @@ object MemoryMrlIndex {
   * serving form next to [[MemorySq8Index]]: each vector is `m` byte
   * codes (dim 64 / m 8 → 32× smaller than float32), scored by ADC
   * (asymmetric distance computation): the query's per-subspace L2
-  * distances to every sub-centroid form an m×ksub table computed ONCE
-  * per request, and each row's approximate distance is m table lookups
-  * summed in subspace order — the classic IVF-ADC serving kernel
-  * (Jegou et al., TPAMI 2011), replayed with the SAME double arithmetic
-  * as [[graft.operators.Ann.topKPq]]'s plan (table loop, fold seed and
+  * distances to every sub-centroid form an m×ksub table computed ONCE per
+  * request, and each row's approximate distance is m table lookups summed
+  * in subspace order — the classic IVF-ADC serving kernel (Jegou et al.,
+  * TPAMI 2011), replayed with the SAME double arithmetic as
+  * [[graft.operators.Ann.topKPq]]'s plan (table loop, fold seed and
   * order), so the candidate cut and the exact-rerank output are
   * bit-identical to the DataFrame path (ServeSpec + the q190 oracle pin
-  * it). Exact rerank reads the retained float vectors; memory per doc =
-  * m bytes of codes + dim×4 B for rerank — drop the vectors and serve
-  * approximate-only where a 32×-smaller replica matters more than exact
-  * order.
+  * it). Exact rerank ([[Cosine]]) reads the retained float vectors and
+  * their load-time norms; memory per doc = m bytes of codes + dim×4 B for
+  * rerank — drop the vectors and serve approximate-only where a
+  * 32×-smaller replica matters more than exact order.
   */
 final class MemoryPqIndex private (
     val dim: Int, m: Int,
@@ -921,6 +843,8 @@ final class MemoryPqIndex private (
     codebooks: Seq[Seq[Seq[Float]]]) {
 
   def size: Int = ids.length
+
+  private val norms = Cosine.norms(vecs, ids.length, dim)
 
   /** The same driver-side table build as [[Ann.topKPq]] — per subspace,
     * squared-L2 of the query slice to each sub-centroid, in-order fold.
@@ -944,35 +868,16 @@ final class MemoryPqIndex private (
       adc(r) = s
       r += 1
     }
-    // bounded selection by (adc ASC, id ASC): heap keeps the current
-    // LOSERS' worst at its head = (adc DESC, id DESC)
-    val kk = math.max(k, rerankFactor * k)
-    val heap = new java.util.PriorityQueue[Integer](
-      kk,
-      (a: Integer, b: Integer) => {
-        val c = java.lang.Double.compare(adc(b), adc(a))
-        if (c != 0) c else java.lang.Long.compare(ids(b), ids(a))
-      })
+    // bounded selection by (adc ASC, id ASC), then exact cosine rerank
+    val pool = TopK.smallest(math.max(k, TopK.satMul(rerankFactor, k)), n)
     r = 0
-    while (r < n) {
-      if (heap.size < kk) heap.add(r)
-      else {
-        val w = heap.peek()
-        val c = java.lang.Double.compare(adc(r), adc(w))
-        if (c < 0 || (c == 0 && ids(r) < ids(w))) { heap.poll(); heap.add(r): Unit }
-      }
-      r += 1
-    }
-    heap.asScala.toSeq.map(_.intValue).map { ri =>
-      var dot = 0.0; var na = 0.0; var nb = 0.0
-      var i = 0
-      val base = ri * dim
-      while (i < dim) {
-        val x = vecs(base + i).toDouble; val y = query(i).toDouble
-        dot += x * y; na += x * x; nb += y * y; i += 1
-      }
-      (ids(ri), dot / (math.sqrt(na) * math.sqrt(nb)))
-    }.sortBy { case (id, s) => (-s, id) }.take(k)
+    while (r < n) { pool.offer(adc(r), ids(r), r); r += 1 }
+    val q = Cosine.query(query)
+    val qNorm = Cosine.queryNorm(q, dim)
+    val top = TopK.largest(k, pool.size)
+    pool.rowsBestFirst().foreach(ri =>
+      top.offer(Cosine.score(vecs, ri * dim, norms(ri), q, qNorm, dim), ids(ri)))
+    top.toSeq
   }
 }
 
@@ -1070,9 +975,7 @@ final class MemoryPostingsIndex private (
         acc.put(id, acc.getOrDefault(id, 0.0) + contribOf(w, tf, dl)): Unit
       }
     }
-    acc.entrySet().asScala.toSeq
-      .map(e => (e.getKey.toLong, e.getValue.toDouble))
-      .sortBy { case (id, s) => (-s, id) }.take(k)
+    TopK.best(acc, k)
   }
 
   /** WAND dynamic pruning (Broder et al., CIKM'03): document-at-a-time
@@ -1122,19 +1025,14 @@ final class MemoryPostingsIndex private (
     var curs = present.map(t =>
       new Cur(t, postings(t), idf(t), termUb(t))).toArray
 
-    // worst-first heap under the serving order (score desc, id asc):
-    // the worst entry has the SMALLEST score, largest id among ties
-    val heap = new java.util.PriorityQueue[(Long, Double)](k,
-      (a: (Long, Double), b: (Long, Double)) =>
-        if (a._2 != b._2) java.lang.Double.compare(a._2, b._2)
-        else java.lang.Long.compare(b._1, a._1))
+    val top = TopK.largest(k, curs.map(_.arr.length).sum)
     var evaluated = 0L
     var skipped = 0L
 
     var active = true
     while (active && curs.nonEmpty) {
       val sorted = curs.sortBy(_.id)
-      val theta = if (heap.size < k) -1.0 else heap.peek()._2
+      val theta = if (top.isFull) top.rootScore else -1.0
       // pivot: first prefix whose UB sum (plus the float guard) reaches θ
       var acc = 0.0
       var pivot = -1
@@ -1159,13 +1057,7 @@ final class MemoryPostingsIndex private (
           var s = 0.0
           pairs.foreach(s += _._2)
           evaluated += 1
-          if (heap.size < k) heap.add((pivotDoc, s)): Unit
-          else {
-            val worst = heap.peek()
-            if (s > worst._2 || (s == worst._2 && pivotDoc < worst._1)) {
-              heap.poll(); heap.add((pivotDoc, s)): Unit
-            }
-          }
+          top.offer(s, pivotDoc)
           group.foreach(_.pos += 1)
         } else {
           // docs below pivotDoc are only reachable through cursors
@@ -1180,9 +1072,7 @@ final class MemoryPostingsIndex private (
         curs = curs.filterNot(_.done)
       }
     }
-    val out = Iterator.continually(heap.poll()).takeWhile(_ != null)
-      .toSeq.sortBy { case (id, s) => (-s, id) }
-    (out, evaluated, skipped)
+    (top.toSeq, evaluated, skipped)
   }
 }
 
@@ -1228,16 +1118,17 @@ object MemoryPostingsIndex {
   *
   * Documents hash-shard by id ([[ShardedAnnIndex.shardOf]] — disjoint
   * cover), each shard holds its own postings slice, queries fan out as
-  * per-shard WAND top-k and the k-bounded lists merge under the global
-  * (score DESC, id ASC) order. Merged results are BIT-IDENTICAL to the
-  * unsharded index: a document's BM25 score depends only on ITS OWN
-  * (tf, dl) postings and the GLOBAL (idf, avgdl) statistics — which the
-  * caller must pass from the WHOLE corpus, exactly as a deployment
-  * broadcasts dimension stats to replicas (per-shard recomputed stats
-  * would change every score and break parity) — so each row scores the
-  * same wherever it lives, the cover is disjoint, and the global top-k
-  * is contained in the union of shard top-k's. WAND's pruning is
-  * per-shard and answer-preserving, so the fan-out keeps the skipping.
+  * per-shard WAND top-k and the k-bounded lists merge by [[TopK.merge]]
+  * under the global (score DESC, id ASC) order. Merged results are
+  * BIT-IDENTICAL to the unsharded index: a document's BM25 score
+  * depends only on ITS OWN (tf, dl) postings and the GLOBAL (idf,
+  * avgdl) statistics — which the caller must pass from the WHOLE
+  * corpus, exactly as a deployment broadcasts dimension stats to
+  * replicas (per-shard recomputed stats would change every score and
+  * break parity) — so each row scores the same wherever it lives, the
+  * cover is disjoint, and the global top-k is contained in the union of
+  * shard top-k's. WAND's pruning is per-shard and answer-preserving, so
+  * the fan-out keeps the skipping.
   */
 final class ShardedPostingsIndex private[serve] (
     val shards: Seq[MemoryPostingsIndex]) {
@@ -1255,9 +1146,7 @@ final class ShardedPostingsIndex private[serve] (
   def searchCounted(terms: Seq[String], k: Int)
       : (Seq[(Long, Double)], Long, Long) = {
     val per = shards.map(_.searchWandCounted(terms, k))
-    val merged = per.flatMap(_._1)
-      .sortBy { case (id, s) => (-s, id) }.take(k)
-    (merged, per.map(_._2).sum, per.map(_._3).sum)
+    (TopK.merge(per.map(_._1), k), per.map(_._2).sum, per.map(_._3).sum)
   }
 }
 
@@ -1500,26 +1389,23 @@ final class MemoryServer(val dense: MemoryAnnIndex,
   }
 
   /** Dense top-k under a DISJUNCTIVE-normal-form filter (a Seq of
-    * conjunction branches): one k-bounded probe per branch, unioned by
-    * id and re-ranked under the global (score DESC, id ASC) order. This
-    * is BIT-IDENTICAL to a single scan testing the whole disjunction
-    * per row: a row passes the OR iff it passes some branch, every
-    * branch scores a row with the same fold (same bits), and the global
-    * top-k is contained in the union of per-branch top-k's. Cost is one
-    * probe per branch — each of which keeps the payload-index /
-    * IVF-probe fast paths a monolithic OR-scan would forfeit — and
-    * requests bound branch counts (the parser caps DNF expansion), so
-    * no data-sized work is ever disjunction-shaped.
+    * conjunction branches): one k-bounded probe per branch, merged by
+    * [[TopK.merge]] with repeated ids dropped. This is BIT-IDENTICAL to
+    * a single scan testing the whole disjunction per row: a row passes
+    * the OR iff it passes some branch, every branch scores a row with
+    * the same fold (same bits), and the global top-k is contained in
+    * the union of per-branch top-k's. Cost is one probe per branch —
+    * each of which keeps the payload-index / IVF-probe fast paths a
+    * monolithic OR-scan would forfeit — and requests bound branch
+    * counts (the parser caps DNF expansion), so no data-sized work is
+    * ever disjunction-shaped.
     */
   def topKVecDnf(qvec: Seq[Float], k: Int,
                  dnf: Seq[Seq[MetaFilter]]): Seq[(Long, Double)] =
     dnf match {
       case Seq(one) => topKVec(qvec, k, one)
-      case branches =>
-        branches.flatMap(b => topKVec(qvec, k, b))
-          .distinct // same id ⇒ same score bits in every branch
-          .sortBy { case (id, s) => (-s, id) }
-          .take(k)
+      case branches => // same id ⇒ same score bits in every branch
+        TopK.merge(branches.map(b => topKVec(qvec, k, b)), k, distinct = true)
     }
 
   /** The Method-1 filter DSL (`01_method1_cortex_search.sql:204-212`,

@@ -3,16 +3,14 @@ package graft.serve
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
-import scala.jdk.CollectionConverters._
-
 /** Late-interaction (MaxSim) serving tier — the memory form of
   * [[graft.operators.LateInteraction.maxSimTopK]]: each doc's part
   * vectors sit contiguously in one flat array, and a request's score is
   * Σ over query vectors of the per-doc MAX cosine, folded in query
   * order — the same pinned arithmetic as the DataFrame tier (per-part
   * cosine = the codegen fold; max is order-free exact; the sum is
-  * left-assoc query-ascending), so results are bit-identical (ServeSpec
-  * + the q197 oracle pin it).
+  * left-assoc query-ascending; part norms hoisted to load by [[Cosine]]),
+  * so results are bit-identical (ServeSpec + the q197 oracle pin it).
   *
   * Memory is parts × dim × 4 B — late interaction's cost is the
   * multi-vector corpus itself; the serving win over the DataFrame path
@@ -28,6 +26,8 @@ final class MemoryMaxSimIndex private (
   def nDocs: Int = docIds.length
   def nParts: Int = offsets(docIds.length)
 
+  private val norms = Cosine.norms(vecs, nParts, dim)
+
   /** Top-k docs by MaxSim for the query bag (bag order defines the
     * score fold). (score DESC, doc ASC), k rows.
     */
@@ -35,31 +35,19 @@ final class MemoryMaxSimIndex private (
     require(queryBag.nonEmpty, "maxsim: empty query bag")
     require(queryBag.forall(_.length == dim), "query bag dim mismatch")
     require(k > 0)
-    val qs = queryBag.map(_.toArray).toArray
-    val heap = new java.util.PriorityQueue[(Double, Long)](
-      math.max(k, 1),
-      (a: (Double, Long), b: (Double, Long)) => {
-        val c = java.lang.Double.compare(a._1, b._1)
-        if (c != 0) c else java.lang.Long.compare(b._2, a._2)
-      })
+    val qs = queryBag.map(Cosine.query).toArray
+    val qNorms = qs.map(Cosine.queryNorm(_, dim))
+    val top = TopK.largest(k, docIds.length)
     var d = 0
     while (d < docIds.length) {
       var score = 0.0
       var qi = 0
       var first = true
       while (qi < qs.length) {
-        val q = qs(qi)
         var m = Double.NegativeInfinity
         var p = offsets(d)
         while (p < offsets(d + 1)) {
-          var dot = 0.0; var na = 0.0; var nb = 0.0
-          var j = 0
-          val base = p * dim
-          while (j < dim) {
-            val x = vecs(base + j).toDouble; val y = q(j).toDouble
-            dot += x * y; na += x * x; nb += y * y; j += 1
-          }
-          val c = dot / (math.sqrt(na) * math.sqrt(nb))
+          val c = Cosine.score(vecs, p * dim, norms(p), qs(qi), qNorms(qi), dim)
           if (c > m) m = c
           p += 1
         }
@@ -68,19 +56,10 @@ final class MemoryMaxSimIndex private (
         if (first) { score = m; first = false } else score += m
         qi += 1
       }
-      val cand = (score, docIds(d))
-      if (heap.size < k) heap.add(cand)
-      else {
-        val worst = heap.peek()
-        val c = java.lang.Double.compare(score, worst._1)
-        if (c > 0 || (c == 0 && cand._2 < worst._2)) {
-          heap.poll(); heap.add(cand): Unit
-        }
-      }
+      top.offer(score, docIds(d))
       d += 1
     }
-    heap.asScala.toSeq.sortBy { case (s, id) => (-s, id) }
-      .map { case (s, id) => (id, s) }
+    top.toSeq
   }
 }
 

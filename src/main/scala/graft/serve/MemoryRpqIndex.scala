@@ -1,7 +1,5 @@
 package graft.serve
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -10,21 +8,27 @@ import graft.operators.Ann
 /** Memory tier for RESIDUAL IVF-PQ ([[Ann.topKIvfResidualPq]]) — the
   * FAISS `IndexIVFPQ` serving layout: codes are stored PER CELL (the
   * inverted lists), and a request builds one ADC table per probed cell
-  * from the QUERY'S residual against that cell. Per-request work =
-  * nProbe × (table build: m·ksub·subdim mul-adds) + Σ probed-list codes ×
-  * m byte lookups + exact rerank of the bounded candidate set — the
-  * byte-coded resident set is 4·dim/m× smaller than the floats, which
-  * stay resident only for the rerank (drop them for a codes-only replica
-  * at the cost of exact ordering, as with [[MemoryPqIndex]]).
-  * Results ≡ the DataFrame path bit-for-bit (ServeSpec).
+  * from the QUERY'S residual against that cell. Per-request work = nProbe
+  * × (table build: m·ksub·subdim mul-adds) + Σ probed-list codes × m byte
+  * lookups + exact [[Cosine]] rerank of the bounded candidate set
+  * ([[TopK]] pools, rows grouped by cell) — the byte-coded resident set
+  * is 4·dim/m× smaller than the floats, which stay resident only for the
+  * rerank (drop them for a codes-only replica at the cost of exact
+  * ordering, as with [[MemoryPqIndex]]). Results ≡ the DataFrame path
+  * bit-for-bit (ServeSpec).
   */
 final class MemoryRpqIndex private (
     val dim: Int, m: Int,
-    cells: Map[Int, (Array[Long], Array[Byte], Array[Float])], // id-ascending per cell
+    cells: Map[Int, (Int, Int)], // cell -> its row range [start, end)
+    ids: Array[Long], // grouped by cell, id-ascending within a cell
+    codes: Array[Byte], // m-strided, parallel to ids
+    vecs: Array[Float], // dim-strided, parallel to ids
     centroids: Seq[Seq[Float]],
     codebooks: Seq[Seq[Seq[Float]]]) {
 
-  def size: Int = cells.valuesIterator.map(_._1.length).sum
+  def size: Int = ids.length
+
+  private val norms = Cosine.norms(vecs, ids.length, dim)
 
   /** ADC prune over the probed cells' lists + exact cosine rerank — the
     * [[Ann.topKIvfResidualPq]] contract (one candidate pool ACROSS the
@@ -38,47 +42,27 @@ final class MemoryRpqIndex private (
     val probed = Ann.probeCellsFor(centroids, query, nProbe)
       .filter(cells.contains)
     if (probed.isEmpty) return Nil
-    val kk = math.max(k, rerankFactor * k)
-    // candidates as (adc, id, cell, row) — bounded heap, worst at head
-    final case class Cand(adc: Double, id: Long, cell: Int, row: Int)
-    val heap = new java.util.PriorityQueue[Cand](
-      kk,
-      (a: Cand, b: Cand) => {
-        val c = java.lang.Double.compare(b.adc, a.adc)
-        if (c != 0) c else java.lang.Long.compare(b.id, a.id)
-      })
+    val pool = TopK.smallest(math.max(k, TopK.satMul(rerankFactor, k)), size)
     probed.foreach { cell =>
-      val (ids, codes, _) = cells(cell)
+      val (start, end) = cells(cell)
       val table = Ann.adcTableFor(codebooks,
         Ann.residualOf(query, centroids(cell))).map(_.toArray).toArray
-      var r = 0
-      while (r < ids.length) {
+      var r = start
+      while (r < end) {
         // the engine's fold: seed 0.0, subspace-ascending adds
         var s = 0.0
         var j = 0
         while (j < m) { s += table(j)(codes(r * m + j) & 0xff); j += 1 }
-        if (heap.size < kk) heap.add(Cand(s, ids(r), cell, r)): Unit
-        else {
-          val w = heap.peek()
-          val c = java.lang.Double.compare(s, w.adc)
-          if (c < 0 || (c == 0 && ids(r) < w.id)) {
-            heap.poll(); heap.add(Cand(s, ids(r), cell, r)): Unit
-          }
-        }
+        pool.offer(s, ids(r), r)
         r += 1
       }
     }
-    heap.asScala.toSeq.map { cand =>
-      val vecs = cells(cand.cell)._3
-      val base = cand.row * dim
-      var dot = 0.0; var na = 0.0; var nb = 0.0
-      var i = 0
-      while (i < dim) {
-        val x = vecs(base + i).toDouble; val y = query(i).toDouble
-        dot += x * y; na += x * x; nb += y * y; i += 1
-      }
-      (cand.id, dot / (math.sqrt(na) * math.sqrt(nb)))
-    }.sortBy { case (id, s) => (-s, id) }.take(k)
+    val q = Cosine.query(query)
+    val qNorm = Cosine.queryNorm(q, dim)
+    val top = TopK.largest(k, pool.size)
+    pool.rowsBestFirst().foreach(r =>
+      top.offer(Cosine.score(vecs, r * dim, norms(r), q, qNorm, dim), ids(r)))
+    top.toSeq
   }
 }
 
@@ -101,21 +85,21 @@ object MemoryRpqIndex {
         col(assignCol).cast("int"), col(codeCol))
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1), r.getInt(2), r.getSeq[Int](3)))
+      .sortBy(r => (r._3, r._1))
     require(rows.nonEmpty, "MemoryRpqIndex: empty corpus")
     val dim = rows.head._2.length
     require(dim == codebooks.head.head.size * m,
       s"dim $dim != m($m) x subdim(${codebooks.head.head.size})")
-    val byCell = rows.groupBy(_._3).map { case (cell, rs) =>
-      val sorted = rs.sortBy(_._1)
-      val ids = sorted.map(_._1).toArray
-      val vecs = new Array[Float](sorted.length * dim)
-      val codes = new Array[Byte](sorted.length * m)
-      sorted.zipWithIndex.foreach { case ((_, v, _, c), r) =>
-        v.copyToArray(vecs, r * dim)
-        c.zipWithIndex.foreach { case (cv, j) => codes(r * m + j) = cv.toByte }
-      }
-      cell -> (ids, codes, vecs)
+    val ids = rows.map(_._1)
+    val vecs = new Array[Float](rows.length * dim)
+    val codes = new Array[Byte](rows.length * m)
+    rows.zipWithIndex.foreach { case ((_, v, _, c), r) =>
+      v.copyToArray(vecs, r * dim)
+      c.zipWithIndex.foreach { case (cv, j) => codes(r * m + j) = cv.toByte }
     }
-    new MemoryRpqIndex(dim, m, byCell, centroids, codebooks)
+    val cells = rows.indices.groupBy(r => rows(r)._3).map { case (cell, rs) =>
+      cell -> (rs.head, rs.last + 1)
+    }
+    new MemoryRpqIndex(dim, m, cells, ids, codes, vecs, centroids, codebooks)
   }
 }

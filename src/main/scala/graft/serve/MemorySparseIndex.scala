@@ -1,7 +1,5 @@
 package graft.serve
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -43,9 +41,7 @@ final class MemorySparseIndex private[serve] (
         acc.put(id, acc.getOrDefault(id, 0L) + w * qw): Unit
       }
     }
-    acc.entrySet().asScala.toSeq
-      .map(e => (e.getKey.toLong, e.getValue.toLong))
-      .sortBy { case (id, s) => (-s, id) }.take(k)
+    TopK.bestLong(acc, k)
   }
 
   /** WAND dynamic pruning over the integer dot product — the sparse
@@ -89,17 +85,13 @@ final class MemorySparseIndex private[serve] (
     var curs = present.map(t =>
       new Cur(postings(t), query(t), query(t) * maxW(t))).toArray
 
-    // worst-first heap under (score DESC, id ASC): head = current loser
-    val heap = new java.util.PriorityQueue[(Long, Long)](k,
-      (a: (Long, Long), b: (Long, Long)) =>
-        if (a._2 != b._2) java.lang.Long.compare(a._2, b._2)
-        else java.lang.Long.compare(b._1, a._1))
+    val top = TopK.largest(k, curs.map(_.arr.length).sum)
     var evaluated = 0L
     var skipped = 0L
     var active = true
     while (active && curs.nonEmpty) {
       val sorted = curs.sortBy(_.id)
-      val theta = if (heap.size < k) Long.MinValue else heap.peek()._2
+      val theta = if (top.isFull) top.rootLongScore else Long.MinValue
       var acc = 0L
       var pivot = -1
       var i = 0
@@ -120,13 +112,7 @@ final class MemorySparseIndex private[serve] (
             }
           }
           evaluated += 1
-          if (heap.size < k) heap.add((pivotDoc, s)): Unit
-          else {
-            val worst = heap.peek()
-            if (s > worst._2 || (s == worst._2 && pivotDoc < worst._1)) {
-              heap.poll(); heap.add((pivotDoc, s)): Unit
-            }
-          }
+          top.offerLong(s, pivotDoc)
         } else {
           var j = 0
           while (j < pivot) {
@@ -138,9 +124,7 @@ final class MemorySparseIndex private[serve] (
         curs = curs.filterNot(_.done)
       }
     }
-    val out = Iterator.continually(heap.poll()).takeWhile(_ != null)
-      .toSeq.sortBy { case (id, s) => (-s, id) }
-    (out, evaluated, skipped)
+    (top.toLongSeq, evaluated, skipped)
   }
 }
 
@@ -310,20 +294,14 @@ final class DeltaSparseIndex private (
         acc.put(id, acc.getOrDefault(id, 0L) + w * qw): Unit
       }
     }
-    acc.entrySet().asScala.toSeq
-      .map(e => (e.getKey.toLong, e.getValue.toLong))
-      .sortBy { case (id, s) => (-s, id) }.take(k)
+    TopK.bestLong(acc, k)
   }
-
-  private def mergeK(a: Seq[(Long, Long)], b: Seq[(Long, Long)],
-                     k: Int): Seq[(Long, Long)] =
-    (a ++ b).sortBy { case (id, s) => (-s, id) }.take(k)
 
   /** Top-k over base ∪ delta — the exhaustive reference. */
   def topK(query: Map[String, Long], k: Int): Seq[(Long, Long)] = {
     if (k <= 0) return Nil
     val d = delta
-    mergeK(base.topK(query, k), deltaTopK(d, query, k), k)
+    TopK.mergeLong(Seq(base.topK(query, k), deltaTopK(d, query, k)), k)
   }
 
   /** The serving read path: WAND over the immutable base (per-term
@@ -341,7 +319,7 @@ final class DeltaSparseIndex private (
     if (k <= 0) return (Nil, 0L, 0L)
     val d = delta
     val (bres, evaluated, skipped) = base.topKWandCounted(query, k)
-    (mergeK(bres, deltaTopK(d, query, k), k), evaluated, skipped)
+    (TopK.mergeLong(Seq(bres, deltaTopK(d, query, k)), k), evaluated, skipped)
   }
 }
 
@@ -372,7 +350,8 @@ object DeltaSparseIndex {
   * [[ShardedPostingsIndex]] for BM25): documents hash-shard disjointly
   * by id (the same splitmix64 rule), each shard holds its own postings
   * slice and WAND-walks it independently, and the k-bounded per-shard
-  * lists merge under the global (score DESC, id ASC) order.
+  * lists merge by [[TopK.mergeLong]] under the global (score DESC,
+  * id ASC) order.
   *
   * Bit-identity to the unsharded walk is even SIMPLER here than for
   * BM25: a document's sparse dot product Σ_t w_q(t)·w_d(t) depends only
@@ -401,9 +380,7 @@ final class ShardedSparseIndex private[serve] (
   def topKWandCounted(query: Map[String, Long], k: Int)
       : (Seq[(Long, Long)], Long, Long) = {
     val per = shards.map(_.topKWandCounted(query, k))
-    val merged = per.flatMap(_._1)
-      .sortBy { case (id, s) => (-s, id) }.take(k)
-    (merged, per.map(_._2).sum, per.map(_._3).sum)
+    (TopK.mergeLong(per.map(_._1), k), per.map(_._2).sum, per.map(_._3).sum)
   }
 }
 

@@ -142,6 +142,71 @@ object GraftProps extends Properties("graft") {
         rank(perShard.flatMap(rank)) == global
     }
 
+  /** The memory tiers' one top-k kernel ([[graft.serve.TopK]]): per-list
+    * selection followed by the k-way merge must equal ONE full sort under
+    * (Double.compare DESC, id ASC) — NaN first, +0.0 above -0.0, ties by
+    * id — with ids repeated across lists (one id ⇒ one score, the fan-out
+    * invariant the DNF union relies on), k = 0, k > n and k = Int.MaxValue.
+    * The smallest-first form (distances) must equal the ascending sort
+    * with the same id tie-break; integral scores take the same path.
+    */
+  property("serve.topk-select-merge-equals-total-order-sort") = {
+    import graft.serve.TopK
+    val scoreGen = Gen.oneOf(
+      Gen.oneOf(Double.NaN, -0.0, 0.0, 0.5, -1.0, Double.PositiveInfinity,
+        Double.NegativeInfinity),
+      Gen.chooseNum(-1.0, 1.0).map(s => math.rint(s * 4) / 4))
+    val kGen = Gen.oneOf(Gen.const(0), Gen.chooseNum(1, 12), Gen.const(Int.MaxValue))
+    // (id, score, bitmask of the lists the id lands in — never none)
+    val rowGen = Gen.zip(Gen.chooseNum(0L, 30L), scoreGen, Gen.chooseNum(1, 15))
+    forAll(Gen.listOf(rowGen), kGen) { (raw, k) =>
+      val rows = raw.map { case (id, s, m) => id -> (s, m) }.toMap.toSeq
+      def desc(a: (Long, Double), b: (Long, Double)): Boolean = {
+        val c = java.lang.Double.compare(b._2, a._2)
+        c < 0 || (c == 0 && a._1 < b._1)
+      }
+      def asc(a: (Long, Double), b: (Long, Double)): Boolean = {
+        val c = java.lang.Double.compare(a._2, b._2)
+        c < 0 || (c == 0 && a._1 < b._1)
+      }
+      def bits(xs: Seq[(Long, Double)]) =
+        xs.map { case (id, s) => (id, java.lang.Double.doubleToLongBits(s)) }
+      val all = rows.map { case (id, (s, _)) => (id, s) }
+      val lists = (0 until 4).map(li => rows.collect {
+        case (id, (s, m)) if ((m >> li) & 1) == 1 => (id, s)
+      })
+      val selected = lists.map { l =>
+        val top = TopK.largest(k, l.size)
+        l.foreach { case (id, s) => top.offer(s, id) }
+        top.toSeq
+      }
+      val smallest = {
+        val top = TopK.smallest(k, all.size)
+        all.foreach { case (id, s) => top.offer(s, id) }
+        top.toSeq
+      }
+      // integral scores over a disjoint cover (each id in its lowest list)
+      val longs = (0 until 4).map(li => rows.collect {
+        case (id, (s, m)) if Integer.numberOfTrailingZeros(m) == li =>
+          (id, (s * 4).round)
+      })
+      val longSelected = longs.map { l =>
+        val top = TopK.largest(k, l.size)
+        l.foreach { case (id, s) => top.offerLong(s, id) }
+        top.toLongSeq
+      }
+      val longWant = longs.flatten.sortWith { (a, b) =>
+        a._2 > b._2 || (a._2 == b._2 && a._1 < b._1)
+      }.take(k)
+      Prop(selected.zip(lists).forall { case (got, l) =>
+        bits(got) == bits(l.sortWith(desc).take(k)) }) :| "per-list selection" &&
+        Prop(bits(TopK.merge(selected, k, distinct = true)) ==
+          bits(all.sortWith(desc).take(k))) :| "merge" &&
+        Prop(bits(smallest) == bits(all.sortWith(asc).take(k))) :| "smallest" &&
+        Prop(TopK.mergeLong(longSelected, k) == longWant) :| "long scores"
+    }
+  }
+
   /** The round-4 TopKAgg threshold fast path: any chunking of the input into
     * partial buffers (reduce folds) merged in any grouping must equal
     * sort-take — including the stale-threshold reject and tie handling

@@ -1359,4 +1359,106 @@ class ServeSpec extends SparkSpec {
     assert(mem.topK(q, 5) == want)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
   }
+
+  // ---- oversized limits: a request's `limit` must never size an
+  // allocation or overflow an over-fetch
+
+  test("huge limit: a covered door request with limit 2e9 == the job path's response bytes") {
+    import graft.serve.{MemoryAnnIndex, MemoryServer}
+    val mem = MemoryAnnIndex.fromDataFrame(annAssigned, "vec_id", "embedding",
+      "ivf_cell", annCents)
+    def door(m: Option[MemoryServer]) = new SemanticSearch(annAssigned,
+      HashingTfEmbedder(8), idCol = "vec_id", embCol = "embedding", memory = m)
+    val routedDoor = door(Some(new MemoryServer(mem, None)))
+    val q = annQueries(2)
+    val req = s"""{"query_vector":[${q.mkString(",")}],"columns":["vec_id"],""" +
+      """"limit":2000000000}"""
+    val (routed, covered) = routedDoor.searchRouted(req)
+    assert(covered, "a huge limit must stay on the memory tier")
+    assert(routed.count() == 300)
+    assert(routedDoor.searchResponseJson(req) == door(None).searchResponseJson(req))
+    val viaJson = new MemoryServer(mem, None).search(req)
+    assert(viaJson.split("\"id\"").length - 1 == 300)
+  }
+
+  test("huge limit: the delta tier's base over-fetch saturates instead of overflowing") {
+    import graft.operators.Ann
+    val baseDf = annCorpus.where(col("vec_id") < 250)
+    val base = graft.serve.MemoryAnnIndex.fromDataFrame(
+      Ann.withIvfAssignment(baseDf, "embedding", annCents),
+      "vec_id", "embedding", "ivf_cell", annCents)
+    val delta = new graft.serve.DeltaAnnIndex(base)
+    val added = annCorpus.where(col("vec_id") >= 250)
+      .select("vec_id", "embedding").collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1)))
+    added.foreach { case (id, v) => delta.add(id, v) }
+    Seq(3L, 77L, 260L).foreach(delta.delete)
+    // k + |hidden| used to wrap negative here, dropping the whole base
+    val got = delta.topK(annQueries.head, Int.MaxValue)
+    val want = Ann.topK(annCorpus.where(!col("vec_id").isin(3L, 77L, 260L)),
+        "vec_id", "embedding", annQueries.head, 1000)
+      .select("vec_id", "score").collect()
+      .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    assert(got.size == 297 && got == want)
+  }
+
+  test("huge limit: MRL's k·rerankFactor pool saturates instead of overflowing") {
+    import graft.operators.Ann
+    val mem = graft.serve.MemoryMrlIndex.fromDataFrame(
+      annCorpus, "vec_id", "embedding", prefixDim = 3)
+    // (2^30)·4 wrapped to 0: an empty pool, then a null peek
+    val got = mem.topK(annQueries.head, 1 << 30, rerankFactor = 4)
+    val exact = Ann.topK(annCorpus, "vec_id", "embedding", annQueries.head, 300)
+      .select("vec_id", "score").collect()
+      .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    assert(got == exact)
+  }
+
+  test("NaN scores rank first, as in Spark's descending sort: tier == Ann.topK") {
+    import graft.operators.Ann
+    val withNan = annCorpus.limit(40).unionByName(Seq(
+        (7001L, Float.NaN +: Seq.fill(7)(0.5f)),
+        (7000L, Seq.fill(7)(0.25f) :+ Float.NaN))
+      .toDF("vec_id", "embedding")).localCheckpoint(true)
+    val rows = withNan.collect().map(r => (r.getLong(0), r.getSeq[Float](1), 0)).toSeq
+    val mem = graft.serve.MemoryAnnIndex.fromRows(rows, Seq(Seq.fill(8)(0.0f)))
+    for (q <- annQueries; k <- Seq(1, 3, 42)) {
+      val want = Ann.topK(withNan, "vec_id", "embedding", q, k)
+        .select("vec_id", "score").collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      val got = mem.topK(q, k)
+      assert(got.map(_._1) == want.map(_._1), s"id order differs at k=$k")
+      assert(got.map(g => java.lang.Double.doubleToLongBits(g._2)) ==
+        want.map(w => java.lang.Double.doubleToLongBits(w._2)))
+    }
+    assert(mem.topK(annQueries.head, 2).map(_._1) == Seq(7000L, 7001L))
+  }
+
+  test("delta tier: an all-zero add is refused, as a rebuilt index's loader refuses it") {
+    import graft.serve.{DeltaAnnIndex, MemoryAnnIndex}
+    val base = MemoryAnnIndex.fromRows(Seq((1L, Seq(1.0f, 0.0f), 0)),
+      Seq(Seq(0.0f, 0.0f)))
+    val delta = new DeltaAnnIndex(base)
+    intercept[IllegalArgumentException](delta.add(2L, Seq(0.0f, -0.0f)))
+    intercept[IllegalArgumentException](MemoryAnnIndex.fromRows(
+      Seq((2L, Seq(0.0f, -0.0f), 0)), Seq(Seq(0.0f, 0.0f))))
+    assert(delta.deltaSize == 0)
+    delta.add(2L, Seq(0.0f, 1.0f))
+    assert(delta.topK(Seq(0.0f, 1.0f), 1).map(_._1) == Seq(2L))
+  }
+
+  test("sharded dense build evaluates its input plan once") {
+    import graft.serve.{MemoryAnnIndex, ShardedAnnIndex}
+    val evals = spark.sparkContext.longAccumulator("sharded-build-evals")
+    val tap = udf((id: Long) => { evals.add(1L); id }).asNondeterministic()
+    val counted = annAssigned.withColumn("vec_id", tap(col("vec_id")))
+    val sharded = ShardedAnnIndex.fromDataFrame(counted, "vec_id",
+      "embedding", "ivf_cell", annCents, nShards = 4)
+    assert(evals.value == 300L,
+      s"${evals.value} row evaluations for 300 rows: the input ran more than once")
+    val whole = MemoryAnnIndex.fromDataFrame(annAssigned, "vec_id",
+      "embedding", "ivf_cell", annCents)
+    assert(sharded.nShards == 4 && sharded.size == 300)
+    annQueries.foreach(q => assert(sharded.topK(q, 9) == whole.topK(q, 9)))
+  }
 }
