@@ -2,8 +2,6 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark main: runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints one JSON line of per-query wall seconds.
   *
@@ -14,26 +12,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.maxResultSize", "2g")
-      // AQE's coalescing floor assumes bytes ≈ cost, but LLM-pipeline
-      // operators hang 100×+ per-row fan-outs (shingle explodes, resample
-      // explodes, signature hashing) ABOVE kilobyte-sized shuffles, and the
-      // default 1 MB floor collapsed those reads to ONE partition — measured
-      // r17 on q276: three ~4 s single-task stages over an 850 KB exchange
-      // (the r16 scaling block's 8≈32-core mystery). 256 KB keeps such stages
-      // wide while still letting AQE merge genuinely tiny partitions;
-      // production clusters with 100 MB+ partitions never hit this floor.
-      // Env-overridable so a deployment can restore the default.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE_BYTES", "256k"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.api.GraftSession.getOrCreate()
 
     // Warm the JVM/codegen once on the smallest SF so per-query numbers
     // measure the engine, not first-call JIT + classload.

@@ -2,10 +2,9 @@ package graft.bench
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.api.SemanticSearch
+import graft.api.{GraftSession, SemanticSearch}
 import graft.embed.HashingTfEmbedder
 import graft.operators.{Ann, Bm25}
 
@@ -47,7 +46,6 @@ object ServeBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val repl = sys.env.getOrElse("SPARK_GRAFT_SERVE_REPL", "5").toInt
     val perThread = sys.env.getOrElse("SPARK_GRAFT_SERVE_REQS", "16").toInt
     val levels = sys.env.getOrElse("SPARK_GRAFT_SERVE_LEVELS", "1,8,16,32")
@@ -65,15 +63,11 @@ object ServeBench {
         // their caller stream's subsequent jobs
         :+ """<pool name="graft-fallback"><schedulingMode>FAIR</schedulingMode><weight>1</weight><minShare>0</minShare></pool>""")
         .mkString("<?xml version=\"1.0\"?><allocations>", "", "</allocations>"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = GraftSession.builder()
       // FAIR + one pool per client thread: concurrent requests share the
       // cluster instead of queueing FIFO behind each other's jobs
       .config("spark.scheduler.mode", "FAIR")
       .config("spark.scheduler.allocation.file", poolsXml.toString)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -715,7 +709,7 @@ object ServeBench {
     }
 
     val line =
-      s"""{"metric":"serve_bench","sf":"$sfDir","docs":$nDocs,"dim":$dim,"replicas":$repl,"per_thread_requests":$perThread,"cpus":$cpus,"results":[${results.mkString(",")}]}"""
+      s"""{"metric":"serve_bench","sf":"$sfDir","docs":$nDocs,"dim":$dim,"replicas":$repl,"per_thread_requests":$perThread,"cpus":${GraftSession.cpus},"results":[${results.mkString(",")}]}"""
     println(line)
     // a PATH-SUBSET run must not clobber the full battery file (the
     // FullScaleBench rule): splice the re-measured paths' cells into the

@@ -235,6 +235,18 @@ final class FleetClient(ports: Seq[Int], host: String = "127.0.0.1",
   def close(): Unit = conns.foreach(_.kill())
 }
 
+/** The fleet as the HYBRID door's serving tier: one [[FleetProtocol
+  * .OpHybrid]] frame per shard carries both legs, the client merges each
+  * leg to poolK and RRF-fuses locally — [[FleetClient.hybrid]] replays
+  * [[ShardedHybridServer]]'s fold exactly, so the door's results stay
+  * bit-identical to the in-process fan-out (FleetBench REQUIRES it).
+  */
+final class FleetHybridTier(client: FleetClient) extends HybridTier {
+  def searchHybrid(qvec: Seq[Float], terms: Seq[String], k: Int,
+                   poolK: Int = 20, c: Int = 60): Seq[(Long, Double)] =
+    client.hybrid(qvec, terms, k, poolK, c)
+}
+
 /** The FLEET as a routed-front-door serving tier — what lets the real
   * [[graft.api.SemanticSearch]] front door (JSON parse → coverage route →
   * serve/fallback → stringify) run its covered path over shard PROCESSES
@@ -252,18 +264,6 @@ final class FleetClient(ports: Seq[Int], host: String = "127.0.0.1",
   * shard runs the same scan fold, the disjoint-slice merge is exact, and
   * the door stringifies the same way.
   */
-/** The fleet as the HYBRID door's serving tier: one [[FleetProtocol
-  * .OpHybrid]] frame per shard carries both legs, the client merges each
-  * leg to poolK and RRF-fuses locally — [[FleetClient.hybrid]] replays
-  * [[ShardedHybridServer]]'s fold exactly, so the door's results stay
-  * bit-identical to the in-process fan-out (FleetBench REQUIRES it).
-  */
-final class FleetHybridTier(client: FleetClient) extends HybridTier {
-  def searchHybrid(qvec: Seq[Float], terms: Seq[String], k: Int,
-                   poolK: Int = 20, c: Int = 60): Seq[(Long, Double)] =
-    client.hybrid(qvec, terms, k, poolK, c)
-}
-
 final class FleetTier(client: FleetClient,
                       meta: Option[MemoryAnnIndex] = None)
   extends ServingTier {

@@ -121,12 +121,3 @@ final class PooledFleetTier(door: FleetDoor,
     door.withClient(_.dense(qvec, k))
   }
 }
-
-/** The pooled twin of [[FleetHybridTier]] — one checkout per hybrid
-  * request, same exact fold.
-  */
-final class PooledFleetHybridTier(door: FleetDoor) extends HybridTier {
-  def searchHybrid(qvec: Seq[Float], terms: Seq[String], k: Int,
-                   poolK: Int = 20, c: Int = 60): Seq[(Long, Double)] =
-    door.withClient(_.hybrid(qvec, terms, k, poolK, c))
-}

@@ -142,22 +142,6 @@ final class MemoryHnswIndex private (
   }
 }
 
-/** Fan-out serving over per-shard HNSW graphs (the [[MemoryHnswIndex
-  * .buildSharded]] artifact): each shard walks its own graph with the
-  * same `ef`, the k-bounded lists merge by [[TopK.merge]]. A deployment
-  * puts shards on separate replicas; this in-process form IS that merge,
-  * minus the network.
-  */
-final class ShardedHnswIndex private[serve] (val shards: Seq[MemoryHnswIndex]) {
-
-  require(shards.nonEmpty, "ShardedHnswIndex: no shards")
-  def nShards: Int = shards.length
-  def size: Int = shards.map(_.size).sum
-
-  def topK(query: Seq[Float], k: Int, ef: Int = 0): Seq[(Long, Double)] =
-    TopK.merge(shards.map(_.topK(query, k, ef)), k)
-}
-
 object MemoryHnswIndex {
 
   /** The one beam search (Algorithm 2) BOTH the serve path and the
@@ -292,110 +276,6 @@ object MemoryHnswIndex {
     val links = collected.map(_._3.map(_.map(rowOf).toArray).toArray)
     val entryRow = rowOf(entryId)
     new MemoryHnswIndex(dim, ids, vecs, entryRow, topLevel, links)
-  }
-
-  /** Reconstruct from stored parts (the sharded loader's path): levels
-    * are implicit in each node's links length; the entry point is
-    * recomputed by the build's own rule — the lowest id among nodes at
-    * the maximum level (inserts are id-ascending and the entry only
-    * moves when a node EXCEEDS the current top, so the first node to
-    * reach the final top holds the entry; determinism makes the rule
-    * recomputable instead of stored).
-    */
-  private[serve] def fromParts(ids: Array[Long], vecs: Array[Float],
-                               dim: Int,
-                               links: Array[Array[Array[Int]]]): MemoryHnswIndex = {
-    require(ids.nonEmpty)
-    var top = -1
-    var entry = 0
-    var r = 0
-    while (r < ids.length) {
-      val l = links(r).length - 1
-      if (l > top) { top = l; entry = r }
-      r += 1
-    }
-    new MemoryHnswIndex(dim, ids, vecs, entry, top, links)
-  }
-
-  /** DISTRIBUTED graph build — the 100 TB posture for HNSW: one graph
-    * per SHARD, built inside `mapPartitions` (each task runs the same
-    * deterministic single-shard [[build]] over its hash-assigned rows —
-    * the O(n·efC·M) distance work parallelizes across the cluster, the
-    * driver never sees a vector), persisted as a `partitionBy(shard)`
-    * parquet with a `_hnsw_meta.json` sidecar written LAST. Serving
-    * loads the shards ([[loadSharded]]) and answers by fan-out + k-bounded
-    * merge — the same shard-and-merge contract as [[MemoryAnnIndex]]'s
-    * scale note, except the per-shard cost is a graph walk, not a scan.
-    * Hash sharding by id keeps shards balanced and the assignment
-    * reproducible; each shard's graph is bit-deterministic, so the whole
-    * artifact is.
-    */
-  def buildSharded(df: org.apache.spark.sql.DataFrame, idCol: String,
-                   embCol: String, nShards: Int, dir: String,
-                   m: Int = 16, efConstruction: Int = 100): Unit = {
-    require(nShards >= 1)
-    val spark = df.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val mm = m; val efc = efConstruction // serializable copies
-    val graphRows = df
-      .select(col(idCol).cast("long"), col(embCol))
-      .repartition(nShards, col(idCol))
-      .as[(Long, Seq[Float])]
-      .mapPartitions { it =>
-        val rows = it.toVector
-        if (rows.isEmpty) Iterator.empty
-        else {
-          val shard = org.apache.spark.TaskContext.getPartitionId()
-          val idx = build(rows, mm, efc)
-          (0 until idx.size).iterator.map { r =>
-            (shard, idx.idAt(r), idx.vecAt(r),
-              idx.linksAt(r).map(_.map(idx.idAt).toSeq).toSeq)
-          }
-        }
-      }
-      .toDF("shard", "vec_id", "embedding", "links")
-    graphRows.write.mode("overwrite").partitionBy("shard").parquet(dir)
-    val dim = df.select(col(embCol)).head().getSeq[Float](0).size
-    val meta = s"""{"dim":$dim,"n_shards":$nShards,"m":$m,"ef_construction":$efConstruction}"""
-    val p = new org.apache.hadoop.fs.Path(dir, "_hnsw_meta.json")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(p, true)
-    out.write(meta.getBytes("UTF-8")); out.close()
-  }
-
-  /** Load a [[buildSharded]] artifact into the fan-out serving form. */
-  def loadSharded(spark: org.apache.spark.sql.SparkSession,
-                  dir: String): ShardedHnswIndex = {
-    import org.apache.spark.sql.functions.col
-    val p = new org.apache.hadoop.fs.Path(dir, "_hnsw_meta.json")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(p), s"no _hnsw_meta.json sidecar at $dir — incomplete graph artifact")
-    val byShard = spark.read.parquet(dir)
-      .select(col("shard").cast("int"), col("vec_id"), col("embedding"),
-        col("links"))
-      .collect()
-      .map(r => (r.getInt(0), (r.getLong(1), r.getSeq[Float](2),
-        r.getSeq[scala.collection.Seq[Long]](3).map(_.toSeq))))
-      .groupBy(_._1)
-    val shards = byShard.toSeq.sortBy(_._1).map { case (_, rows) =>
-      val sorted = rows.map(_._2).sortBy(_._1)
-      val n = sorted.length
-      val dim = sorted.head._2.length
-      val ids = sorted.map(_._1)
-      val vecs = new Array[Float](n * dim)
-      var r = 0
-      while (r < n) {
-        val v = sorted(r)._2
-        var j = 0
-        while (j < dim) { vecs(r * dim + j) = v(j); j += 1 }
-        r += 1
-      }
-      val rowOf = ids.zipWithIndex.toMap
-      val links = sorted.map(_._3.map(_.map(rowOf).toArray).toArray)
-      fromParts(ids, vecs, dim, links)
-    }
-    new ShardedHnswIndex(shards)
   }
 
   /** splitmix64 — the deterministic per-id level source. */

@@ -500,7 +500,7 @@ object MemoryAnnIndex {
   *
   * String-metadata caveat: dictionaries are per-shard (codes depend on
   * the shard's value set), so string filters must resolve per shard —
-  * use [[stringEqFilter]], never a single shard's [[MemoryAnnIndex.stringFilter]]
+  * use [[topKStringEq]], never a single shard's [[MemoryAnnIndex.stringFilter]]
   * code against the others.
   */
 final class ShardedAnnIndex private[serve] (val shards: Seq[MemoryAnnIndex]) {
@@ -529,10 +529,6 @@ final class ShardedAnnIndex private[serve] (val shards: Seq[MemoryAnnIndex]) {
                    numericFilters: Seq[MetaFilter] = Nil): Seq[(Long, Double)] =
     merge(k, sh => sh.topK(query, k,
       sh.stringFilter(colName, value) +: numericFilters))
-
-  /** Per-shard string @eq filters, index-aligned with [[shards]]. */
-  def stringEqFilter(colName: String, value: String): Seq[MetaFilter] =
-    shards.map(_.stringFilter(colName, value))
 }
 
 object ShardedAnnIndex {

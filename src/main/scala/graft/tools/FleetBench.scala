@@ -4,10 +4,9 @@ import java.io.{BufferedOutputStream, DataOutputStream}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.api.{FallbackGate, SemanticSearch}
+import graft.api.{FallbackGate, GraftSession, SemanticSearch}
 import graft.embed.HashingTfEmbedder
 import graft.operators.{Bm25, Sparse}
 import graft.serve.{FleetClient, FleetTier, MemoryServer, ShardedAnnIndex, ShardedHybridServer, ShardedPostingsIndex, ShardedSparseIndex}
@@ -84,7 +83,6 @@ object FleetBench {
     // one bounded wait. The kill row doesn't depend on it: a SIGKILLed
     // process resets its sockets immediately.
     val timeoutMs = sys.env.getOrElse("SPARK_GRAFT_FLEET_TIMEOUT_MS", "15000").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // the FAIR pools the composed door's admission runs under (one pool
     // per client stream + the FallbackGate's dedicated pool) — the same
     // declared-allocation setup as ServeBench
@@ -94,13 +92,9 @@ object FleetBench {
         s"""<pool name="serve-$i"><schedulingMode>FIFO</schedulingMode><weight>1</weight><minShare>1</minShare></pool>""")
         :+ """<pool name="graft-fallback"><schedulingMode>FAIR</schedulingMode><weight>1</weight><minShare>0</minShare></pool>""")
         .mkString("<?xml version=\"1.0\"?><allocations>", "", "</allocations>"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = GraftSession.builder()
       .config("spark.scheduler.mode", "FAIR")
       .config("spark.scheduler.allocation.file", poolsXml.toString)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -895,7 +889,7 @@ object FleetBench {
 
       val allResults = results ++ extraRows.filter(_.contains("\"path\""))
       val line =
-        s"""{"metric":"fleet_bench","sf":"$sfDir","replicas":$repl,"shards":$nShards,"dense_docs":${denseRows.length},"lex_docs":${dstats.getLong(1)},"dim":$dim,"cpus":$cpus,"pinned":$pinned,"results":[${allResults.mkString(",")}]}"""
+        s"""{"metric":"fleet_bench","sf":"$sfDir","replicas":$repl,"shards":$nShards,"dense_docs":${denseRows.length},"lex_docs":${dstats.getLong(1)},"dim":$dim,"cpus":${GraftSession.cpus},"pinned":$pinned,"results":[${allResults.mkString(",")}]}"""
       println(line)
       val fleetOut = if (pinned) "FLEET_BENCH_PINNED.json" else "FLEET_BENCH.json"
       try java.nio.file.Files.writeString(

@@ -1,7 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.api.GraftSession
 
 /** FULL-SURFACE Nx scale bench: times EVERY SparkEntry query at 1x
   * (`baseDir`) and at Nx (a replicated corpus), and reports per-query
@@ -59,15 +61,7 @@ object FullScaleBench {
     val shards = if (args.length > 1) args(1).toInt else 10
     val workDir = if (args.length > 2) args(2) else "/tmp/graft-scale-full"
     val only = args.drop(3).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.maxResultSize", "2g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.getOrCreate()
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     // ---- build the Nx corpus once (marker-guarded; BUILT1 versions the

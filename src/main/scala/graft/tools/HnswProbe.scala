@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.api.GraftSession
 
 /** Driver-side cost breakdown of the q298 bounded-delta HNSW fold chain:
   * times the base build, the per-fold republishes, the visibility topK
@@ -11,9 +12,7 @@ import org.apache.spark.sql.functions._
 object HnswProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.getOrCreate()
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
     val baseRows = emb.where(pmod(col("vec_id"), lit(5)) =!= 0)

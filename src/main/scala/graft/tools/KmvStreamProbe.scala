@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.api.GraftSession
+
 /** Phase attribution for q178 (streaming KMV accumulate), whose 10×
   * time ratio (6.7× at constant output) was the worst constant-output
   * number in the battery. The sketch state is k longs per source — the
@@ -83,14 +85,7 @@ object KmvStreamProbe {
     val baseDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val bigDocs = if (args.length > 1) args(1)
       else "/tmp/graft-scale-full/documents.parquet"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.getOrCreate()
     val scales = Seq(
       "1x" -> spark.read.parquet(s"$baseDir/documents.parquet")) ++
       (if (new java.io.File(bigDocs).exists())

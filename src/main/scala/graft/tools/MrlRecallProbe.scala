@@ -2,9 +2,10 @@ package graft.tools
 
 import org.apache.spark.ml.feature.PCA
 import org.apache.spark.ml.linalg.{DenseMatrix, Vectors}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.api.GraftSession
 import graft.operators.Ann
 
 /** The matryoshka tier's ENVELOPE, demonstrated instead of caveated —
@@ -122,14 +123,7 @@ object MrlRecallProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val k = if (args.length > 1) args(1).toInt else 10
     val nQ = if (args.length > 2) args(2).toInt else 32
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.getOrCreate()
     val prefixes = Seq(8, 16, 32)
 
     val iso = spark.read.parquet(s"$sfDir/embeddings.parquet")

@@ -1,8 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.api.GraftSession
 import graft.operators.{Ann, Bm25, Sparse}
 import graft.serve.{MemoryAnnIndex, MemoryPostingsIndex, MemorySparseIndex, MetaFilter}
 
@@ -40,14 +41,7 @@ object PruneRecallProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val repls = (if (args.length > 1) args(1) else "1,10")
       .split(",").map(_.trim.toInt).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.getOrCreate()
 
     val termSets = Seq(
       Seq("dup", "vector", "query"), Seq("dup", "stream"),

@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.api.GraftSession
 import graft.operators.{Bm25, Forget}
 import graft.serve.{DeltaPostingsIndex, MemoryPostingsIndex}
 
@@ -43,14 +43,7 @@ object RepublishProbe {
     val repls = (if (args.length > 1) args(1) else "1,10")
       .split(",").map(_.trim.toInt).toSeq
     val purgeEvery = if (args.length > 2) args(2).toInt else 13
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.getOrCreate()
 
     val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")
     val stride = docs0.agg(max("doc_id")).head().getLong(0) + 1
@@ -133,7 +126,7 @@ object RepublishProbe {
     }
 
     val line =
-      s"""{"metric":"purge_republish","sf":"$sfDir","cpus":$cpus,"results":[${cells.mkString(",")}]}"""
+      s"""{"metric":"purge_republish","sf":"$sfDir","cpus":${GraftSession.cpus},"results":[${cells.mkString(",")}]}"""
     println(line)
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("REPUBLISH.json"), line + "\n")

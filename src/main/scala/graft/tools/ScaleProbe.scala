@@ -1,7 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.api.GraftSession
 
 /** 10x-scale probe: replicates the sf0.1 tables into a MULTI-FILE corpus
   * (disjoint id ranges per shard) and times the shuffle-heavy operator
@@ -35,14 +37,7 @@ object ScaleProbe {
     val baseDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val shards = if (args.length > 1) args(1).toInt else 10
     val workDir = if (args.length > 2) args(2) else "/tmp/graft-scale10"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.getOrCreate()
 
     // ---- build the sharded corpus (once; reuse across runs). The marker
     // file records a COMPLETED build at this shard count AND base corpus —

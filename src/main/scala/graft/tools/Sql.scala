@@ -1,24 +1,16 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.api.GraftSession
 
 /** SQL entry point: `runMain graft.tools.Sql <sfDir> "<query>"` — builds a
-  * session with [[graft.api.GraftExtensions]] injected, registers every
-  * testdata table as a view, runs the query, prints up to 20 rows. The
-  * spark.sql surface of the engine.
+  * [[GraftSession]] (so [[graft.api.GraftExtensions]] is injected),
+  * registers every testdata table as a view, runs the query, prints up to
+  * 20 rows. The spark.sql surface of the engine.
   */
 object Sql {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, query) = args.take(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.api.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.getOrCreate()
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "documents", "embeddings").foreach { t =>
       val p = s"$sfDir/$t.parquet"

@@ -172,43 +172,6 @@ class HnswSpec extends SparkSpec {
       s"needle filter missed: $got1")
   }
 
-  test("sharded build: distributed mapPartitions graphs, disjoint cover, deterministic fan-out merge") {
-    import spark.implicits._
-    val rows = clustered(500, 16, 5)
-    val df = rows.toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("graft-hnsw-shard").toString
-    MemoryHnswIndex.buildSharded(df, "vec_id", "embedding", nShards = 4,
-      dir, m = 8, efConstruction = 40)
-    val idx = MemoryHnswIndex.loadSharded(spark, dir)
-    assert(idx.nShards >= 2 && idx.nShards <= 4) // hash may leave a shard empty
-    assert(idx.size == rows.length, "shards must cover every row exactly once")
-    // recall vs brute force: per-shard walks + merge, clustered regime
-    val recalls = (0 until 8).map { qi =>
-      val q = Seq.tabulate(16)(j => (math.sin(qi * 97 + j * 13) + 0.05).toFloat)
-      val want = bruteTopK(rows, q, 10).map(_._1).toSet
-      val got = idx.topK(q, 10, ef = 40).map(_._1).toSet
-      got.intersect(want).size / 10.0
-    }
-    val mean = recalls.sum / recalls.length
-    assert(mean >= 0.9, s"sharded recall@10: $mean")
-    // determinism: a rebuilt artifact answers bit-identically
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-hnsw-shard2").toString
-    MemoryHnswIndex.buildSharded(df, "vec_id", "embedding", nShards = 4,
-      dir2, m = 8, efConstruction = 40)
-    val idx2 = MemoryHnswIndex.loadSharded(spark, dir2)
-    (0 until 5).foreach { qi =>
-      val q = Seq.tabulate(16)(j => math.cos(qi * 5 + j * 3).toFloat)
-      assert(idx.topK(q, 10, ef = 40) == idx2.topK(q, 10, ef = 40),
-        "sharded artifact not deterministic")
-    }
-    // merged scores are still the exact pinned fold
-    val q = Seq.tabulate(16)(j => math.cos(j * 3).toFloat)
-    val exactById = bruteTopK(rows, q, rows.length).toMap
-    idx.topK(q, 8, ef = 40).foreach { case (id, s) =>
-      assert(s == exactById(id), s"merged score for $id is not the exact fold")
-    }
-  }
-
   test("structural invariants: degree caps, nested levels, layer-0 connectivity") {
     val rows = clustered(400, 16, 5)
     val m = 8

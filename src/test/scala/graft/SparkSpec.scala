@@ -12,16 +12,12 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  lazy val session: SparkSession = graft.api.GraftSession.builder(4)
     .appName("graft-test")
     // FAIR so ServeSpec can assert pool isolation; harmless elsewhere
     // (sequential jobs in the default pool schedule exactly as FIFO)
     .config("spark.scheduler.mode", "FAIR")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 }
