@@ -22,11 +22,13 @@ import org.apache.spark.sql.SparkSession
   *    shares the cluster under FAIR weighting instead of FIFO-blocking
   *    jobs of other streams on the same thread.
   *
-  * Use with [[SemanticSearch.searchRouted]]: a covered request's frame
-  * is a driver-local relation (collect immediately); an uncovered one's
-  * collect goes through [[admit]]. The scheduler-pool local property is
-  * saved and restored around the body, so client threads keep their own
-  * pools for subsequent covered work.
+  * Use with [[SemanticSearch.searchRouted]]. A covered request needs no
+  * permit: it does no Spark work ([[SemanticSearch.searchResponseJson]]
+  * writes its bytes straight from the tier, and its routed frame is a
+  * driver-local relation). An uncovered request (route bit `false`) is
+  * collected inside [[admit]]. The scheduler-pool local property is saved
+  * and restored around the body, so client threads keep their own pools
+  * for subsequent covered work.
   */
 final class FallbackGate(val pool: String = "graft-fallback",
                          val maxConcurrent: Int = 2) {

@@ -1,14 +1,14 @@
 package graft.api
 
-import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 import scala.jdk.CollectionConverters._
 
 import graft.operators.{Ann, Bm25}
-import graft.serve.MemoryServer
+import graft.serve.{MemoryServer, Request}
 
 /** The HYBRID front door: one JSON request carrying both retrieval legs —
   * a pre-embedded dense query and lexical terms — fused by reciprocal
@@ -58,8 +58,6 @@ final class HybridSearch(index: DataFrame, idCol: String, embCol: String,
                          memory: Option[MemoryServer] = None,
                          sharded: Option[graft.serve.HybridTier] = None) {
 
-  private val mapper = new ObjectMapper()
-
   /** Typed entry: both legs pooled `poolK` deep, RRF-fused to `k`. */
   def hybridTopK(qvec: Seq[Float], terms: Seq[String], k: Int,
                  poolK: Int = 20, c: Int = 60): DataFrame = {
@@ -75,42 +73,26 @@ final class HybridSearch(index: DataFrame, idCol: String, embCol: String,
   }
 
   /** JSON request in, `(id, rrf)` DataFrame out — routed onto the memory
-    * tier when one is attached, the job path otherwise.
+    * tier when one is attached, the job path otherwise. `limit`, `pool_k`
+    * and `c` follow [[Request]]'s integer rule on both routes.
     */
   def search(requestJson: String): DataFrame = {
-    val req = mapper.readTree(requestJson)
-    val k = Option(req.get("limit")).map(_.asInt()).getOrElse(10)
-    val poolK = Option(req.get("pool_k")).map(_.asInt()).getOrElse(20)
-    val c = Option(req.get("c")).map(_.asInt()).getOrElse(60)
-    val qv = Option(req.get("query_vector")).filter(_.isArray)
-      .map(_.elements().asScala.map(_.floatValue()).toSeq)
-      .getOrElse(throw new IllegalArgumentException(
-        "hybrid request needs 'query_vector' (pre-embedded dense leg)"))
-    val terms = Option(req.get("terms")).filter(_.isArray)
-      .map(_.elements().asScala.map(_.asText()).toSeq)
-      .getOrElse(throw new IllegalArgumentException(
-        "hybrid request needs 'terms' (lexical leg)"))
-    val served: Option[Seq[(Long, Double)]] =
-      memory.filter(m => m.servesExactDense && m.hasLexical)
-        .map(mem =>
-          if (k <= 0) Seq.empty[(Long, Double)]
-          else mem.searchHybrid(qv, terms, k, poolK, c))
-        .orElse(sharded.map(sh =>
-          if (k <= 0) Seq.empty[(Long, Double)]
-          else sh.searchHybrid(qv, terms, k, poolK, c)))
-    served match {
+    val req = Request.parse(requestJson)
+    val k = req.limit.getOrElse(10)
+    val poolK = req.int("pool_k").getOrElse(20)
+    val c = req.int("c").getOrElse(60)
+    val qv = req.vector.getOrElse(throw new IllegalArgumentException(
+      "hybrid request needs 'query_vector' (pre-embedded dense leg)"))
+    val terms = req.strings("terms").getOrElse(throw new IllegalArgumentException(
+      "hybrid request needs 'terms' (lexical leg)"))
+    val tier: Option[graft.serve.HybridTier] =
+      memory.filter(m => m.servesExactDense && m.hasLexical).orElse(sharded)
+    tier.map(t => if (k == 0) Nil else t.searchHybrid(qv, terms, k, poolK, c)) match {
       case Some(hits) =>
-        val rows = hits.map { case (id, rrf) =>
-          org.apache.spark.sql.Row(id, rrf)
-        }
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("rrf",
-            org.apache.spark.sql.types.DoubleType)))
+        val schema = StructType(Seq(
+          StructField("id", LongType), StructField("rrf", DoubleType)))
         index.sparkSession.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](rows.asJava),
-          schema)
+          hits.map { case (id, rrf) => Row(id, rrf) }.asJava, schema)
       case None => hybridTopK(qv, terms, k, poolK, c)
     }
   }

@@ -1,8 +1,9 @@
 package graft.api
 
-import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.{Column, DataFrame}
+import com.fasterxml.jackson.databind.JsonNode
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import scala.jdk.CollectionConverters._
 
@@ -10,6 +11,7 @@ import graft.embed.Embedder
 import graft.filter.FilterDsl
 import graft.functions.VectorFunctions._
 import graft.operators.Ann
+import graft.serve.{Request, ResponseJson}
 
 /** The engine's semantic-search entry point — the Spark re-expression of both
   * reference query paths:
@@ -35,10 +37,13 @@ import graft.operators.Ann
   *                  in-process [[graft.serve.MemoryServer]] or the
   *                  multi-process shard fleet ([[graft.serve.FleetTier]]):
   *                  when a JSON request is fully covered by it (columns +
-  *                  filter ops — see [[search]]), the front door serves
-  *                  job-free from the tier instead of launching a Spark
-  *                  job; anything not covered falls back to the DataFrame
-  *                  path. Results are bit-identical either way (ServeSpec
+  *                  filter ops — see [[memoryServed]]), the front door
+  *                  serves from the tier with no Spark work at all:
+  *                  [[searchResponseJson]] writes the tier's hits straight
+  *                  to response bytes, and [[search]] wraps them in a
+  *                  driver-local relation. Anything not covered falls back
+  *                  to the DataFrame path (plan, job, `to_json`). Results
+  *                  and response bytes are identical either way (ServeSpec
   *                  pins the memory tier; FleetBench REQUIRES it of the
   *                  fleet at warm-up) — only the latency differs.
   * @param ivfFallback optional EXPLICIT recall/latency trade for the
@@ -71,8 +76,6 @@ final class SemanticSearch(index: DataFrame, embedder: Embedder,
                            memory: Option[graft.serve.ServingTier] = None,
                            ivfFallback: Option[SemanticSearch.IvfFallback] = None) {
 
-  private val mapper = new ObjectMapper()
-
   /** Typed top-k: score = cosine(query embedding, row embedding). */
   def topK(query: String, k: Int, filter: Column = lit(true)): DataFrame =
     topKVec(embedder.embed(query).toSeq, k, filter)
@@ -104,51 +107,81 @@ final class SemanticSearch(index: DataFrame, embedder: Embedder,
     * Requests carry either `query` (text, embedded via [[Embedder]]) or
     * `query_vector` (a pre-embedded float array — the Method-2 stored-vector
     * analog, `02:204-227`; this is also the deterministic path the driver
-    * oracle exercises, since text scores are embedder-relative).
+    * oracle exercises, since text scores are embedder-relative). The
+    * request is parsed once into a [[graft.serve.Request]], whose `limit`
+    * rule is the same on both routes.
     */
   def search(requestJson: String): DataFrame = searchRouted(requestJson)._1
 
   /** [[search]] plus the ROUTE taken: `true` = the memory tier covered
-    * the request and the returned frame is a driver-local relation
-    * (collecting runs no job); `false` = collecting runs a Spark job
-    * (the exact flat scan, or the IVF probe when [[ivfFallback]] is
-    * set). A deployment that must stay exact routes the uncovered
-    * collect through a [[FallbackGate]] — the documented admission
-    * default (class doc; measured in ServeBench's `*_admitted` rows).
+    * the request, and the frame is a thin adapter over the tier's rows
+    * (a driver-local relation: collecting runs no job); `false` =
+    * collecting runs a Spark job (the exact flat scan, or the IVF probe
+    * when [[ivfFallback]] is set). A deployment that must stay exact
+    * routes the uncovered collect through a [[FallbackGate]] — the
+    * documented admission default (class doc; measured in ServeBench's
+    * `*_admitted` rows). A caller that wants the response bytes calls
+    * [[searchResponseJson]], which builds no frame for a covered request.
     */
-  def searchRouted(requestJson: String): (DataFrame, Boolean) = {
-    val req = mapper.readTree(requestJson)
-    val k = Option(req.get("limit")).map(_.asInt()).getOrElse(5)
-    val cols: Seq[String] = Option(req.get("columns"))
-      .map(_.elements().asScala.map(_.asText()).toSeq)
-      .getOrElse(index.columns.filterNot(_ == embCol).toSeq)
-    // an explicit JSON null (a client serializing the unused optional
-    // field) must fall through to the text path, not read as empty vector
-    val qvec: Option[Seq[Float]] =
-      Option(req.get("query_vector")).filter(_.isArray)
-        .map(_.elements().asScala.map(_.floatValue()).toSeq)
-        .orElse {
-          val query = Option(req.get("query")).map(_.asText()).getOrElse(
-            throw new IllegalArgumentException(
-              "request needs 'query' or 'query_vector'"))
-          Some(embedder.embed(query).toSeq)
-        }
-    memoryServed(req, qvec.get, k, cols).map((_, true)).getOrElse {
-      val filter = FilterDsl.compileRequestFilter(requestJson).getOrElse(lit(true))
+  def searchRouted(requestJson: String): (DataFrame, Boolean) =
+    route(requestJson) match {
+      case (cols, Left(rows)) =>
+        val schema = StructType(cols.map(StructField(_, StringType)))
+        (index.sparkSession.createDataFrame(
+          rows.map(Row.fromSeq).asJava, schema), true)
+      case (_, Right(frame)) => (frame, false)
+    }
+
+  /** Byte-shaped Method-1 response: `{"results": [{col: string-value}]}`.
+    * A covered request goes from the tier's hits straight to the response
+    * bytes ([[graft.serve.ResponseJson]]): no frame, no plan, no job. Only
+    * an uncovered one plans and collects `to_json` over the Spark path;
+    * both write the same bytes.
+    */
+  def searchResponseJson(requestJson: String): String =
+    route(requestJson) match {
+      case (cols, Left(rows)) => ResponseJson.rows(cols, rows)
+      case (_, Right(frame)) => ResponseJson.rendered(
+        frame.select(to_json(struct(col("*")))).collect().map(_.getString(0)).toSeq)
+    }
+
+  // the index's schema, read once: coverage and the default column set
+  // come from it without touching the session per request
+  private lazy val schema = index.schema
+
+  /** Parse once and pick the route: the requested columns, then either
+    * the covered rows' stringified values or the uncovered request's
+    * Spark plan.
+    */
+  private def route(requestJson: String)
+      : (Seq[String], Either[Seq[Seq[String]], DataFrame]) = {
+    val req = Request.parse(requestJson)
+    val k = req.limit.getOrElse(5)
+    val cols = req.columns.getOrElse(schema.fieldNames.filterNot(_ == embCol).toSeq)
+    val qv = req.vector.getOrElse(embedder.embed(req.text.getOrElse(
+      throw new IllegalArgumentException(
+        "request needs 'query' or 'query_vector'"))).toSeq)
+    (cols, memoryServed(req.filter, qv, k, cols).toLeft {
+      val filter = Option(req.filter).map(FilterDsl.toColumn).getOrElse(lit(true))
       // the opted-in approximate fallback: conjoin the IVF cell probe —
       // with the index persisted partitionBy(cellCol), the isin() is
       // partition pruning and the fallback job reads ~nProbe/nCells of
       // the corpus instead of all of it
       val probed = ivfFallback.map { fb =>
-        val cells = Ann.probeCellsFor(fb.centroids, qvec.get, fb.nProbe)
+        val cells = Ann.probeCellsFor(fb.centroids, qv, fb.nProbe)
         filter && col(fb.cellCol).isin(cells: _*)
       }.getOrElse(filter)
-      (topKVec(qvec.get, k, probed)
-        .select(cols.map(c => col(c).cast("string").as(c)): _*), false)
-    }
+      topKVec(qv, k, probed).select(cols.map(c => col(c).cast("string").as(c)): _*)
+    })
   }
 
-  /** The routed front door: serve the request from the attached memory
+  // string/integral columns round-trip the memory tier's long/dict
+  // encoding to the exact strings the Spark path's CAST emits; a
+  // float/decimal column (values OR filters) would not — fall back
+  private val exactTypes =
+    Set[DataType](LongType, IntegerType, ShortType, ByteType, StringType)
+
+  /** The covered route: serve the request from the attached memory
     * tier when it COVERS it, `None` (→ the Spark job path) otherwise.
     * Coverage =
     *  - a memory server is attached AND serves dense requests EXACTLY
@@ -165,49 +198,21 @@ final class SemanticSearch(index: DataFrame, embedder: Embedder,
     * The served rows are bit-identical to the job path's: same scoring
     * fold, same (score DESC, id ASC) order, same stringified values.
     */
-  private def memoryServed(req: com.fasterxml.jackson.databind.JsonNode,
-                           qv: Seq[Float], k: Int,
-                           cols: Seq[String]): Option[DataFrame] =
+  private def memoryServed(filter: JsonNode, qv: Seq[Float], k: Int,
+                           cols: Seq[String]): Option[Seq[Seq[String]]] =
     memory.filter(_.servesExactDense).flatMap { mem =>
-      // string/integral columns round-trip the memory tier's long/dict
-      // encoding to the exact strings the Spark path's CAST emits; a
-      // float/decimal column (values OR filters) would not — fall back
-      val exact = Set[org.apache.spark.sql.types.DataType](
-        org.apache.spark.sql.types.LongType,
-        org.apache.spark.sql.types.IntegerType,
-        org.apache.spark.sql.types.ShortType,
-        org.apache.spark.sql.types.ByteType,
-        org.apache.spark.sql.types.StringType)
       def servable(c: String): Boolean =
         mem.metaColumns.contains(c) &&
-          index.schema.find(_.name == c).exists(f => exact(f.dataType))
-      mem.tryParseFilter(req.get("filter")).flatMap { dnf =>
-        val covered = cols.forall(c => c == idCol || servable(c)) &&
-          dnf.flatten.map(_.col).forall(servable)
-        if (!covered) None
-        else {
-          val hits = if (k <= 0) Nil else mem.topKVecDnf(qv, k, dnf)
-          val rows = hits.map { case (id, _) =>
-            org.apache.spark.sql.Row.fromSeq(cols.map(c =>
-              if (c == idCol) id.toString else mem.metaString(c, id)))
+          schema.find(_.name == c).exists(f => exactTypes(f.dataType))
+      mem.tryParseFilter(filter).collect {
+        case dnf if cols.forall(c => c == idCol || servable(c)) &&
+            dnf.flatten.map(_.col).forall(servable) =>
+          val hits = if (k == 0) Nil else mem.topKVecDnf(qv, k, dnf)
+          hits.map { case (id, _) =>
+            cols.map(c => if (c == idCol) id.toString else mem.metaString(c, id))
           }
-          val schema = org.apache.spark.sql.types.StructType(cols.map(c =>
-            org.apache.spark.sql.types.StructField(c,
-              org.apache.spark.sql.types.StringType)))
-          Some(index.sparkSession.createDataFrame(
-            new java.util.ArrayList[org.apache.spark.sql.Row](rows.asJava),
-            schema))
-        }
       }
     }
-
-  /** Byte-shaped Method-1 response: `{"results": [{col: string-value}]}`. */
-  def searchResponseJson(requestJson: String): String = {
-    val rows = search(requestJson)
-      .select(to_json(struct(col("*"))).as("j"))
-      .collect().map(_.getString(0))
-    s"""{"results":[${rows.mkString(",")}]}"""
-  }
 }
 
 object SemanticSearch {

@@ -1,7 +1,5 @@
 package graft.serve
 
-import com.fasterxml.jackson.databind.ObjectMapper
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1306,8 +1304,6 @@ final class MemoryServer(val dense: MemoryAnnIndex,
                          val defaultNProbe: Int = 0)
   extends ServingTier with HybridTier {
 
-  private val mapper = new ObjectMapper()
-
   /** [[ServingTier]] conformance: the routed front door reads the dense
     * index's loaded metadata through the tier interface, so the SAME
     * door also composes with the multi-process [[FleetTier]].
@@ -1532,22 +1528,20 @@ final class MemoryServer(val dense: MemoryAnnIndex,
   /** JSON request → JSON response, job-free. Accepts `query_vector` +
     * `limit` + the numeric `filter` subset (the deterministic serving
     * path); a `query` text request needs the embedder and belongs to
-    * the DataFrame tier.
+    * the DataFrame tier. The response is `{"results":[{"id":"…",
+    * "score":"…"}, …]}`, both values stringified ([[ResponseJson]]).
     */
   def search(requestJson: String): String = {
-    val req = mapper.readTree(requestJson)
-    val k = Option(req.get("limit")).map(_.asInt()).getOrElse(5)
-    // limit <= 0 (incl. Jackson's non-numeric-coerced-to-0) = the
-    // DataFrame front door's .limit(0): empty results, not a crash
-    if (k <= 0) return """{"results":[]}"""
-    val vecNode = Option(req.get("query_vector")).filter(_.isArray).getOrElse(
-      throw new IllegalArgumentException(
-        "memory tier serves 'query_vector' requests; text 'query' goes " +
-          "through the embedder-backed DataFrame tier"))
-    val qv = vecNode.elements().asScala.map(_.floatValue()).toSeq
-    val hits = topKVecDnf(qv, k, parseFilterDnf(req.get("filter")))
-      .map { case (id, s) => s"""{"id":"$id","score":"$s"}""" }
-    s"""{"results":[${hits.mkString(",")}]}"""
+    val req = Request.parse(requestJson)
+    val k = req.limit.getOrElse(5)
+    // limit 0 = the DataFrame front door's .limit(0): empty results
+    if (k == 0) return ResponseJson.rows(Nil, Nil)
+    val qv = req.vector.getOrElse(throw new IllegalArgumentException(
+      "memory tier serves 'query_vector' requests; text 'query' goes " +
+        "through the embedder-backed DataFrame tier"))
+    ResponseJson.rows(Seq("id", "score"),
+      topKVecDnf(qv, k, parseFilterDnf(req.filter))
+        .map { case (id, s) => Seq(id.toString, s.toString) })
   }
 
   /** [[parseFilterDnf]] as a coverage PROBE for the routed DataFrame

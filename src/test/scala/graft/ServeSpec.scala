@@ -1461,4 +1461,179 @@ class ServeSpec extends SparkSpec {
     assert(sharded.nShards == 4 && sharded.size == 300)
     annQueries.foreach(q => assert(sharded.topK(q, 9) == whole.topK(q, 9)))
   }
+
+  // ---- one request rule and one response writer on every route
+
+  /** A routed door and a job-only door over `annAssigned` with a string
+    * (`cat`) and an integral (`grp`) metadata column loaded.
+    */
+  private lazy val tagged = annAssigned
+    .withColumn("cat", concat(lit("cat"), pmod(col("vec_id"), lit(3)).cast("string")))
+    .withColumn("grp", pmod(col("vec_id"), lit(7)).cast("int"))
+    .withColumn("txt", concat(lit("doc "), col("vec_id").cast("string")))
+    .localCheckpoint(true)
+  private lazy val taggedServer = new graft.serve.MemoryServer(
+    graft.serve.MemoryAnnIndex.fromDataFrame(tagged, "vec_id", "embedding",
+      "ivf_cell", annCents, metaCols = Seq("cat", "grp")), None)
+  private def taggedDoor(m: Option[graft.serve.ServingTier]) = new SemanticSearch(
+    tagged, HashingTfEmbedder(8), idCol = "vec_id", textCol = "txt",
+    embCol = "embedding", memory = m)
+  private lazy val hybridDoor = {
+    val postings = graft.operators.Bm25.buildPostings(lexDocs, "doc_id", "text")
+      .localCheckpoint(true)
+    val dfMap = postings.groupBy("term").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val idf = graft.operators.Bm25.idfByTerm(dfMap, 60L, spark)
+    new graft.api.HybridSearch(annAssigned, "vec_id", "embedding", postings,
+      "doc_id", idf, 8.0, memory = Some(new graft.serve.MemoryServer(
+        graft.serve.MemoryAnnIndex.fromDataFrame(annAssigned, "vec_id",
+          "embedding", "ivf_cell", annCents),
+        Some(graft.serve.MemoryPostingsIndex.fromDataFrame(postings, "doc_id", idf, 8.0)))))
+  }
+  private def qvJson(q: Seq[Float]) = s""""query_vector":[${q.mkString(",")}]"""
+
+  Seq("negative" -> "-1", "fractional" -> "2.5", "textual" -> "\"abc\"",
+      "out-of-Int-range" -> "10000000000").foreach { case (cls, v) =>
+    test(s"request integers: a $cls limit, pool_k or c is refused on every route") {
+      val routed = taggedDoor(Some(taggedServer))
+      val qv = qvJson(annQueries.head)
+      val covered = s"""{$qv,"columns":["vec_id","cat"],"limit":$v}"""
+      val uncovered = s"""{$qv,"columns":["vec_id","txt"],"limit":$v}"""
+      val refusals: Seq[(String, () => Any)] = Seq(
+        "covered door" -> (() => routed.searchResponseJson(covered)),
+        "covered searchRouted" -> (() => routed.searchRouted(covered)),
+        "uncovered door" -> (() => routed.searchResponseJson(uncovered)),
+        "job door" -> (() => taggedDoor(None).searchResponseJson(covered)),
+        "MemoryServer.search" -> (() => taggedServer.search(covered))) ++
+        Seq("limit", "pool_k", "c").map(f => s"hybrid $f" -> (() => hybridDoor.search(
+          s"""{$qv,"terms":["dup"],"$f":$v}""")))
+      refusals.foreach { case (route, call) =>
+        val e = intercept[IllegalArgumentException](call())
+        assert(e.getMessage.contains("non-negative integer"), s"$route: ${e.getMessage}")
+      }
+    }
+  }
+
+  test("request integers: limit 0, an absent limit and a null limit keep their answers") {
+    val routed = taggedDoor(Some(taggedServer))
+    val job = taggedDoor(None)
+    val qv = qvJson(annQueries(1))
+    Seq(""","limit":0""", "", ""","limit":null""").foreach { lim =>
+      Seq("""["vec_id","cat"]""", """["vec_id","txt"]""").foreach { cols =>
+        val req = s"""{$qv,"columns":$cols$lim}"""
+        val want = job.searchResponseJson(req)
+        assert(routed.searchResponseJson(req) == want, req)
+        val n = if (lim == ""","limit":0""") 0 else 5
+        assert(want.split("\"vec_id\"").length - 1 == n, want)
+      }
+      val viaServer = taggedServer.search(s"""{$qv$lim}""")
+      assert(viaServer.split("\"id\"").length - 1 ==
+        (if (lim == ""","limit":0""") 0 else 5), viaServer)
+    }
+    assert(taggedServer.search(s"""{$qv,"limit":0}""") == """{"results":[]}""")
+    assert(hybridDoor.search(s"""{$qv,"terms":["dup"],"limit":0}""").isEmpty)
+    assert(hybridDoor.search(s"""{$qv,"terms":["dup"]}""").count() == 10)
+  }
+
+  test("covered door requests start no Spark work: 4 threads, 200 requests, job-door bytes") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val routed = taggedDoor(Some(taggedServer))
+    val filters = Seq("", ""","filter":{"@eq":{"cat":"cat1"}}""",
+      ""","filter":{"@and":[{"@ne":{"cat":"cat0"}},{"@gte":{"grp":3}}]}""",
+      ""","filter":{"@or":[{"@eq":{"grp":2}},{"@contains":{"cat":"2"}}]}""")
+    val reqs = for (q <- annQueries; f <- filters) yield
+      s"""{${qvJson(q)},"columns":["vec_id","grp","cat"],"limit":6$f}"""
+    val reqsWithText = reqs :+ """{"query":"doc 7","columns":["cat","vec_id"]}"""
+    val want = reqsWithText.map(r => r -> taggedDoor(None).searchResponseJson(r)).toMap
+    reqsWithText.foreach(r => assert(routed.searchRouted(r)._2, s"not covered: $r"))
+
+    // jobs and SQL executions seen between two marker jobs; the listener
+    // bus delivers in posting order, so the end marker drains it
+    val jobs = new AtomicInteger(0)
+    val executions = new AtomicInteger(0)
+    val ended = new CountDownLatch(1)
+    val listener = new SparkListener {
+      @volatile private var counting = false
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case "no-work-start" => counting = true
+          case "no-work-end" => counting = false; ended.countDown()
+          case _ => if (counting) jobs.incrementAndGet()
+        }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart if counting => executions.incrementAndGet()
+        case _ =>
+      }
+    }
+    val sc = spark.sparkContext
+    def marker(group: String): Unit = {
+      sc.setJobGroup(group, group)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    try {
+      marker("no-work-start")
+      val threads = (0 until 4).map { t =>
+        val th = new Thread(() => (0 until 50).foreach { i =>
+          val r = reqsWithText((t * 50 + i) % reqsWithText.size)
+          got.add(r -> routed.searchResponseJson(r))
+        })
+        th.start(); th
+      }
+      threads.foreach(_.join(120000))
+      marker("no-work-end")
+      assert(ended.await(60, TimeUnit.SECONDS), "end marker never delivered")
+    } finally sc.removeSparkListener(listener)
+    assert(got.size == 200)
+    assert(jobs.get == 0 && executions.get == 0,
+      s"covered requests started ${jobs.get} jobs and ${executions.get} SQL executions")
+    got.forEach { case (r, resp) => assert(resp == want(r), s"bytes differ for $r") }
+  }
+
+  /** Strings whose JSON escapes differ between writers if they differ at all. */
+  private val awkward = Seq("\"", "\\", "/", "</script>", "\n\r\t\b\f", "\u0001",
+    "\u001F", "\u007F", "\u2028", "é", "中", "\uD83D\uDE00", "", "plain")
+
+  test("escaping: covered responses == the job door's bytes for awkward metadata strings") {
+    val labels = awkward.zipWithIndex.toDF("label", "li")
+    val corpus = annAssigned
+      .withColumn("li", pmod(col("vec_id"), lit(awkward.size)).cast("int"))
+      .join(labels, "li").drop("li").localCheckpoint(true)
+    val mem = graft.serve.MemoryAnnIndex.fromDataFrame(corpus, "vec_id",
+      "embedding", "ivf_cell", annCents, metaCols = Seq("label"))
+    def door(m: Option[graft.serve.MemoryServer]) = new SemanticSearch(corpus,
+      HashingTfEmbedder(8), idCol = "vec_id", embCol = "embedding", memory = m)
+    val routed = door(Some(new graft.serve.MemoryServer(mem, None)))
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val qv = qvJson(annQueries(3))
+    val reqs = s"""{$qv,"columns":["vec_id","label"],"limit":300}""" +:
+      awkward.map(a => s"""{$qv,"columns":["label","vec_id"],"limit":3,""" +
+        s""""filter":{"@eq":{"label":${mapper.writeValueAsString(a)}}}}""")
+    reqs.foreach { r =>
+      val (_, covered) = routed.searchRouted(r)
+      assert(covered, s"not covered: $r")
+      assert(routed.searchResponseJson(r) == door(None).searchResponseJson(r),
+        s"bytes differ for $r")
+    }
+    // every awkward value made it into the full listing
+    val all = mapper.readTree(routed.searchResponseJson(reqs.head)).get("results")
+    assert(all.size == 300)
+    assert((0 until 300).map(i => all.get(i).get("label").asText()).toSet == awkward.toSet)
+    // the loader refuses a null string value, so the door never serves
+    // one; the writer still omits a null field exactly as to_json does
+    intercept[IllegalArgumentException](graft.serve.MemoryAnnIndex.fromDataFrame(
+      corpus.withColumn("label", when(col("vec_id") === 5, lit(null)).otherwise(col("label"))),
+      "vec_id", "embedding", "ivf_cell", annCents, metaCols = Seq("label")))
+    val rows = (awkward.map(Option(_)) :+ None).zipWithIndex
+      .map { case (a, i) => (i.toString, a.orNull, if (i % 2 == 0) null else "x") }
+    val viaSpark = rows.toDF("id", "a", "b").select(to_json(struct(col("*"))))
+      .collect().map(_.getString(0)).toSeq
+    assert(graft.serve.ResponseJson.rows(Seq("id", "a", "b"),
+      rows.map { case (i, a, b) => Seq(i, a, b) }) ==
+      graft.serve.ResponseJson.rendered(viaSpark))
+  }
 }

@@ -76,6 +76,51 @@ class SkewAndCacheSpec extends SparkSpec {
     assert(cache.hits == 2 && cache.misses == 4)
   }
 
+  test("result cache is single-flight: hits never wait on another key; one compute per key") {
+    import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    val cache = new ResultCache[String]()
+    val pool = Executors.newFixedThreadPool(9)
+    def async[T](body: => T) = pool.submit(() => body)
+    // the compute runs until `n` requests have joined it (each joiner
+    // counts as a hit before it waits), so the joins are not a race
+    def untilJoined(h0: Long, n: Int): Unit = {
+      val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(20)
+      while (cache.hits < h0 + n && System.nanoTime() < deadline) Thread.sleep(1)
+    }
+    try {
+      assert(cache.getOrCompute("B")("b") == "b")
+      // a hit on B returns while a miss on A is blocked in its compute
+      val entered = new CountDownLatch(1)
+      val release = new CountDownLatch(1)
+      val a = async(cache.getOrCompute("A") { entered.countDown(); release.await(); "a" })
+      assert(entered.await(20, TimeUnit.SECONDS))
+      val b = async(cache.getOrCompute("B")(sys.error("B is cached")))
+      assert(b.get(5, TimeUnit.SECONDS) == "b", "the hit waited on A's compute")
+      assert(!a.isDone)
+      release.countDown()
+      assert(a.get(20, TimeUnit.SECONDS) == "a")
+
+      // 8 concurrent misses on one key compute once; 7 join as hits
+      val computes = new AtomicInteger(0)
+      val (h0, m0) = (cache.hits, cache.misses)
+      val cs = (0 until 8).map(_ => async(cache.getOrCompute("C") {
+        untilJoined(h0, 7); computes.incrementAndGet(); "c"
+      }))
+      assert(cs.map(_.get(30, TimeUnit.SECONDS)) == Seq.fill(8)("c"))
+      assert(computes.get == 1 && cache.hits == h0 + 7 && cache.misses == m0 + 1)
+
+      // a failed compute reaches every joined request and is not cached
+      val boom = new IllegalStateException("boom")
+      val h1 = cache.hits
+      val fs = (0 until 4).map(_ => async(scala.util.Try(cache.getOrCompute("F") {
+        untilJoined(h1, 3); throw boom
+      })))
+      assert(fs.map(_.get(30, TimeUnit.SECONDS).failed.get).forall(_ eq boom))
+      assert(cache.getOrCompute("F")("f") == "f" && cache.size == 4)
+    } finally pool.shutdownNow()
+  }
+
   test("cached search: identical request JSON short-circuits the second job") {
     val corpus = Seq(("D1", "alpha beta gamma"), ("D2", "delta epsilon"))
       .toDF("ID", "EMBED_STR")
