@@ -248,6 +248,34 @@ object SparkEntry {
       throw new NoSuchElementException(s"stored vector vec_id=$id not found")))
   }
 
+  /** The hybrid-serving inputs q186/q203/q280/q287 share: the embeddings
+    * corpus without stored vector `vecId` (the query `qv`), its IVF
+    * assignment over 4 sampled centroids, and the documents' postings
+    * with their BM25 corpus statistics.
+    */
+  private final case class HybridInputs(corpus: DataFrame, qv: Seq[Float],
+      assigned: DataFrame, cents: Seq[Seq[Float]], postings: DataFrame,
+      stats: graft.operators.Bm25.CorpusStats) {
+    /** The exact memory server over both legs. */
+    def server: graft.serve.MemoryServer = new graft.serve.MemoryServer(
+      graft.serve.MemoryAnnIndex.fromDataFrame(assigned, "vec_id", "embedding",
+        "ivf_cell", cents),
+      Some(graft.serve.MemoryPostingsIndex.fromDataFrame(postings, "doc_id",
+        stats.idf, stats.avgdl)))
+  }
+
+  private def hybridInputs(s: SparkSession, dir: String, vecId: Int): HybridInputs = {
+    val emb = rd(s, dir, "embeddings")
+    val corpus = emb.where(col("vec_id") =!= vecId)
+    val qv = storedVecs(emb, vecId).head
+    val cents = Ann.sampleCentroids(corpus, "vec_id", "embedding", 4)
+    val docs = rdPar(s, dir, "documents")
+    val postings = graft.operators.Bm25.buildPostings(docs, "doc_id", "text")
+    val stats = graft.operators.Bm25.corpusStats(docs, "text", postings)
+    HybridInputs(corpus, qv, Ann.withIvfAssignment(corpus, "embedding", cents),
+      cents, postings, stats)
+  }
+
   /** Shared cosine SQL fragment for the DuckDB oracles: MUST fold in element
     * order in double precision, exactly like
     * [[graft.functions.CosineSimilarity]].
@@ -822,14 +850,9 @@ object SparkEntry {
       val docs = rdPar(s, dir, "documents")
       val postings = graft.operators.Bm25
         .buildPostings(docs, "doc_id", "text").localCheckpoint(true)
-      val dstats = docs
-        .select(size(split(col("text"), " ")).cast("long").as("dl"))
-        .agg(sum("dl"), count(lit(1))).head()
-      val (sumDl, n) = (dstats.getLong(0), dstats.getLong(1))
-      val dfMap = postings.groupBy("term").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      val idf = graft.operators.Bm25.idfByTerm(dfMap, n, s)
-      val avgdl = sumDl.toDouble / n.toDouble
+      val stats = graft.operators.Bm25.corpusStats(docs, "text", postings)
+      val (sumDl, n, dfMap) = (stats.sumDl, stats.n, stats.df)
+      val (idf, avgdl) = (stats.idf, stats.avgdl)
       val purgedIds = docs.where(col("doc_id") % 13 === 0)
         .select("doc_id").collect().map(_.getLong(0)).toSeq
       val purgedSet = purgedIds.toSet
@@ -3703,26 +3726,8 @@ object SparkEntry {
     // serving tier's fused request path, end-to-end against DuckDB).
     "q186_memory_hybrid" -> ((s, dir) => {
       import s.implicits._
-      val emb = rd(s, dir, "embeddings")
-      val corpus = emb.where(col("vec_id") =!= 7)
-      val qv = storedVecs(emb, 7).head
-      val cents = Ann.sampleCentroids(corpus, "vec_id", "embedding", 4)
-      val docs = rdPar(s, dir, "documents")
-      val postings = graft.operators.Bm25.buildPostings(docs, "doc_id", "text")
-      val stats = docs
-        .select(size(split(col("text"), " ")).cast("long").as("dl"))
-        .agg(sum("dl"), count(lit(1))).head()
-      val avgdl = stats.getLong(0).toDouble / stats.getLong(1).toDouble
-      val dfMap = postings.groupBy("term").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      val idfMap = graft.operators.Bm25.idfByTerm(dfMap, stats.getLong(1), s)
-      val server = new graft.serve.MemoryServer(
-        graft.serve.MemoryAnnIndex.fromDataFrame(
-          Ann.withIvfAssignment(corpus, "embedding", cents),
-          "vec_id", "embedding", "ivf_cell", cents),
-        Some(graft.serve.MemoryPostingsIndex.fromDataFrame(
-          postings, "doc_id", idfMap, avgdl)))
-      server.searchHybrid(qv, Seq("dup", "stream"), k = 10, poolK = 20)
+      val h = hybridInputs(s, dir, 7)
+      h.server.searchHybrid(h.qv, Seq("dup", "stream"), k = 10, poolK = 20)
         .toDF("id", "rrf")
     }),
 
@@ -3963,26 +3968,8 @@ object SparkEntry {
     // in pinned leg order, bit-identical to the batch normFuseLocal.
     "q203_memory_norm_fusion" -> ((s, dir) => {
       import s.implicits._
-      val emb = rd(s, dir, "embeddings")
-      val corpus = emb.where(col("vec_id") =!= 19)
-      val qv = storedVecs(emb, 19).head
-      val cents = Ann.sampleCentroids(corpus, "vec_id", "embedding", 4)
-      val docs = rdPar(s, dir, "documents")
-      val postings = graft.operators.Bm25.buildPostings(docs, "doc_id", "text")
-      val stats = docs
-        .select(size(split(col("text"), " ")).cast("long").as("dl"))
-        .agg(sum("dl"), count(lit(1))).head()
-      val avgdl = stats.getLong(0).toDouble / stats.getLong(1).toDouble
-      val dfMap = postings.groupBy("term").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      val idfMap = graft.operators.Bm25.idfByTerm(dfMap, stats.getLong(1), s)
-      val server = new graft.serve.MemoryServer(
-        graft.serve.MemoryAnnIndex.fromDataFrame(
-          Ann.withIvfAssignment(corpus, "embedding", cents),
-          "vec_id", "embedding", "ivf_cell", cents),
-        Some(graft.serve.MemoryPostingsIndex.fromDataFrame(
-          postings, "doc_id", idfMap, avgdl)))
-      server.searchHybridNorm(qv, Seq("dup", "query"), k = 10, poolK = 20)
+      val h = hybridInputs(s, dir, 19)
+      h.server.searchHybridNorm(h.qv, Seq("dup", "query"), k = 10, poolK = 20)
         .toDF("id", "fused")
     }),
 
@@ -4036,12 +4023,8 @@ object SparkEntry {
     "q202_forget_postings_search" -> ((s, dir) => {
       val docs = rdPar(s, dir, "documents")
       val postings = graft.operators.Bm25.buildPostings(docs, "doc_id", "text")
-      val dstats = docs
-        .select(size(split(col("text"), " ")).cast("long").as("dl"))
-        .agg(sum("dl"), count(lit(1))).head()
-      val (sumDl, n) = (dstats.getLong(0), dstats.getLong(1))
-      val dfMap = postings.groupBy("term").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      val stats = graft.operators.Bm25.corpusStats(docs, "text", postings)
+      val (sumDl, n, dfMap) = (stats.sumDl, stats.n, stats.df)
       val purgedIds = docs.where(col("doc_id") % 13 === 0)
         .select("doc_id").collect().map(_.getLong(0)).toSeq
       val deltas = graft.operators.Forget.lexDeltas(postings, docs,
@@ -4350,18 +4333,12 @@ object SparkEntry {
       import s.implicits._
       val docs = rdPar(s, dir, "documents")
       val postings = graft.operators.Bm25.buildPostings(docs, "doc_id", "text")
-      val stats = docs
-        .select(size(split(col("text"), " ")).cast("long").as("dl"))
-        .agg(sum("dl"), count(lit(1))).head()
-      val avgdl = stats.getLong(0).toDouble / stats.getLong(1).toDouble
-      val dfMap = postings.groupBy("term").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      val idfMap = graft.operators.Bm25.idfByTerm(dfMap, stats.getLong(1), s)
+      val stats = graft.operators.Bm25.corpusStats(docs, "text", postings)
       val mem = graft.serve.MemoryPostingsIndex.fromDataFrame(
-        postings, "doc_id", idfMap, avgdl)
+        postings, "doc_id", stats.idf, stats.avgdl)
       val (hits, evaluated, _) = mem.searchWandCounted(
         Seq("dup", "merge", "sort"), 10)
-      require(evaluated < stats.getLong(1),
+      require(evaluated < stats.n,
         s"WAND evaluated every corpus doc ($evaluated) — pruning inert")
       hits.toDF("doc_id", "score")
     }),
@@ -5293,7 +5270,7 @@ object SparkEntry {
         "day_idx", "n_events", season = 7)
     }),
 
-    // ---- SHARDED flat-tier serving (serve/ShardedAnnIndex): the
+    // ---- SHARDED flat-tier serving (serve/Sharded): the
     // 10 M-doc deployment form made executable — rows hash-shard by id
     // into disjoint MemoryAnnIndex slices (one per replica in a real
     // deployment), the query fans out, k-bounded lists merge under the
@@ -5305,10 +5282,11 @@ object SparkEntry {
       val corpus = emb.where(col("vec_id") =!= 35)
       val qv = storedVecs(emb, 35).head
       val cents = Ann.sampleCentroids(corpus, "vec_id", "embedding", 4)
-      val sharded = graft.serve.ShardedAnnIndex.fromDataFrame(
+      val shards = graft.serve.MemoryAnnIndex.sharded(
         Ann.withIvfAssignment(corpus, "embedding", cents),
         "vec_id", "embedding", "ivf_cell", cents, nShards = 4)
-      sharded.topK(qv, 10).toDF("vec_id", "score")
+      graft.serve.Sharded.topK(shards, 10)(_.topK(qv, 10))
+        .toDF("vec_id", "score")
     }),
 
     // ---- exact-dedup-FIRST LSH (q23's scale-order rule, executable):
@@ -5392,11 +5370,12 @@ object SparkEntry {
       val corpus = emb.where(col("vec_id") =!= 36).join(docs, "vec_id")
       val qv = storedVecs(emb, 36).head
       val cents = Ann.sampleCentroids(corpus, "vec_id", "embedding", 4)
-      val sharded = graft.serve.ShardedAnnIndex.fromDataFrame(
+      val shards = graft.serve.MemoryAnnIndex.sharded(
         Ann.withIvfAssignment(corpus, "embedding", cents),
         "vec_id", "embedding", "ivf_cell", cents, nShards = 4,
         metaCols = Seq("source"))
-      sharded.topKStringEq(qv, 8, "source", "src5")
+      graft.serve.Sharded.topK(shards, 8)(sh =>
+          sh.topK(qv, 8, Seq(sh.stringFilter("source", "src5"))))
         .toDF("vec_id", "score")
     }),
 
@@ -5551,29 +5530,11 @@ object SparkEntry {
     // nothing about the result; the require pins that the route was
     // actually taken (driver-local relation, no job).
     "q280_hybrid_front_door" -> ((s, dir) => {
-      val emb = rd(s, dir, "embeddings")
-      val corpus = emb.where(col("vec_id") =!= 7)
-      val qv = storedVecs(emb, 7).head
-      val cents = Ann.sampleCentroids(corpus, "vec_id", "embedding", 4)
-      val docs = rdPar(s, dir, "documents")
-      val postings = graft.operators.Bm25.buildPostings(docs, "doc_id", "text")
-      val stats = docs
-        .select(size(split(col("text"), " ")).cast("long").as("dl"))
-        .agg(sum("dl"), count(lit(1))).head()
-      val avgdl = stats.getLong(0).toDouble / stats.getLong(1).toDouble
-      val dfMap = postings.groupBy("term").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      val idfMap = graft.operators.Bm25.idfByTerm(dfMap, stats.getLong(1), s)
-      val server = new graft.serve.MemoryServer(
-        graft.serve.MemoryAnnIndex.fromDataFrame(
-          Ann.withIvfAssignment(corpus, "embedding", cents),
-          "vec_id", "embedding", "ivf_cell", cents),
-        Some(graft.serve.MemoryPostingsIndex.fromDataFrame(
-          postings, "doc_id", idfMap, avgdl)))
-      val door = new graft.api.HybridSearch(corpus, "vec_id", "embedding",
-        postings, "doc_id", idfMap, avgdl, memory = Some(server))
+      val h = hybridInputs(s, dir, 7)
+      val door = new graft.api.HybridSearch(h.corpus, "vec_id", "embedding",
+        h.postings, "doc_id", h.stats.idf, h.stats.avgdl, memory = Some(h.server))
       val out = door.search(
-        s"""{"query_vector":[${qv.mkString(",")}],
+        s"""{"query_vector":[${h.qv.mkString(",")}],
            | "terms":["dup","stream"],"limit":10,"pool_k":20}""".stripMargin)
       require(out.queryExecution.optimizedPlan.isInstanceOf[
         org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
@@ -5644,7 +5605,7 @@ object SparkEntry {
     }),
 
     // ---- the LEXICAL tier's replica deployment form (the postings twin
-    // of q265's ShardedAnnIndex, closing the gap the 10x serving battery
+    // of q265's dense fan-out, closing the gap the 10x serving battery
     // named): documents hash-shard disjointly, each shard WAND-walks its
     // own postings slice under the GLOBAL (idf, avgdl) stats, k-bounded
     // lists merge under (score DESC, id ASC) — bit-identical to the
@@ -5655,18 +5616,12 @@ object SparkEntry {
       import s.implicits._
       val docs = rdPar(s, dir, "documents")
       val postings = graft.operators.Bm25.buildPostings(docs, "doc_id", "text")
-      val stats = docs
-        .select(size(split(col("text"), " ")).cast("long").as("dl"))
-        .agg(sum("dl"), count(lit(1))).head()
-      val avgdl = stats.getLong(0).toDouble / stats.getLong(1).toDouble
-      val dfMap = postings.groupBy("term").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      val idfMap = graft.operators.Bm25.idfByTerm(dfMap, stats.getLong(1), s)
-      val sharded = graft.serve.ShardedPostingsIndex.fromDataFrame(
-        postings, "doc_id", idfMap, avgdl, nShards = 4)
-      val (hits, evaluated, skipped) = sharded.searchCounted(
-        Seq("dup", "merge", "sort"), 10)
-      require(skipped > 0 && evaluated < stats.getLong(1),
+      val stats = graft.operators.Bm25.corpusStats(docs, "text", postings)
+      val shards = graft.serve.MemoryPostingsIndex.sharded(
+        postings, "doc_id", stats.idf, stats.avgdl, nShards = 4)
+      val (hits, evaluated, skipped) = graft.serve.Sharded.counted(shards, 10)(
+        _.searchWandCounted(Seq("dup", "merge", "sort"), 10))
+      require(skipped > 0 && evaluated < stats.n,
         s"sharded WAND lost its pruning (evaluated=$evaluated, skipped=$skipped)")
       hits.toDF("doc_id", "score")
     }),
@@ -5694,15 +5649,14 @@ object SparkEntry {
       import s.implicits._
       val docs = rdPar(s, dir, "documents")
       val sv = graft.operators.Sparse.tfVectors(docs, "doc_id", "text")
-      val sharded = graft.serve.ShardedSparseIndex.fromDataFrame(
-        sv, "doc_id", nShards = 4)
-      val (res, _, skipped) = sharded.topKWandCounted(
-        Map("vector" -> 2L, "dup" -> 1L, "merge" -> 1L), 10)
+      val shards = graft.serve.MemorySparseIndex.sharded(sv, "doc_id", nShards = 4)
+      val (res, _, skipped) = graft.serve.Sharded.countedLong(shards, 10)(
+        _.topKWandCounted(Map("vector" -> 2L, "dup" -> 1L, "merge" -> 1L), 10))
       require(skipped > 0L, "q286: sharded WAND pruned nothing — vacuous")
       res.toDF("doc_id", "score")
     }),
 
-    // ---- hybrid serving over SHARDED legs (serve/ShardedHybridServer):
+    // ---- hybrid serving over SHARDED legs (serve/Sharded.hybrid):
     // q186's fused request where BOTH legs fan out to disjoint doc
     // shards and the k-bounded lists merge before the local RRF fold —
     // the deployment form for the tier the 10× battery showed QPS-bound
@@ -5710,26 +5664,13 @@ object SparkEntry {
     // different query vector: the fan-out changes nothing.
     "q287_sharded_hybrid" -> ((s, dir) => {
       import s.implicits._
-      val emb = rd(s, dir, "embeddings")
-      val corpus = emb.where(col("vec_id") =!= 11)
-      val qv = storedVecs(emb, 11).head
-      val cents = Ann.sampleCentroids(corpus, "vec_id", "embedding", 4)
-      val docs = rdPar(s, dir, "documents")
-      val postings = graft.operators.Bm25.buildPostings(docs, "doc_id", "text")
-      val stats = docs
-        .select(size(split(col("text"), " ")).cast("long").as("dl"))
-        .agg(sum("dl"), count(lit(1))).head()
-      val avgdl = stats.getLong(0).toDouble / stats.getLong(1).toDouble
-      val dfMap = postings.groupBy("term").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      val idfMap = graft.operators.Bm25.idfByTerm(dfMap, stats.getLong(1), s)
-      val server = new graft.serve.ShardedHybridServer(
-        graft.serve.ShardedAnnIndex.fromDataFrame(
-          Ann.withIvfAssignment(corpus, "embedding", cents),
-          "vec_id", "embedding", "ivf_cell", cents, nShards = 4),
-        graft.serve.ShardedPostingsIndex.fromDataFrame(
-          postings, "doc_id", idfMap, avgdl, nShards = 4))
-      server.searchHybrid(qv, Seq("dup", "merge"), k = 10, poolK = 20)
+      val h = hybridInputs(s, dir, 11)
+      val server = graft.serve.Sharded.hybrid(
+        graft.serve.MemoryAnnIndex.sharded(h.assigned, "vec_id", "embedding",
+          "ivf_cell", h.cents, nShards = 4),
+        graft.serve.MemoryPostingsIndex.sharded(h.postings, "doc_id",
+          h.stats.idf, h.stats.avgdl, nShards = 4))
+      server.searchHybrid(h.qv, Seq("dup", "merge"), k = 10, poolK = 20)
         .toDF("id", "rrf")
     }),
 

@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType
 import scala.jdk.CollectionConverters._
 
 import graft.operators.{Ann, Bm25}
-import graft.serve.{MemoryServer, Request}
+import graft.serve.{HybridTier, Request}
 
 /** The HYBRID front door: one JSON request carrying both retrieval legs —
   * a pre-embedded dense query and lexical terms — fused by reciprocal
@@ -25,38 +25,32 @@ import graft.serve.{MemoryServer, Request}
   *    (TakeOrderedAndProject) + BM25 over the term-partitioned postings
   *    (partition-pruned to the query's terms), fused with
   *    [[Bm25.rrfFuse]] — the 100 TB-corpus path;
-  *  - **routed**: when a [[MemoryServer]] with a lexical tier is
-  *    attached, the request serves job-free — dense memory scan + WAND
-  *    postings + [[Bm25.rrfFuseLocal]], returned as a driver-local
+  *  - **routed**: when an exact [[graft.serve.HybridTier]] is attached,
+  *    the request serves job-free — both legs plus
+  *    [[graft.serve.HybridTier.fuse]], returned as a driver-local
   *    relation. This closes the job-per-request latency the serving
   *    bench measured on the composed hybrid cell (the legs are k-bounded
   *    lists; scheduling two Spark jobs to fuse 20-row frames costs more
   *    than the whole request).
   *
-  * @param memory must be built over the SAME corpus/postings as the
-  *               DataFrame legs (dense index rows and postings terms),
-  *               with a lexical tier — requests route only when present
-  *               AND the server serves dense requests exactly
-  *               ([[MemoryServer.servesExactDense]]): an IVF-probed
-  *               server is approximate, which would silently break the
-  *               bit-identity promise, so it never routes (the request
-  *               takes the job path instead).
-  * @param sharded the fan-out serving form behind the same door — the
-  *               in-process [[graft.serve.ShardedHybridServer]] or the
-  *               multi-process fleet ([[graft.serve.FleetHybridTier]]),
-  *               built over the SAME corpus/postings: routed onto when
-  *               no monolithic `memory` covers the request. Exact by
-  *               construction (exact dense fan-out + answer-preserving
-  *               per-shard WAND; the [[graft.serve.HybridTier]]
-  *               contract), so no probe check applies — ServeSpec pins
-  *               the in-process routes bit-identical; FleetBench
-  *               REQUIRES the fleet one at warm-up.
+  * @param memory the hybrid tier over the SAME corpus/postings as the
+  *               DataFrame legs (dense index rows and postings terms):
+  *               the in-process [[graft.serve.MemoryServer]], sharded
+  *               legs ([[graft.serve.Sharded.hybrid]]) or the
+  *               multi-process fleet ([[graft.serve.FleetTier]]).
+  *               Requests route onto it only when it serves exactly
+  *               ([[graft.serve.HybridTier.servesExactHybrid]]): an
+  *               IVF-probed or dense-only `MemoryServer` does not, so
+  *               the request takes the job path instead of silently
+  *               breaking the bit-identity promise or failing per
+  *               request. ServeSpec pins the in-process routes
+  *               bit-identical; FleetShardSpec and FleetBench pin the
+  *               fleet one.
   */
 final class HybridSearch(index: DataFrame, idCol: String, embCol: String,
                          postings: DataFrame, postingsIdCol: String,
                          idf: Map[String, Double], avgdl: Double,
-                         memory: Option[MemoryServer] = None,
-                         sharded: Option[graft.serve.HybridTier] = None) {
+                         memory: Option[HybridTier] = None) {
 
   /** Typed entry: both legs pooled `poolK` deep, RRF-fused to `k`. */
   def hybridTopK(qvec: Seq[Float], terms: Seq[String], k: Int,
@@ -72,8 +66,8 @@ final class HybridSearch(index: DataFrame, idCol: String, embCol: String,
     Bm25.rrfFuse(Seq(dense, lexical), "id", "rank", c, k)
   }
 
-  /** JSON request in, `(id, rrf)` DataFrame out — routed onto the memory
-    * tier when one is attached, the job path otherwise. `limit`, `pool_k`
+  /** JSON request in, `(id, rrf)` DataFrame out — routed onto the
+    * attached tier when it serves exactly, the job path otherwise. `limit`, `pool_k`
     * and `c` follow [[Request]]'s integer rule on both routes.
     */
   def search(requestJson: String): DataFrame = {
@@ -85,9 +79,8 @@ final class HybridSearch(index: DataFrame, idCol: String, embCol: String,
       "hybrid request needs 'query_vector' (pre-embedded dense leg)"))
     val terms = req.strings("terms").getOrElse(throw new IllegalArgumentException(
       "hybrid request needs 'terms' (lexical leg)"))
-    val tier: Option[graft.serve.HybridTier] =
-      memory.filter(m => m.servesExactDense && m.hasLexical).orElse(sharded)
-    tier.map(t => if (k == 0) Nil else t.searchHybrid(qv, terms, k, poolK, c)) match {
+    memory.filter(_.servesExactHybrid)
+      .map(t => if (k == 0) Nil else t.searchHybrid(qv, terms, k, poolK, c)) match {
       case Some(hits) =>
         val schema = StructType(Seq(
           StructField("id", LongType), StructField("rrf", DoubleType)))

@@ -41,8 +41,20 @@ import graft.operators.{Ann, Bm25}
 object ServeBench {
 
   /** Nearest-rank percentile (p in (0,1]) of raw latencies. */
-  private def pct(sorted: IndexedSeq[Double], p: Double): Double =
+  private[graft] def pct(sorted: IndexedSeq[Double], p: Double): Double =
     sorted((math.ceil(p * sorted.size).toInt - 1).max(0).min(sorted.size - 1))
+
+  /** `n` copies of `df` with disjoint ids: copy i shifts `idCol` by
+    * i · (max id + 1) — the serving benches' 10× corpora.
+    */
+  private[graft] def replicate(df: org.apache.spark.sql.DataFrame, idCol: String,
+                               n: Int): org.apache.spark.sql.DataFrame =
+    if (n <= 1) df
+    else {
+      val stride = df.agg(max(col(idCol))).head().getLong(0) + 1
+      (0 until n).map(i => df.withColumn(idCol, col(idCol) + lit(i * stride)))
+        .reduce(_ unionByName _)
+    }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -74,10 +86,7 @@ object ServeBench {
     // ---- corpus: sf embeddings replicated (disjoint ids) to ~10K docs
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val corpus0 = emb.where(col("vec_id") =!= 0)
-    val stride = emb.agg(max("vec_id")).head().getLong(0) + 1
-    val corpus = (0 until repl).map(i =>
-        corpus0.withColumn("vec_id", col("vec_id") + lit(i * stride)))
-      .reduce(_ unionByName _)
+    val corpus = replicate(corpus0, "vec_id", repl)
 
     // ---- persist ONCE in the q144 IVF layout; serving reads the
     // partition-pruned parquet, not a cached DataFrame — the honest
@@ -100,23 +109,15 @@ object ServeBench {
     // partitionBy(term), so a query's term filter is PARTITION PRUNING.
     // Corpus stats (N, avgdl, df) collect once — the bounded dimension
     // lookups a serving tier holds in memory.
-    val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")
-    val dstride = docs0.agg(max("doc_id")).head().getLong(0) + 1
-    val docsRepl = (0 until repl).map(i =>
-        docs0.withColumn("doc_id", col("doc_id") + lit(i * dstride)))
-      .reduce(_ unionByName _)
+    val docsRepl = replicate(
+      spark.read.parquet(s"$sfDir/documents.parquet"), "doc_id", repl)
     val postDir = java.nio.file.Files.createTempDirectory("graft-serve-post").toString
     Bm25.buildPostings(docsRepl, "doc_id", "text")
       .write.mode("overwrite").partitionBy("term").parquet(postDir)
     val postings = spark.read.parquet(postDir)
-    val dstats = docsRepl
-      .select(size(split(col("text"), " ")).cast("long").as("dl"))
-      .agg(sum("dl"), count(lit(1))).head()
-    val (sumDl, nLex) = (dstats.getLong(0), dstats.getLong(1))
-    val avgdl = sumDl.toDouble / nLex.toDouble
-    val dfMap = postings.groupBy("term").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val idfMap = Bm25.idfByTerm(dfMap, nLex, spark)
+    val lexStats = Bm25.corpusStats(docsRepl, "text", postings)
+    val (sumDl, nLex, avgdl, idfMap) =
+      (lexStats.sumDl, lexStats.n, lexStats.avgdl, lexStats.idf)
     val termSets = IndexedSeq(Seq("dup", "vector", "query"),
       Seq("dup", "stream"), Seq("vector", "join", "fast"), Seq("scan", "hash"))
 
@@ -138,7 +139,7 @@ object ServeBench {
     // fan-out, k-bounded merge (one shard per replica in production;
     // here the shards share a process, so the bench measures the
     // fan-out + merge overhead vs the monolithic scan)
-    val memSharded = graft.serve.ShardedAnnIndex.fromDataFrame(
+    val memSharded = graft.serve.MemoryAnnIndex.sharded(
       index, "vec_id", "embedding", "ivf_cell", cents, nShards = 4)
     // a selective conjunction (~1/10 of the corpus): the payload-index
     // vs filtered-scan comparison below
@@ -195,14 +196,13 @@ object ServeBench {
       sparseVecs, "doc_id")
     // the lexical replica fan-out (global idf/avgdl, disjoint doc shards)
     // — the deployment form for the tiers the 10x battery showed QPS-bound
-    val memShardedLex = graft.serve.ShardedPostingsIndex.fromDataFrame(
+    val memShardedLex = graft.serve.MemoryPostingsIndex.sharded(
       postings, "doc_id", idfMap, avgdl, nShards = 4)
-    // the sparse replica fan-out (no global stats at all — see the
-    // ShardedSparseIndex doc) and the hybrid door over BOTH sharded legs
-    val memShardedSparse = graft.serve.ShardedSparseIndex.fromDataFrame(
+    // the sparse replica fan-out (no global stats at all — see
+    // serve/Sharded) and the hybrid door over BOTH sharded legs
+    val memShardedSparse = graft.serve.MemorySparseIndex.sharded(
       sparseVecs, "doc_id", nShards = 4)
-    val shardedHybrid = new graft.serve.ShardedHybridServer(
-      memSharded, memShardedLex)
+    val shardedHybrid = graft.serve.Sharded.hybrid(memSharded, memShardedLex)
     val sparseQueries: IndexedSeq[Map[String, Long]] =
       termSets.map(_.zipWithIndex.map { case (t, i) => t -> (i + 1L) }.toMap)
     // freshness tier under churn: every request WRITES one row (upsert
@@ -276,7 +276,8 @@ object ServeBench {
       // sharded fan-out + merge (4 disjoint slices) — the replica
       // deployment shape; bit-identical results to memory_search
       "memory_sharded" -> { qi: Int =>
-        val n = memSharded.topK(qvecs(qi % qvecs.size), 5).length
+        val qv = qvecs(qi % qvecs.size)
+        val n = graft.serve.Sharded.topK(memSharded, 5)(_.topK(qv, 5)).length
         require(n == 5, s"memory_sharded returned $n rows")
       },
       "memory_hybrid" -> { qi: Int =>
@@ -394,16 +395,16 @@ object ServeBench {
       // — bit-identical to the single-replica walk; in production each
       // shard is a replica, so aggregate QPS scales with the fleet
       "memory_sharded_lex" -> { qi: Int =>
-        val n = memShardedLex
-          .search(termSets(qi % termSets.size), 5).length
+        val n = graft.serve.Sharded.topK(memShardedLex, 5)(
+          _.searchWand(termSets(qi % termSets.size), 5)).length
         require(n == 5, s"memory_sharded_lex returned $n rows")
       },
       // learned-sparse fan-out + merge (4 disjoint doc shards, per-shard
       // WAND over integer dot products) — bit-identical to the
       // single-replica walk; the sparse twin of memory_sharded_lex
       "memory_sharded_sparse" -> { qi: Int =>
-        val n = memShardedSparse
-          .topKWand(sparseQueries(qi % sparseQueries.size), 5).length
+        val n = graft.serve.Sharded.countedLong(memShardedSparse, 5)(
+          _.topKWandCounted(sparseQueries(qi % sparseQueries.size), 5))._1.length
         require(n == 5, s"memory_sharded_sparse returned $n rows")
       },
       // the hybrid request over SHARDED legs: dense fan-out + lexical
@@ -424,12 +425,12 @@ object ServeBench {
       // row's p50 + RTT. Requests rotate the probed shard so the cell
       // averages over slice skew.
       "memory_lex_shard" -> { qi: Int =>
-        val sh = memShardedLex.shards(qi % memShardedLex.nShards)
+        val sh = memShardedLex(qi % memShardedLex.size)
         val n = sh.searchWand(termSets(qi % termSets.size), 5).length
         require(n == 5, s"memory_lex_shard returned $n rows")
       },
       "memory_sparse_shard" -> { qi: Int =>
-        val sh = memShardedSparse.shards(qi % memShardedSparse.nShards)
+        val sh = memShardedSparse(qi % memShardedSparse.size)
         val n = sh.topKWand(sparseQueries(qi % sparseQueries.size), 5).length
         require(n == 5, s"memory_sparse_shard returned $n rows")
       },
@@ -441,14 +442,11 @@ object ServeBench {
       // query visits every replica in parallel, each doing exactly this
       // row's work, so fleet QPS ≈ this row's QPS.
       "memory_hybrid_shard" -> { qi: Int =>
-        val si = qi % memShardedLex.nShards
-        val d = memSharded.shards(si % memSharded.shards.size)
-          .topK(qvecs(qi % qvecs.size), 20).zipWithIndex
-          .map { case ((id, _), i) => (id, i + 1) }
-        val l = memShardedLex.shards(si)
-          .searchWand(termSets(qi % termSets.size), 20).zipWithIndex
-          .map { case ((id, _), i) => (id, i + 1) }
-        val n = graft.operators.Bm25.rrfFuseLocal(Seq(d, l), 60, 10).length
+        val si = qi % memShardedLex.size
+        val n = graft.serve.HybridTier.fuse(
+          memSharded(si % memSharded.size).topK(qvecs(qi % qvecs.size), 20),
+          memShardedLex(si).searchWand(termSets(qi % termSets.size), 20),
+          10, 60).length
         require(n == 10, s"memory_hybrid_shard returned $n rows")
       },
       "search_json" -> { qi: Int =>

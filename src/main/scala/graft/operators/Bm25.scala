@@ -120,6 +120,30 @@ object Bm25 {
       .sortWithinPartitions(col(idCol))
   }
 
+  /** The whole-corpus BM25 statistics a serving tier holds: document
+    * count `n`, total length `sumDl`, per-term document frequency `df`,
+    * and `idf` ([[idfByTerm]] over them, derived on first use so a caller
+    * that only amends the counts never runs its job).
+    */
+  final case class CorpusStats(n: Long, sumDl: Long, df: Map[String, Long])(
+      spark: org.apache.spark.sql.SparkSession) {
+    def avgdl: Double = sumDl.toDouble / n.toDouble
+    lazy val idf: Map[String, Double] = idfByTerm(df, n, spark)
+  }
+
+  /** [[CorpusStats]] of `docs` (dl = whitespace-token count of `textCol`,
+    * the [[buildPostings]] rule) and its `postings`: one global aggregate
+    * for (Σdl, n), one collect of the per-term posting counts.
+    */
+  def corpusStats(docs: DataFrame, textCol: String,
+                  postings: DataFrame): CorpusStats = {
+    val dl = docs.select(size(split(col(textCol), " ")).cast("long").as("dl"))
+      .agg(sum("dl"), count(lit(1))).head()
+    val df = postings.groupBy("term").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    CorpusStats(dl.getLong(1), dl.getLong(0), df)(docs.sparkSession)
+  }
+
   /** idf per term from the df table — INDEX METADATA, computed once at
     * build time through the same [[graft.functions.DetMath.withLnDet]]
     * series the batch path uses (one LocalTableScan job, vocab-bounded),

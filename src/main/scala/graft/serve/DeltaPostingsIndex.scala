@@ -1,7 +1,6 @@
 package graft.serve
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 import graft.functions.DetMath
 
@@ -389,14 +388,9 @@ object DeltaPostingsIndex {
     */
   def fromDataFrame(postings: DataFrame, idCol: String,
                     baseN: Long, baseSumDl: Long,
-                    k1: Double = 1.2, b: Double = 0.75): DeltaPostingsIndex = {
-    val rows = postings
-      .select(col("term"), col(idCol).cast("long"), col("tf").cast("long"),
-        col("dl").cast("long"))
-      .collect()
-      .map(r => (r.getString(0), (r.getLong(1), r.getLong(2), r.getLong(3))))
-    fromRows(rows, baseN, baseSumDl, k1, b)
-  }
+                    k1: Double = 1.2, b: Double = 0.75): DeltaPostingsIndex =
+    fromRows(MemoryPostingsIndex.collectRows(postings, idCol),
+      baseN, baseSumDl, k1, b)
 
   /** Build from already-collected (term, (id, tf, dl)) posting rows —
     * the Spark-free loader (GraftProps' random-op property uses it).

@@ -3,8 +3,6 @@ package graft.serve
 import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, IOException}
 import java.net.{InetSocketAddress, Socket}
 
-import graft.operators.Bm25
-
 /** The shard-fleet wire protocol's opcodes — ONE definition shared by the
   * client below and the shard process ([[graft.tools.FleetShardServer]]),
   * so the two ends cannot drift. Frames are DataInput/DataOutput over one
@@ -163,8 +161,8 @@ final class FleetClient(ports: Seq[Int], host: String = "127.0.0.1",
       in => Seq.fill(in.readInt())((in.readLong(), in.readLong()))), k)
 
   /** Hybrid request over the fleet: both legs fan out in ONE frame per
-    * shard, merge to poolK per leg, RRF-fuse locally — the
-    * [[ShardedHybridServer]] fold exactly.
+    * shard and merge to poolK per leg; the merged legs go through
+    * [[HybridTier.fuse]], the fold every hybrid tier ends in.
     */
   def hybrid(qv: Seq[Float], terms: Seq[String], k: Int,
              poolK: Int, c: Int = 60): Seq[(Long, Double)] = {
@@ -175,11 +173,8 @@ final class FleetClient(ports: Seq[Int], host: String = "127.0.0.1",
         terms.foreach(out.writeUTF)
       },
       in => (readList(in), readList(in)))
-    val d = TopK.merge(per.map(_._1), poolK)
-      .zipWithIndex.map { case ((id, _), i) => (id, i + 1) }
-    val l = TopK.merge(per.map(_._2), poolK)
-      .zipWithIndex.map { case ((id, _), i) => (id, i + 1) }
-    Bm25.rrfFuseLocal(Seq(d, l), c, k)
+    HybridTier.fuse(TopK.merge(per.map(_._1), poolK),
+      TopK.merge(per.map(_._2), poolK), k, c)
   }
 
   /** Dense top-k against ONE shard — the republish probe's per-shard
@@ -235,46 +230,45 @@ final class FleetClient(ports: Seq[Int], host: String = "127.0.0.1",
   def close(): Unit = conns.foreach(_.kill())
 }
 
-/** The fleet as the HYBRID door's serving tier: one [[FleetProtocol
-  * .OpHybrid]] frame per shard carries both legs, the client merges each
-  * leg to poolK and RRF-fuses locally — [[FleetClient.hybrid]] replays
-  * [[ShardedHybridServer]]'s fold exactly, so the door's results stay
-  * bit-identical to the in-process fan-out (FleetBench REQUIRES it).
-  */
-final class FleetHybridTier(client: FleetClient) extends HybridTier {
-  def searchHybrid(qvec: Seq[Float], terms: Seq[String], k: Int,
-                   poolK: Int = 20, c: Int = 60): Seq[(Long, Double)] =
-    client.hybrid(qvec, terms, k, poolK, c)
-}
-
-/** The FLEET as a routed-front-door serving tier — what lets the real
-  * [[graft.api.SemanticSearch]] front door (JSON parse → coverage route →
-  * serve/fallback → stringify) run its covered path over shard PROCESSES
-  * instead of an in-process array: same door, same route decision, the
-  * dense scoring fans out over TCP. Coverage is deliberately NARROWER
-  * than [[MemoryServer]]'s: the shard protocol ships no filter predicate,
-  * so only UNFILTERED requests route here — a filtered request reads as
-  * uncovered and takes the door's documented fallback (gate-admitted
-  * exact job, or shed). Metadata columns for response assembly come from
-  * the coordinator's own loaded copy (`meta`), the way a fleet
-  * coordinator holds doc metadata while shards hold vectors.
+/** The FLEET as the serving tier of both routed front doors — what lets
+  * the real [[graft.api.SemanticSearch]] and [[graft.api.HybridSearch]]
+  * doors (JSON parse → coverage route → serve/fallback → response) run
+  * their covered path over shard PROCESSES instead of in-process slices:
+  * same doors, same route decisions, the scoring fans out over TCP.
   *
-  * Results on the covered path are bit-identical to an in-process exact
-  * server over the same rows (FleetBench REQUIRES it at warm-up): each
-  * shard runs the same scan fold, the disjoint-slice merge is exact, and
-  * the door stringifies the same way.
+  * Two ways to reach the fleet, one tier: a single [[FleetClient]] the
+  * caller's thread owns (FleetClient is not thread-safe), or a
+  * [[FleetDoor]] pool, which makes one door instance safe across request
+  * threads — each covered request checks a client out for just its
+  * fan-out.
+  *
+  * Dense coverage is deliberately NARROWER than [[MemoryServer]]'s: the
+  * shard protocol ships no filter predicate and the shards hold no
+  * metadata, so only UNFILTERED requests for ids and scores route here —
+  * anything else reads as uncovered and takes the door's documented
+  * fallback (gate-admitted exact job, or shed). Hybrid requests carry
+  * both legs in one [[FleetProtocol.OpHybrid]] frame per shard
+  * ([[FleetClient.hybrid]]).
+  *
+  * Covered results are bit-identical to the in-process fan-out over the
+  * same slices (FleetShardSpec pins it; FleetBench REQUIRES it at
+  * warm-up): each shard runs the same index code, the disjoint-slice
+  * merge is exact, and the hybrid legs end in the same fold.
   */
-final class FleetTier(client: FleetClient,
-                      meta: Option[MemoryAnnIndex] = None)
-  extends ServingTier {
+final class FleetTier private (
+    withClient: (FleetClient => Seq[(Long, Double)]) => Seq[(Long, Double)])
+  extends ServingTier with HybridTier {
+
+  def this(client: FleetClient) = this(f => f(client))
+  def this(door: FleetDoor) = this(f => door.withClient(f))
 
   def servesExactDense: Boolean = true
+  def servesExactHybrid: Boolean = true
 
-  def metaColumns: Set[String] = meta.map(_.metaColumns).getOrElse(Set.empty)
+  def metaColumns: Set[String] = Set.empty
 
   def metaString(colName: String, id: Long): String =
-    meta.map(_.metaString(colName, id)).getOrElse(
-      sys.error(s"FleetTier has no coordinator metadata for '$colName'"))
+    throw new IllegalStateException(s"the fleet tier holds no metadata ('$colName')")
 
   /** Only the absent/null filter parses — anything else routes to the
     * door's fallback (see the class doc).
@@ -287,6 +281,10 @@ final class FleetTier(client: FleetClient,
                  dnf: Seq[Seq[MetaFilter]]): Seq[(Long, Double)] = {
     require(dnf == Seq(Nil),
       "FleetTier serves unfiltered requests only (tryParseFilter gates this)")
-    client.dense(qvec, k)
+    withClient(_.dense(qvec, k))
   }
+
+  def searchHybrid(qvec: Seq[Float], terms: Seq[String], k: Int,
+                   poolK: Int, c: Int): Seq[(Long, Double)] =
+    withClient(_.hybrid(qvec, terms, k, poolK, c))
 }

@@ -91,33 +91,3 @@ final class FleetDoor(ports: Seq[Int], val poolSize: Int,
     all.foreach(_.close())
   }
 }
-
-/** The pool as a routed-front-door serving tier: the SAME coverage and
-  * bit-identity contract as [[FleetTier]] (unfiltered requests only;
-  * exact merge over live shards), but safe for one
-  * [[graft.api.SemanticSearch]] instance shared across request threads
-  * — each covered request checks a client out for just its fan-out.
-  */
-final class PooledFleetTier(door: FleetDoor,
-                            meta: Option[MemoryAnnIndex] = None)
-  extends ServingTier {
-
-  def servesExactDense: Boolean = true
-
-  def metaColumns: Set[String] = meta.map(_.metaColumns).getOrElse(Set.empty)
-
-  def metaString(colName: String, id: Long): String =
-    meta.map(_.metaString(colName, id)).getOrElse(
-      sys.error(s"PooledFleetTier has no coordinator metadata for '$colName'"))
-
-  def tryParseFilter(node: com.fasterxml.jackson.databind.JsonNode)
-      : Option[Seq[Seq[MetaFilter]]] =
-    if (node == null || node.isNull) Some(Seq(Nil)) else None
-
-  def topKVecDnf(qvec: Seq[Float], k: Int,
-                 dnf: Seq[Seq[MetaFilter]]): Seq[(Long, Double)] = {
-    require(dnf == Seq(Nil),
-      "PooledFleetTier serves unfiltered requests only (tryParseFilter gates this)")
-    door.withClient(_.dense(qvec, k))
-  }
-}

@@ -413,10 +413,24 @@ object MemoryAnnIndex {
     fromCollected(collected, centroids, metaCols, isString)
   }
 
+  /** The [[Sharded]] serving form: [[fromDataFrame]]'s input, evaluated
+    * ONCE and cut by [[Sharded.slices]] into per-replica indexes. Every
+    * slice carries the full centroid set (IVF probes compose, see
+    * [[Sharded]]) and its own string dictionaries. An empty corpus is
+    * refused, as [[fromRows]] refuses it.
+    */
+  def sharded(df: DataFrame, idCol: String, embCol: String, cellCol: String,
+              centroids: Seq[Seq[Float]], nShards: Int,
+              metaCols: Seq[String] = Nil): Seq[MemoryAnnIndex] = {
+    val (rows, isString) = collectRows(df, idCol, embCol, cellCol, metaCols)
+    require(rows.nonEmpty, "MemoryAnnIndex: empty corpus")
+    Sharded.slices(rows, nShards)(_.getLong(0))
+      .map(fromCollected(_, centroids, metaCols, isString))
+  }
+
   /** One collect of (id, embedding, cell, metadata…) rows — the single
-    * evaluation of the input plan that [[fromDataFrame]] and
-    * [[ShardedAnnIndex.fromDataFrame]] both load from — plus which
-    * metadata columns are strings.
+    * evaluation of the input plan that [[fromDataFrame]] and [[sharded]]
+    * both load from — plus which metadata columns are strings.
     */
   private[serve] def collectRows(df0: DataFrame, idCol: String, embCol: String,
                                  cellCol: String, metaCols: Seq[String])
@@ -478,90 +492,6 @@ object MemoryAnnIndex {
       .getOrElse(sys.error(s"no ${AnnIndexMeta.FileName} sidecar at $indexDir"))
     fromDataFrame(spark.read.parquet(indexDir), idCol, meta.embCol,
       meta.assignCol, meta.centroids)
-  }
-}
-
-/** The sharded serving form of the flat/IVF memory tier — what
-  * [[MemoryAnnIndex]]'s 10 M-doc scale note describes, made executable:
-  * rows hash-shard by id into disjoint [[MemoryAnnIndex]] slices (in a
-  * deployment, one slice per serving replica; here one object holds
-  * them to make the contract testable), a query fans out to every
-  * shard, and the k-bounded per-shard results merge by [[TopK.merge]]
-  * under the global (score DESC, id ASC) order. Merged results are
-  * BIT-IDENTICAL to the unsharded index: shards cover the corpus
-  * disjointly, each row's score uses the same fold wherever it lives,
-  * and the global top-k is contained in the union of shard top-k's. IVF
-  * probing composes
-  * because every shard carries the SAME centroid set — each shard
-  * probes the same query-nearest cells over its own row subset, so the
-  * union of scanned rows equals the unsharded probe's scan set.
-  *
-  * String-metadata caveat: dictionaries are per-shard (codes depend on
-  * the shard's value set), so string filters must resolve per shard —
-  * use [[topKStringEq]], never a single shard's [[MemoryAnnIndex.stringFilter]]
-  * code against the others.
-  */
-final class ShardedAnnIndex private[serve] (val shards: Seq[MemoryAnnIndex]) {
-
-  require(shards.nonEmpty, "ShardedAnnIndex: no shards")
-  def nShards: Int = shards.length
-  def size: Int = shards.map(_.size).sum
-
-  private def merge(k: Int,
-                    per: MemoryAnnIndex => Seq[(Long, Double)]): Seq[(Long, Double)] =
-    TopK.merge(shards.map(per), k)
-
-  def topK(query: Seq[Float], k: Int,
-           filters: Seq[MetaFilter] = Nil): Seq[(Long, Double)] =
-    merge(k, _.topK(query, k, filters))
-
-  def topKIvf(query: Seq[Float], k: Int, nProbe: Int,
-              filters: Seq[MetaFilter] = Nil): Seq[(Long, Double)] =
-    merge(k, _.topKIvf(query, k, nProbe, filters))
-
-  /** Filtered fan-out where a string-equality leg resolves through EACH
-    * shard's own dictionary (per-shard codes differ by construction).
-    */
-  def topKStringEq(query: Seq[Float], k: Int, colName: String,
-                   value: String,
-                   numericFilters: Seq[MetaFilter] = Nil): Seq[(Long, Double)] =
-    merge(k, sh => sh.topK(query, k,
-      sh.stringFilter(colName, value) +: numericFilters))
-}
-
-object ShardedAnnIndex {
-
-  /** Deterministic hash shard of an id: splitmix64-mixed then
-    * non-negative mod — balanced for sequential ids (plain `id % n`
-    * would stripe correlated inserts) and reproducible everywhere.
-    */
-  def shardOf(id: Long, nShards: Int): Int = {
-    var z = id + 0x9e3779b97f4a7c15L
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    z ^= (z >>> 31)
-    (((z % nShards) + nShards) % nShards).toInt
-  }
-
-  /** Shard the same assigned frame [[MemoryAnnIndex.fromDataFrame]]
-    * takes. All shards receive the full centroid set (the IVF probe
-    * contract above); empty shards are dropped (a tiny corpus on many
-    * shards serves from the occupied ones). The input plan is evaluated
-    * ONCE and partitioned driver-side by the shard rule, as
-    * [[ShardedSparseIndex]] does (a per-shard isEmpty + collect would run
-    * it 2·nShards times).
-    */
-  def fromDataFrame(df: DataFrame, idCol: String, embCol: String,
-                    cellCol: String, centroids: Seq[Seq[Float]],
-                    nShards: Int,
-                    metaCols: Seq[String] = Nil): ShardedAnnIndex = {
-    require(nShards >= 1, s"nShards $nShards must be >= 1")
-    val (rows, isString) =
-      MemoryAnnIndex.collectRows(df, idCol, embCol, cellCol, metaCols)
-    val bySh = rows.groupBy(r => shardOf(r.getLong(0), nShards))
-    val shards = (0 until nShards).flatMap(sh => bySh.get(sh).map(
-      MemoryAnnIndex.fromCollected(_, centroids, metaCols, isString)))
-    new ShardedAnnIndex(shards)
   }
 }
 
@@ -1077,19 +1007,32 @@ object MemoryPostingsIndex {
     */
   def fromDataFrame(postings: DataFrame, idCol: String,
                     idf: Map[String, Double], avgdl: Double,
-                    k1: Double = 1.2, b: Double = 0.75): MemoryPostingsIndex = {
-    val rows = postings
+                    k1: Double = 1.2, b: Double = 0.75): MemoryPostingsIndex =
+    fromRows(collectRows(postings, idCol), idf, avgdl, k1, b)
+
+  /** The [[Sharded]] serving form over the same postings frame, evaluated
+    * once. `idf`/`avgdl` MUST be the whole-corpus statistics (per-slice
+    * stats would change every score). An empty frame has no slices and
+    * answers `Nil`, like the unsharded index.
+    */
+  def sharded(postings: DataFrame, idCol: String,
+              idf: Map[String, Double], avgdl: Double, nShards: Int,
+              k1: Double = 1.2, b: Double = 0.75): Seq[MemoryPostingsIndex] =
+    Sharded.slices(collectRows(postings, idCol), nShards)(_._2._1)
+      .map(fromRows(_, idf, avgdl, k1, b))
+
+  /** The postings frame's (term, (id, tf, dl)) rows, one collect. */
+  private[graft] def collectRows(postings: DataFrame,
+                                 idCol: String): Array[(String, (Long, Long, Long))] =
+    postings
       .select(col("term"), col(idCol).cast("long"), col("tf").cast("long"),
         col("dl").cast("long"))
       .collect()
       .map(r => (r.getString(0), (r.getLong(1), r.getLong(2), r.getLong(3))))
-    fromRows(rows, idf, avgdl, k1, b)
-  }
 
-  /** Build from already-collected (term, (id, tf, dl)) rows — the
-    * driver-side partition path [[ShardedPostingsIndex.fromDataFrame]]
-    * uses (one input evaluation for the whole fleet) and the Spark-free
-    * loader [[graft.tools.FleetShardServer]] uses.
+  /** Build from already-collected (term, (id, tf, dl)) rows — one slice
+    * of [[sharded]], or the Spark-free loader
+    * [[graft.tools.FleetShardServer]] uses.
     */
   private[graft] def fromRows(rows: Array[(String, (Long, Long, Long))],
                               idf: Map[String, Double], avgdl: Double,
@@ -1099,112 +1042,6 @@ object MemoryPostingsIndex {
       t -> xs.map(_._2).sortBy(_._1)
     }
     new MemoryPostingsIndex(byTerm, idf, avgdl, k1, b)
-  }
-}
-
-/** The sharded serving form of the LEXICAL tier — the postings twin of
-  * [[ShardedAnnIndex]], and the deployment form SCALE.md's 10× serving
-  * battery names: at ~100k docs the single-replica WAND walk holds the
-  * latency target with 4-6× headroom but falls to ~0.4-0.5× of the
-  * reference's 1,000 QPS bar on corpus-common terms; throughput above
-  * one box's postings-walk capacity comes from replica fan-out, which
-  * this class makes testable in one process.
-  *
-  * Documents hash-shard by id ([[ShardedAnnIndex.shardOf]] — disjoint
-  * cover), each shard holds its own postings slice, queries fan out as
-  * per-shard WAND top-k and the k-bounded lists merge by [[TopK.merge]]
-  * under the global (score DESC, id ASC) order. Merged results are
-  * BIT-IDENTICAL to the unsharded index: a document's BM25 score
-  * depends only on ITS OWN (tf, dl) postings and the GLOBAL (idf,
-  * avgdl) statistics — which the caller must pass from the WHOLE
-  * corpus, exactly as a deployment broadcasts dimension stats to
-  * replicas (per-shard recomputed stats would change every score and
-  * break parity) — so each row scores the same wherever it lives, the
-  * cover is disjoint, and the global top-k is contained in the union of
-  * shard top-k's. WAND's pruning is per-shard and answer-preserving, so
-  * the fan-out keeps the skipping.
-  */
-final class ShardedPostingsIndex private[serve] (
-    val shards: Seq[MemoryPostingsIndex]) {
-
-  require(shards.nonEmpty, "ShardedPostingsIndex: no shards")
-  def nShards: Int = shards.length
-
-  /** Fan-out WAND top-k, merged k-bounded. */
-  def search(terms: Seq[String], k: Int): Seq[(Long, Double)] =
-    searchCounted(terms, k)._1
-
-  /** [[search]] plus summed (fullyEvaluatedDocs, skippedPostings) across
-    * shards — the pruning counters, preserved through the fan-out.
-    */
-  def searchCounted(terms: Seq[String], k: Int)
-      : (Seq[(Long, Double)], Long, Long) = {
-    val per = shards.map(_.searchWandCounted(terms, k))
-    (TopK.merge(per.map(_._1), k), per.map(_._2).sum, per.map(_._3).sum)
-  }
-}
-
-object ShardedPostingsIndex {
-
-  /** Shard the same postings frame [[MemoryPostingsIndex.fromDataFrame]]
-    * takes. `idf`/`avgdl` MUST be the whole-corpus statistics (see the
-    * class doc — per-shard stats would break bit-parity). Empty shards
-    * are dropped.
-    */
-  def fromDataFrame(postings: DataFrame, idCol: String,
-                    idf: Map[String, Double], avgdl: Double,
-                    nShards: Int,
-                    k1: Double = 1.2, b: Double = 0.75): ShardedPostingsIndex = {
-    require(nShards >= 1, s"nShards $nShards must be >= 1")
-    // ONE evaluation of the input plan, partitioned driver-side by the
-    // shard rule (the ShardedSparseIndex fix: per-shard isEmpty+collect
-    // re-ran the whole upstream plan 2·nShards times)
-    val rows = postings
-      .select(col("term"), col(idCol).cast("long"), col("tf").cast("long"),
-        col("dl").cast("long"))
-      .collect()
-      .map(r => (r.getString(0), (r.getLong(1), r.getLong(2), r.getLong(3))))
-    val bySh = rows.groupBy { case (_, (id, _, _)) =>
-      ShardedAnnIndex.shardOf(id, nShards)
-    }
-    val shards = (0 until nShards).flatMap(sh =>
-      bySh.get(sh).map(MemoryPostingsIndex.fromRows(_, idf, avgdl, k1, b)))
-    new ShardedPostingsIndex(shards)
-  }
-}
-
-/** Hybrid serving over SHARDED legs — the deployment form of
-  * [[MemoryServer.searchHybrid]] for corpora whose per-leg walk exceeds
-  * one replica's capacity (SCALE.md's 10× battery: the lexical leg is
-  * what drops the hybrid tiers below the QPS bar; dense shards already
-  * hold it). Each leg fans out to its own disjoint shard set
-  * ([[ShardedAnnIndex]] exact scan + [[ShardedPostingsIndex]] WAND),
-  * the k-bounded per-shard lists merge per leg, and the two poolK-deep
-  * leg lists fuse locally by reciprocal rank.
-  *
-  * BIT-IDENTICAL to `MemoryServer.searchHybrid` on an exact
-  * (defaultNProbe == 0) server over the same rows: each sharded leg is
-  * bit-identical to its unsharded twin (the two classes' own
-  * contracts), ranks are assigned to identical ordered lists, and the
-  * fusion ([[graft.operators.Bm25.rrfFuseLocal]]) is the same local
-  * fold in the same pinned leg order. ServeSpec pins the equality
-  * across shard counts; the q287 oracle pins it against DuckDB.
-  */
-final class ShardedHybridServer(val dense: ShardedAnnIndex,
-                                val lexical: ShardedPostingsIndex)
-  extends HybridTier {
-
-  /** Fused hybrid request: dense + lexical candidate lists (each
-    * `poolK` deep, each a sharded fan-out), RRF-fused. Rank = 1-based
-    * position in each merged leg.
-    */
-  def searchHybrid(qvec: Seq[Float], terms: Seq[String], k: Int,
-                   poolK: Int = 20, c: Int = 60): Seq[(Long, Double)] = {
-    val d = dense.topK(qvec, poolK).zipWithIndex
-      .map { case ((id, _), i) => (id, i + 1) }
-    val l = lexical.search(terms, poolK).zipWithIndex
-      .map { case ((id, _), i) => (id, i + 1) }
-    graft.operators.Bm25.rrfFuseLocal(Seq(d, l), c, k)
   }
 }
 
@@ -1296,8 +1133,8 @@ final class ServingIndex(spark: SparkSession, indexDir: String, idCol: String) {
   * `query` requests embed on the caller's side or stay on the
   * [[graft.api.SemanticSearch]] DataFrame tier, where the embedder and
   * the filter DSL live). Hybrid fuses the two k-bounded legs with
-  * [[Bm25.rrfFuseLocal]] — the identical fusion the Spark path uses, so
-  * hybrid results also match bit-for-bit.
+  * [[HybridTier.fuse]] — the Spark path's fusion fold, so hybrid results
+  * also match bit-for-bit.
   */
 final class MemoryServer(val dense: MemoryAnnIndex,
                          lexical: Option[MemoryPostingsIndex],
@@ -1322,12 +1159,12 @@ final class MemoryServer(val dense: MemoryAnnIndex,
     */
   def servesExactDense: Boolean = defaultNProbe == 0
 
-  /** Whether a postings tier is attached — the other routing
-    * precondition of [[graft.api.HybridSearch]] (a dense-only server
-    * cannot serve the lexical leg; routing onto it would crash
-    * per-request instead of taking the documented job-path fallback).
+  /** True iff hybrid requests serve exactly: an exact dense leg
+    * ([[servesExactDense]]) AND a postings tier attached — a dense-only
+    * server cannot serve the lexical leg, so [[graft.api.HybridSearch]]
+    * takes its job path instead of failing per request.
     */
-  def hasLexical: Boolean = lexical.nonEmpty
+  def servesExactHybrid: Boolean = servesExactDense && lexical.nonEmpty
 
   /** Dense top-k: IVF-probed when the server was built with a probe
     * width, exact otherwise. Filtered exact requests route through the
@@ -1355,16 +1192,11 @@ final class MemoryServer(val dense: MemoryAnnIndex,
       .searchWand(terms, k)
 
   /** Hybrid: dense + lexical candidate lists (each `poolK` deep), fused
-    * by reciprocal rank. Rank = 1-based position in each leg.
+    * by [[HybridTier.fuse]].
     */
   def searchHybrid(qvec: Seq[Float], terms: Seq[String], k: Int,
-                   poolK: Int = 20, c: Int = 60): Seq[(Long, Double)] = {
-    val d = topKVec(qvec, poolK).zipWithIndex
-      .map { case ((id, _), i) => (id, i + 1) }
-    val l = searchLexical(terms, poolK).zipWithIndex
-      .map { case ((id, _), i) => (id, i + 1) }
-    Bm25.rrfFuseLocal(Seq(d, l), c, k)
-  }
+                   poolK: Int = 20, c: Int = 60): Seq[(Long, Double)] =
+    HybridTier.fuse(topKVec(qvec, poolK), searchLexical(terms, poolK), k, c)
 
   /** Hybrid via CONVEX (min-max normalized) score fusion — the q176
     * combiner served job-free: each leg's scores normalize over its own

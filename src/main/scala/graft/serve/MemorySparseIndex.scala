@@ -134,17 +134,30 @@ object MemorySparseIndex {
     * [[graft.operators.Sparse.topKSparse]] scans (persisted
     * `partitionBy("term")` at scale; a serving node loads it in one read).
     */
-  def fromDataFrame(sparseDocs: DataFrame, idCol: String): MemorySparseIndex = {
-    val rows = sparseDocs
+  def fromDataFrame(sparseDocs: DataFrame, idCol: String): MemorySparseIndex =
+    fromRows(collectRows(sparseDocs, idCol))
+
+  /** The [[Sharded]] serving form over the same relation, evaluated once
+    * (q286 feeds an uncheckpointed TF aggregation; a per-shard collect
+    * would re-run it per shard). No global statistics to thread — the
+    * dot product is per document. An empty relation has no slices and
+    * answers `Nil`, like the unsharded index.
+    */
+  def sharded(sparseDocs: DataFrame, idCol: String,
+              nShards: Int): Seq[MemorySparseIndex] =
+    Sharded.slices(collectRows(sparseDocs, idCol), nShards)(_._2._1).map(fromRows)
+
+  /** The relation's (term, (id, w)) rows, one collect. */
+  private[graft] def collectRows(sparseDocs: DataFrame,
+                                 idCol: String): Array[(String, (Long, Long))] =
+    sparseDocs
       .select(col("term"), col(idCol).cast("long"), col("w").cast("long"))
       .collect()
       .map(r => (r.getString(0), (r.getLong(1), r.getLong(2))))
-    fromRows(rows)
-  }
 
-  /** Build from already-collected (term, (id, w)) rows — the driver-side
-    * partition path [[ShardedSparseIndex.fromDataFrame]] uses so the
-    * input plan evaluates exactly once for the whole fleet.
+  /** Build from already-collected (term, (id, w)) rows — one slice of
+    * [[sharded]], or the Spark-free loader
+    * [[graft.tools.FleetShardServer]] uses.
     */
   private[graft] def fromRows(
       rows: Array[(String, (Long, Long))]): MemorySparseIndex = {
@@ -166,8 +179,8 @@ object MemorySparseIndex {
   *     published base and the memory-resident delta segment are
   *     disjoint-id document sets, so base-WAND top-k merged with the
   *     exhaustively-scored delta under (score DESC, id ASC) IS the
-  *     rebuild's top-k — the same exactness proof as
-  *     [[ShardedSparseIndex]], with the delta as a second "shard".
+  *     rebuild's top-k — the same exactness proof as [[Sharded]]'s
+  *     fan-out, with the delta as a second "shard".
   *     Nothing re-derives per query (BM25's merged (idf, avgdl) has no
   *     analog), and integer arithmetic leaves no fold-order question.
   *  2. **Retraction is symmetric with addition.** [[retractDoc]]
@@ -328,13 +341,8 @@ object DeltaSparseIndex {
   /** Load the immutable base from the same sparse-vector relation
     * (id, term, w) every sparse tier takes.
     */
-  def fromDataFrame(sparseDocs: DataFrame, idCol: String): DeltaSparseIndex = {
-    val rows = sparseDocs
-      .select(col("term"), col(idCol).cast("long"), col("w").cast("long"))
-      .collect()
-      .map(r => (r.getString(0), (r.getLong(1), r.getLong(2))))
-    fromRows(rows)
-  }
+  def fromDataFrame(sparseDocs: DataFrame, idCol: String): DeltaSparseIndex =
+    fromRows(MemorySparseIndex.collectRows(sparseDocs, idCol))
 
   /** Build from already-collected (term, (id, w)) rows — the Spark-free
     * loader (GraftProps' random-op property uses it).
@@ -343,71 +351,4 @@ object DeltaSparseIndex {
       rows: Array[(String, (Long, Long))]): DeltaSparseIndex =
     new DeltaSparseIndex(MemorySparseIndex.fromRows(rows),
       rows.iterator.map(_._2._1).toSet)
-}
-
-/** The sharded serving form of the LEARNED-SPARSE tier — the third
-  * member of the replica-fan-out family ([[ShardedAnnIndex]] for dense,
-  * [[ShardedPostingsIndex]] for BM25): documents hash-shard disjointly
-  * by id (the same splitmix64 rule), each shard holds its own postings
-  * slice and WAND-walks it independently, and the k-bounded per-shard
-  * lists merge by [[TopK.mergeLong]] under the global (score DESC,
-  * id ASC) order.
-  *
-  * Bit-identity to the unsharded walk is even SIMPLER here than for
-  * BM25: a document's sparse dot product Σ_t w_q(t)·w_d(t) depends only
-  * on its own weights and the query — there are NO corpus statistics at
-  * all, so nothing needs broadcasting to keep shards score-consistent.
-  * Integer arithmetic means no fold-order question either. The cover is
-  * disjoint and the global top-k is contained in the union of shard
-  * top-k's, so the merge is exact. Per-shard WAND upper bounds (each
-  * shard's own maxW table) are valid bounds over that shard's rows, so
-  * the pruning is answer-preserving per shard and the counters sum.
-  */
-final class ShardedSparseIndex private[serve] (
-    val shards: Seq[MemorySparseIndex]) {
-
-  require(shards.nonEmpty, "ShardedSparseIndex: no shards")
-  def nShards: Int = shards.length
-
-  /** Fan-out WAND top-k, merged k-bounded. */
-  def topKWand(query: Map[String, Long], k: Int): Seq[(Long, Long)] =
-    topKWandCounted(query, k)._1
-
-  /** [[topKWand]] plus summed (fullyEvaluatedDocs, skippedPostings)
-    * across shards — the pruning counters, preserved through the
-    * fan-out.
-    */
-  def topKWandCounted(query: Map[String, Long], k: Int)
-      : (Seq[(Long, Long)], Long, Long) = {
-    val per = shards.map(_.topKWandCounted(query, k))
-    (TopK.mergeLong(per.map(_._1), k), per.map(_._2).sum, per.map(_._3).sum)
-  }
-}
-
-object ShardedSparseIndex {
-
-  /** Shard the same sparse-vector relation
-    * [[MemorySparseIndex.fromDataFrame]] takes. No global statistics to
-    * thread (see the class doc). Empty shards are dropped.
-    *
-    * The input plan is evaluated ONCE (a single collect) and the rows
-    * partitioned by the shard rule driver-side — the data is already
-    * driver-bounded by the memory-tier contract, and the earlier
-    * per-shard `isEmpty` + collect pair re-ran the whole upstream plan
-    * 2·nShards times (q286 feeds an uncheckpointed TF aggregation).
-    */
-  def fromDataFrame(sparseDocs: DataFrame, idCol: String,
-                    nShards: Int): ShardedSparseIndex = {
-    require(nShards >= 1, s"nShards $nShards must be >= 1")
-    val rows = sparseDocs
-      .select(col("term"), col(idCol).cast("long"), col("w").cast("long"))
-      .collect()
-      .map(r => (r.getString(0), (r.getLong(1), r.getLong(2))))
-    val bySh = rows.groupBy { case (_, (id, _)) =>
-      ShardedAnnIndex.shardOf(id, nShards)
-    }
-    val shards = (0 until nShards).flatMap(sh =>
-      bySh.get(sh).map(MemorySparseIndex.fromRows))
-    new ShardedSparseIndex(shards)
-  }
 }

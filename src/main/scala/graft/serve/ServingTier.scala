@@ -4,10 +4,11 @@ package graft.serve
   * tier behind it — extracted so the SAME door (JSON parse → coverage
   * route → serve/fallback → stringify) composes with either deployment
   * shape: the in-process memory tier ([[MemoryServer]]) or the
-  * multi-process shard fleet ([[FleetTier]]). The door's coverage rule is
-  * built from these five methods; a tier narrows its own coverage by
-  * returning None from [[tryParseFilter]] or fewer [[metaColumns]], and
-  * the door falls back to the Spark job path — never a wrong answer.
+  * multi-process shard fleet ([[FleetTier]], over one client or a
+  * [[FleetDoor]] pool). The door's coverage rule is built from these five
+  * methods; a tier narrows its own coverage by returning None from
+  * [[tryParseFilter]] or fewer [[metaColumns]], and the door falls back
+  * to the Spark job path — never a wrong answer.
   *
   * Contract every implementation must keep (the bit-identity promise the
   * door makes): when [[servesExactDense]] is true, [[topKVecDnf]] returns
@@ -41,15 +42,41 @@ trait ServingTier {
                  dnf: Seq[Seq[MetaFilter]]): Seq[(Long, Double)]
 }
 
-/** What the HYBRID front door ([[graft.api.HybridSearch]]) needs from an
-  * exact fused-retrieval tier: both legs pooled `poolK` deep, RRF-fused
-  * to `k` with the engine's one fusion fold ([[graft.operators.Bm25
-  * .rrfFuseLocal]] semantics — 1-based ranks per leg, (rrf DESC, id ASC)
-  * order). Implementations must be EXACT (the door's bit-identity
-  * promise): the in-process [[ShardedHybridServer]], the [[MemoryServer]]
-  * monolith, and the multi-process [[FleetHybridTier]] all are.
+/** What the HYBRID front door ([[graft.api.HybridSearch]]) needs from a
+  * fused-retrieval tier: both legs pooled `poolK` deep, folded to `k` by
+  * [[HybridTier.fuse]]. Three shapes implement it — the [[MemoryServer]]
+  * monolith, sharded legs in one process ([[Sharded.hybrid]]) and the
+  * multi-process fleet ([[FleetTier]]) — and all three end in that one
+  * fold.
+  *
+  * Contract (the door's bit-identity promise): when [[servesExactHybrid]]
+  * is true, [[searchHybrid]] returns EXACTLY the Spark path's fused
+  * `(id, rrf)` rows — same ids, same score bits. The door routes onto
+  * nothing else.
   */
 trait HybridTier {
+
+  /** True iff [[searchHybrid]] serves exactly — the door's routing
+    * precondition.
+    */
+  def servesExactHybrid: Boolean
+
   def searchHybrid(qvec: Seq[Float], terms: Seq[String], k: Int,
                    poolK: Int = 20, c: Int = 60): Seq[(Long, Double)]
+}
+
+object HybridTier {
+
+  /** The one hybrid fold: each best-first leg becomes 1-based ranks, and
+    * the two rank lists fuse in pinned (dense, lexical) order by
+    * [[graft.operators.Bm25.rrfFuseLocal]] — the engine's fusion fold, so
+    * (rrf DESC, id ASC) order and score bits match the Spark path's
+    * [[graft.operators.Bm25.rrfFuse]].
+    */
+  def fuse(dense: Seq[(Long, Double)], lexical: Seq[(Long, Double)],
+           k: Int, c: Int): Seq[(Long, Double)] = {
+    def ranks(leg: Seq[(Long, Double)]) =
+      leg.zipWithIndex.map { case ((id, _), i) => (id, i + 1) }
+    graft.operators.Bm25.rrfFuseLocal(Seq(ranks(dense), ranks(lexical)), c, k)
+  }
 }

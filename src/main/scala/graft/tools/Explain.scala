@@ -5,7 +5,12 @@ import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDown
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerStageCompleted, SparkListenerStageSubmitted, SparkListenerTaskEnd}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, BroadcastQueryStageExec, QueryStageExec, ShuffleQueryStageExec}
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
+import org.apache.spark.sql.graftbridge.StageBridge
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.api.GraftSession
 
@@ -18,7 +23,11 @@ import graft.api.GraftSession
   *
   * Stage columns: wall duration, tasks, summed executor run and CPU time,
   * input / shuffle-read / shuffle-write bytes and records, median and max
-  * task time with their ratio (skew), and memory / disk spill.
+  * task time with their ratio (skew), memory / disk spill, then what the
+  * stage ran. Adaptive query stages all carry one call-site name
+  * (`$anonfun$withThreadLocalCaptured$2 at CompletableFuture.java`), so
+  * they are named by their exchange instead — matched to the run's query
+  * stages by shuffle id or broadcast job tag — or `unattributed`.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -27,6 +36,14 @@ object Explain {
     val spark = GraftSession.getOrCreate()
     val stages = new StageTable
     spark.sparkContext.addSparkListener(stages)
+    // the noop write plans its own QueryExecution; its final adaptive
+    // plan holds the query stages the stage table is labelled from
+    val written = new java.util.concurrent.LinkedBlockingQueue[QueryExecution]()
+    spark.listenerManager.register(new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        written.add(qe): Unit
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    })
     names.zipWithIndex.foreach { case (name, i) =>
       // time construction separately: queries with driver-side steps
       // (stored-vector fetch, k-means, the components loop) do real work
@@ -39,6 +56,7 @@ object Explain {
       val group = s"explain-$i"
       val done = stages.watch(group)
       spark.sparkContext.setJobGroup(group, name)
+      written.clear()
       val t2 = System.nanoTime()
       df.write.format("noop").mode("overwrite").save()
       val t3 = System.nanoTime()
@@ -47,9 +65,36 @@ object Explain {
       // the listener bus is asynchronous: the run's stage events are all
       // delivered once its SQL execution's end event is
       done.await(30, TimeUnit.SECONDS)
-      stages.lines().foreach(println)
+      val plans = Option(written.poll(30, TimeUnit.SECONDS)).toSeq ++
+        Iterator.continually(written.poll()).takeWhile(_ != null)
+      stages.lines(plans.flatMap(qe => exchanges(qe.executedPlan)).toMap)
+        .foreach(println)
     }
     spark.stop()
+  }
+
+  /** Stage key → the exchange it ran, for every query stage of `plan`'s
+    * adaptive plans and subqueries: `shuffle <id>` for a shuffle stage,
+    * the broadcast's job tag for a broadcast stage.
+    */
+  private def exchanges(plan: SparkPlan): Seq[(String, String)] = {
+    val here = plan match {
+      case s: ShuffleQueryStageExec =>
+        Seq(s"shuffle ${s.shuffle.shuffleId}" ->
+          s"ShuffleQueryStage ${s.id}: ${s.shuffle.simpleString(8)}")
+      case b: BroadcastQueryStageExec => b.broadcast match {
+        case x: BroadcastExchangeExec =>
+          Seq(x.jobTag -> s"BroadcastQueryStage ${b.id}: ${x.simpleString(8)}")
+        case _ => Nil
+      }
+      case _ => Nil
+    }
+    val below = plan match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case p => p.children ++ p.subqueries
+    }
+    here ++ below.flatMap(exchanges)
   }
 
   /** Collects one line per completed stage of the jobs run under the
@@ -61,27 +106,41 @@ object Explain {
     @volatile private var group = ""
     @volatile private var done = new CountDownLatch(1)
     @volatile private var rootExecution = -1L
-    private val taskMs = new ConcurrentHashMap[Int, ConcurrentLinkedQueue[java.lang.Long]]()
-    private val buf = new ConcurrentLinkedQueue[String]()
+    // per running stage: its keys (see exchanges) and its task times
+    private val running = new ConcurrentHashMap[Int, (Seq[String], ConcurrentLinkedQueue[java.lang.Long])]()
+    // (metrics text, stage keys, call-site name) per completed stage
+    private val buf = new ConcurrentLinkedQueue[(String, Seq[String], String)]()
 
     def watch(g: String): CountDownLatch = {
-      buf.clear(); taskMs.clear(); rootExecution = -1L
+      buf.clear(); running.clear(); rootExecution = -1L
       done = new CountDownLatch(1)
       group = g
       done
     }
 
-    def lines(): Seq[String] = buf.asScala.toSeq
+    /** One line per stage, labelled through `exchanges` (stage key →
+      * exchange); a stage named only by the adaptive call site reads
+      * `unattributed`.
+      */
+    def lines(exchanges: Map[String, String]): Seq[String] =
+      buf.asScala.toSeq.map { case (metrics, keys, name) =>
+        metrics + keys.collectFirst(exchanges).getOrElse(
+          if (name.startsWith("$anonfun$withThreadLocalCaptured")) "unattributed"
+          else name).takeWhile(_ != '\n').take(120)
+      }
 
     override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
       if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-        taskMs.putIfAbsent(e.stageInfo.stageId, new ConcurrentLinkedQueue[java.lang.Long]())
+        running.putIfAbsent(e.stageInfo.stageId, (
+          StageBridge.shuffleDepId(e.stageInfo).map(id => s"shuffle $id").toSeq ++
+            Option(e.properties.getProperty("spark.job.tags")).toSeq.flatMap(_.split(",")),
+          new ConcurrentLinkedQueue[java.lang.Long]()))
 
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-      Option(taskMs.get(e.stageId)).foreach(_.add(e.taskInfo.duration))
+      Option(running.get(e.stageId)).foreach(_._2.add(e.taskInfo.duration))
 
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-      Option(taskMs.remove(e.stageInfo.stageId)).foreach { q =>
+      Option(running.remove(e.stageInfo.stageId)).foreach { case (keys, q) =>
         val si = e.stageInfo
         val tm = si.taskMetrics
         val ts = q.asScala.map(_.longValue).toIndexedSeq.sorted
@@ -90,15 +149,15 @@ object Explain {
         val dur = (for (a <- si.completionTime; b <- si.submissionTime) yield a - b)
           .getOrElse(-1L)
         val (in, sr, sw) = (tm.inputMetrics, tm.shuffleReadMetrics, tm.shuffleWriteMetrics)
-        buf.add(
+        buf.add((
           f"[stage ${si.stageId}%4d] dur=$dur%6d ms tasks=${si.numTasks}%4d " +
             f"exec=${tm.executorRunTime}%6d ms cpu=${tm.executorCpuTime / 1000000}%6d ms | " +
             f"in=${in.bytesRead}%10d B/${in.recordsRead}%9d " +
             f"sr=${sr.totalBytesRead}%10d B/${sr.recordsRead}%9d " +
             f"sw=${sw.bytesWritten}%10d B/${sw.recordsWritten}%9d | " +
             f"task med=$med%6d ms max=$max%6d ms skew=${if (med > 0) max.toDouble / med else 0.0}%5.1f | " +
-            f"spill mem=${tm.memoryBytesSpilled >> 20}%5d MB disk=${tm.diskBytesSpilled >> 20}%5d MB | " +
-            si.name.takeWhile(_ != '\n').take(80)): Unit
+            f"spill mem=${tm.memoryBytesSpilled >> 20}%5d MB disk=${tm.diskBytesSpilled >> 20}%5d MB | ",
+          keys, si.name)): Unit
       }
 
     override def onOtherEvent(e: SparkListenerEvent): Unit = e match {

@@ -1,15 +1,14 @@
 package graft.tools
 
-import java.io.{BufferedOutputStream, DataOutputStream}
-
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
 import graft.api.{FallbackGate, GraftSession, SemanticSearch}
+import graft.bench.ServeBench.{pct, replicate}
 import graft.embed.HashingTfEmbedder
 import graft.operators.{Bm25, Sparse}
-import graft.serve.{FleetClient, FleetTier, MemoryServer, ShardedAnnIndex, ShardedHybridServer, ShardedPostingsIndex, ShardedSparseIndex}
+import graft.serve.{FleetClient, FleetTier, MemoryAnnIndex, MemoryPostingsIndex, MemoryServer, MemorySparseIndex, Sharded}
 
 /** The sharded serving fleet measured as REAL separate processes — and,
   * since round 15, COMPOSED end to end: the r14 verdict's #1 was that
@@ -43,7 +42,7 @@ import graft.serve.{FleetClient, FleetTier, MemoryServer, ShardedAnnIndex, Shard
   *
   * Bit-identity is enforced, not assumed: during warm-up every request
   * shape's fleet result is compared (score BITS) against the in-process
-  * `Sharded*Index` twins built from the same rows, and the routed door's
+  * [[Sharded]] fan-out over the same rows, and the routed door's
   * full JSON response against the in-process routed door's.
   *
   * Usage: SPARK_GRAFT_SF_DIR=... runMain graft.tools.FleetBench
@@ -60,9 +59,6 @@ import graft.serve.{FleetClient, FleetTier, MemoryServer, ShardedAnnIndex, Shard
   * their Spark fallback jobs).
   */
 object FleetBench {
-
-  private def pct(sorted: IndexedSeq[Double], p: Double): Double =
-    sorted((math.ceil(p * sorted.size).toInt - 1).max(0).min(sorted.size - 1))
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -101,39 +97,21 @@ object FleetBench {
     // ---- corpora, exactly the ServeBench shapes (disjoint-id replicas)
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val corpus0 = emb.where(col("vec_id") =!= 0)
-    val stride = emb.agg(max("vec_id")).head().getLong(0) + 1
-    val corpus = (0 until repl).map(i =>
-        corpus0.withColumn("vec_id", col("vec_id") + lit(i * stride)))
-      .reduce(_ unionByName _).localCheckpoint(true)
-    val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")
-    val dstride = docs0.agg(max("doc_id")).head().getLong(0) + 1
-    val docsRepl = (0 until repl).map(i =>
-        docs0.withColumn("doc_id", col("doc_id") + lit(i * dstride)))
-      .reduce(_ unionByName _).localCheckpoint(true)
+    val corpus = replicate(corpus0, "vec_id", repl).localCheckpoint(true)
+    val docsRepl = replicate(spark.read.parquet(
+      s"$sfDir/documents.parquet"), "doc_id", repl).localCheckpoint(true)
 
     val postings = Bm25.buildPostings(docsRepl, "doc_id", "text")
       .localCheckpoint(true)
-    val dstats = docsRepl
-      .select(size(split(col("text"), " ")).cast("long").as("dl"))
-      .agg(sum("dl"), count(lit(1))).head()
-    val avgdl = dstats.getLong(0).toDouble / dstats.getLong(1).toDouble
-    val dfMap = postings.groupBy("term").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val idfMap = Bm25.idfByTerm(dfMap, dstats.getLong(1), spark)
+    val lexStats = Bm25.corpusStats(docsRepl, "text", postings)
+    val (avgdl, idfMap) = (lexStats.avgdl, lexStats.idf)
     val sparseVecs = Sparse.tfVectors(docsRepl, "doc_id", "text")
       .localCheckpoint(true)
 
     // ---- collect once; shard driver-side; write the shard files
     val workDir = java.nio.file.Files.createTempDirectory("graft-fleet").toString
-    val lexRows = postings
-      .select(col("term"), col("doc_id").cast("long"), col("tf").cast("long"),
-        col("dl").cast("long"))
-      .collect()
-      .map(r => (r.getString(0), (r.getLong(1), r.getLong(2), r.getLong(3))))
-    val sparseRows = sparseVecs
-      .select(col("term"), col("doc_id").cast("long"), col("w").cast("long"))
-      .collect()
-      .map(r => (r.getString(0), (r.getLong(1), r.getLong(2))))
+    val lexRows = MemoryPostingsIndex.collectRows(postings, "doc_id")
+    val sparseRows = MemorySparseIndex.collectRows(sparseVecs, "doc_id")
     val denseRows = corpus.select(col("vec_id").cast("long"), col("embedding"))
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toSeq))
@@ -164,59 +142,30 @@ object FleetBench {
           val df = termDoc.groupMapReduce(_._1)(_ => 1L)(_ + _)
           (a, Bm25.idfByTerm(df, n, spark))
         }
-      (0 until nShards).foreach { sh =>
-        def dout(name: String) = new DataOutputStream(new BufferedOutputStream(
-          new java.io.FileOutputStream(s"$workDir/${name}_shard_$sh.bin")))
-        val lo = dout("lex")
-        val lexSlice = lexRows.filter { case (_, (id, _, _)) =>
-          ShardedAnnIndex.shardOf(id, nShards) == sh && !purged(id) }
-        require(lexSlice.nonEmpty, s"empty lex shard $sh")
-        lo.writeDouble(hdrAvgdl)
-        lo.writeInt(hdrIdf.size)
-        hdrIdf.foreach { case (t, w) => lo.writeUTF(t); lo.writeDouble(w) }
-        lo.writeInt(lexSlice.length)
-        lexSlice.foreach { case (t, (id, tf, dl)) =>
-          lo.writeUTF(t); lo.writeLong(id); lo.writeLong(tf); lo.writeLong(dl)
-        }
-        lo.close()
-        val so = dout("sparse")
-        val spSlice = sparseRows.filter { case (_, (id, _)) =>
-          ShardedAnnIndex.shardOf(id, nShards) == sh && !purged(id) }
-        require(spSlice.nonEmpty, s"empty sparse shard $sh")
-        so.writeInt(spSlice.length)
-        spSlice.foreach { case (t, (id, w)) =>
-          so.writeUTF(t); so.writeLong(id); so.writeLong(w)
-        }
-        so.close()
-        val de = dout("dense")
-        val dSlice = denseRows.filter { case (id, _) =>
-          ShardedAnnIndex.shardOf(id, nShards) == sh && !purged(id) }
-        require(dSlice.nonEmpty, s"empty dense shard $sh")
-        de.writeInt(dim)
-        de.writeInt(dSlice.length)
-        dSlice.foreach { case (id, v) => de.writeLong(id); v.foreach(de.writeFloat) }
-        de.close()
-      }
+      FleetShardServer.writeShards(workDir, nShards, hdrAvgdl, hdrIdf,
+        lexRows.filterNot(r => purged(r._2._1)),
+        sparseRows.filterNot(r => purged(r._2._1)),
+        denseRows.filterNot(r => purged(r._1)))
     }
     writeShardFiles(Set.empty)
 
     // ---- in-process twins for the bit-identity cross-check
-    val inLex = ShardedPostingsIndex.fromDataFrame(
+    val inLex = MemoryPostingsIndex.sharded(
       postings, "doc_id", idfMap, avgdl, nShards)
-    val inSparse = ShardedSparseIndex.fromDataFrame(sparseVecs, "doc_id", nShards)
+    val inSparse = MemorySparseIndex.sharded(sparseVecs, "doc_id", nShards)
     val denseCents =
       graft.operators.Ann.sampleCentroids(corpus0, "vec_id", "embedding", 16)
-    val inDense = graft.serve.ShardedAnnIndex.fromDataFrame(
+    val inDense = MemoryAnnIndex.sharded(
       graft.operators.Ann.withIvfAssignment(corpus, "embedding", denseCents),
       "vec_id", "embedding", "ivf_cell", denseCents, nShards)
-    val inHybrid = new ShardedHybridServer(inDense, inLex)
+    val inHybrid = Sharded.hybrid(inDense, inLex)
     // the in-process HYBRID door the composed fleet hybrid door must match
     val inHybridDoor = new graft.api.HybridSearch(corpus, "vec_id",
       "embedding", postings, "doc_id", idfMap, avgdl,
-      sharded = Some(inHybrid))
+      memory = Some(inHybrid))
     // the in-process routed door the composed fleet door must match
     // byte-for-byte: same SemanticSearch class, memory tier behind it
-    val memDenseAll = graft.serve.MemoryAnnIndex.fromRows(
+    val memDenseAll = MemoryAnnIndex.fromRows(
       denseRows.map { case (id, v) => (id, v, 0) }.toSeq,
       centroids = Seq(denseRows.head._2))
     val inRouted = new SemanticSearch(corpus, HashingTfEmbedder(dim),
@@ -247,30 +196,11 @@ object FleetBench {
     // ---- spawn the fleet: one JVM per shard, ephemeral ports via READY.
     // Pinned mode gives each shard a disjoint 6-core set (0-5, 6-11, ...)
     // and the client JVM the remainder — the dedicated-host anchor.
-    val cp = System.getProperty("java.class.path")
-    val procs = (0 until nShards).map { sh =>
-      val base = Seq("java", "-Xmx2g", "-cp", cp,
-        "graft.tools.FleetShardServer", workDir, sh.toString)
-      val cmd = if (pinned)
-        Seq("taskset", "-c", s"${sh * 6}-${sh * 6 + 5}") ++ base
-      else base
-      val pb = new ProcessBuilder(cmd: _*)
-      pb.redirectErrorStream(true)
-      pb.start()
-    }
-    val ports = try procs.map { p =>
-      val br = new java.io.BufferedReader(
-        new java.io.InputStreamReader(p.getInputStream))
-      var line = br.readLine()
-      while (line != null && !line.startsWith("READY ")) line = br.readLine()
-      require(line != null, "shard server died before READY")
-      // keep draining the pipe so the child never blocks on stdout
-      val drainer = new Thread(() => {
-        try { while (br.readLine() != null) () } catch { case _: Throwable => () }
-      })
-      drainer.setDaemon(true); drainer.start()
-      line.drop("READY ".length).trim.toInt
-    } catch { case e: Throwable => procs.foreach(_.destroyForcibly()); throw e }
+    val procs = (0 until nShards).map(sh => FleetShardServer.start(workDir, sh,
+      prefix = if (pinned) Seq("taskset", "-c", s"${sh * 6}-${sh * 6 + 5}") else Nil))
+    val ports = try procs.map(p => FleetShardServer.awaitReady(p)
+      .getOrElse(sys.error("shard server died before READY")))
+    catch { case e: Throwable => procs.foreach(_.destroyForcibly()); throw e }
     // the live process per shard slot — the churn phase replaces a killed
     // shard with a fresh process on the SAME port, so every later phase
     // (the permanent-kill row, the orderly shutdown) must go through this
@@ -282,33 +212,15 @@ object FleetBench {
       * for READY; retries the bind briefly (the dead listener's port can
       * take a moment to free).
       */
-    def spawnShard(sh: Int, port: Int): Process = {
-      var attempt = 0
-      var spawned: Option[Process] = None
-      while (spawned.isEmpty) {
-        attempt += 1
-        val pb = new ProcessBuilder(Seq("java", "-Xmx2g", "-cp", cp,
-          "graft.tools.FleetShardServer", workDir, sh.toString,
-          port.toString): _*)
-        pb.redirectErrorStream(true)
-        val p = pb.start()
-        val br = new java.io.BufferedReader(
-          new java.io.InputStreamReader(p.getInputStream))
-        var line = br.readLine()
-        while (line != null && !line.startsWith("READY ")) line = br.readLine()
-        if (line == null) {
-          p.destroyForcibly(): Unit
-          require(attempt < 5, s"replacement shard $sh failed to bind $port")
-          Thread.sleep(400)
-        } else {
-          val drainer = new Thread(() => {
-            try { while (br.readLine() != null) () } catch { case _: Throwable => () }
-          })
-          drainer.setDaemon(true); drainer.start()
-          spawned = Some(p)
-        }
+    def spawnShard(sh: Int, port: Int, attempt: Int = 1): Process = {
+      val p = FleetShardServer.start(workDir, sh, port)
+      if (FleetShardServer.awaitReady(p).nonEmpty) p
+      else {
+        p.destroyForcibly(): Unit
+        require(attempt < 5, s"replacement shard $sh failed to bind $port")
+        Thread.sleep(400)
+        spawnShard(sh, port, attempt + 1)
       }
-      spawned.get
     }
     val suffix = if (pinned) "_pinned" else ""
     val extraRows = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -334,13 +246,16 @@ object FleetBench {
       }
       // ---- bit-identity cross-check: fleet == in-process, score BITS;
       // composed door == in-process routed door, response BYTES
+      def bits(xs: Seq[(Long, Double)]): Seq[(Long, Long)] =
+        xs.map { case (id, s) => (id, java.lang.Double.doubleToLongBits(s)) }
       val check = new FleetClient(ports, timeoutMs = timeoutMs)
+      val checkTier = new FleetTier(check)
       val checkDoor = new SemanticSearch(corpus, HashingTfEmbedder(dim),
         idCol = "vec_id", textCol = "label", embCol = "embedding",
-        memory = Some(new FleetTier(check)))
+        memory = Some(checkTier))
       val checkHybridDoor = new graft.api.HybridSearch(corpus, "vec_id",
         "embedding", postings, "doc_id", idfMap, avgdl,
-        sharded = Some(new graft.serve.FleetHybridTier(check)))
+        memory = Some(checkTier))
       try {
         // JIT warm-up BEFORE the required comparisons: the first full-scan
         // ops on a cold shard JVM run interpreted (seconds at the 10×
@@ -358,22 +273,20 @@ object FleetBench {
           val terms = termSets(i % termSets.size)
           val qv = qvecs(i % qvecs.size)
           val fd = check.dense(qv, 5)
-          val idn = inDense.topK(qv, 5)
-          require(fd.map { case (id, s) => (id, java.lang.Double.doubleToLongBits(s)) } ==
-            idn.map { case (id, s) => (id, java.lang.Double.doubleToLongBits(s)) },
+          val idn = Sharded.topK(inDense, 5)(_.topK(qv, 5))
+          require(bits(fd) == bits(idn),
             s"fleet dense != in-process: $fd vs $idn")
           val fl = check.lex(terms, 5)
-          val il = inLex.search(terms, 5)
-          require(fl.map { case (id, s) => (id, java.lang.Double.doubleToLongBits(s)) } ==
-            il.map { case (id, s) => (id, java.lang.Double.doubleToLongBits(s)) },
+          val il = Sharded.topK(inLex, 5)(_.searchWand(terms, 5))
+          require(bits(fl) == bits(il),
             s"fleet lex != in-process for $terms: $fl vs $il")
           val fs = check.sparse(sparseQueries(i % sparseQueries.size), 5)
-          val is = inSparse.topKWand(sparseQueries(i % sparseQueries.size), 5)
+          val is = Sharded.countedLong(inSparse, 5)(
+            _.topKWandCounted(sparseQueries(i % sparseQueries.size), 5))._1
           require(fs == is, s"fleet sparse != in-process: $fs vs $is")
           val fh = check.hybrid(qv, terms, 10, poolK = 20)
           val ih = inHybrid.searchHybrid(qv, terms, 10, poolK = 20)
-          require(fh.map { case (id, s) => (id, java.lang.Double.doubleToLongBits(s)) } ==
-            ih.map { case (id, s) => (id, java.lang.Double.doubleToLongBits(s)) },
+          require(bits(fh) == bits(ih),
             s"fleet hybrid != in-process: $fh vs $ih")
           // the COMPOSED path: same door class, fleet tier vs memory tier
           val req = jsonReq(qv, 5)
@@ -413,49 +326,58 @@ object FleetBench {
                            hybridDoor: graft.api.HybridSearch)
       def newCtx(): Ctx = {
         val cl = new FleetClient(ports, timeoutMs = timeoutMs)
+        val tier = new FleetTier(cl)
         Ctx(cl,
           new SemanticSearch(corpus, HashingTfEmbedder(dim),
             idCol = "vec_id", textCol = "label", embCol = "embedding",
-            memory = Some(new FleetTier(cl))),
+            memory = Some(tier)),
           new graft.api.HybridSearch(corpus, "vec_id", "embedding",
-            postings, "doc_id", idfMap, avgdl,
-            sharded = Some(new graft.serve.FleetHybridTier(cl))))
+            postings, "doc_id", idfMap, avgdl, memory = Some(tier)))
+      }
+      /** `n` request threads (thread t in FAIR pool `serve-t`), thread t
+        * calling `request(t, i)` for i = 0, 1, … while `more(i)`; `during`
+        * runs on the calling thread meanwhile. Returns `during`'s result,
+        * the successful requests' sorted latencies (ms), the failure count
+        * (each failure is logged, never thrown) and the wall seconds.
+        */
+      def storm[A](label: String, n: Int, more: Int => Boolean)(during: => A)(
+          request: (Int, Int) => Unit): (A, IndexedSeq[Double], Int, Double) = {
+        val lat = new java.util.concurrent.ConcurrentLinkedQueue[Double]()
+        val failures = new java.util.concurrent.atomic.AtomicInteger(0)
+        val t0 = System.nanoTime()
+        val threads = (0 until n).map { t =>
+          val th = new Thread(() => {
+            spark.sparkContext.setLocalProperty("spark.scheduler.pool", s"serve-$t")
+            var i = 0
+            while (more(i)) {
+              val s = System.nanoTime()
+              try { request(t, i); lat.add((System.nanoTime() - s) / 1e6): Unit }
+              catch { case e: Throwable =>
+                failures.incrementAndGet()
+                System.err.println(s"[fleet] $label t$t req$i FAILED: ${e.getMessage}")
+              }
+              i += 1
+            }
+          })
+          th.start(); th
+        }
+        val out = during
+        threads.foreach(_.join())
+        (out, lat.asScala.toIndexedSeq.sorted, failures.get(), (System.nanoTime() - t0) / 1e9)
       }
       def runLevel(fire: (Ctx, Int) => Unit, n: Int,
                    reqsPerThread: Int): Level = {
         val shed0 = shedCount.get()
-        val lat = new java.util.concurrent.ConcurrentLinkedQueue[Double]()
-        val failures = new java.util.concurrent.atomic.AtomicInteger(0)
         val ctxs = (0 until n).map(_ => newCtx())
         try {
           (0 until 4).foreach(i => fire(ctxs.head, i)) // warm
-          val t0 = System.nanoTime()
-          val threads = ctxs.zipWithIndex.map { case (ctx, t) =>
-            val th = new Thread(() => {
-              spark.sparkContext.setLocalProperty(
-                "spark.scheduler.pool", s"serve-$t")
-              var i = 0
-              while (i < reqsPerThread) {
-                val s = System.nanoTime()
-                try { fire(ctx, t * 7 + i); lat.add((System.nanoTime() - s) / 1e6) }
-                catch { case e: Throwable =>
-                  failures.incrementAndGet()
-                  System.err.println(s"[fleet] t$t req$i FAILED: ${e.getMessage}")
-                }
-                i += 1
-              }
-            })
-            th.start(); th
-          }
-          threads.foreach(_.join())
-          val wall = (System.nanoTime() - t0) / 1e9
-          val ls = lat.asScala.toIndexedSeq.sorted
+          val (_, ls, failed, wall) = storm("level", n, _ < reqsPerThread)(())(
+            (t, i) => fire(ctxs(t), t * 7 + i))
           // an all-failed level (a shard died mid-run) must report as a
           // failed row, not crash the bench on pct(empty)/0-division
           if (ls.isEmpty)
-            Level(0, failures.get(), 0.0, 0.0, 0.0, 0.0, wall,
-              shedCount.get() - shed0)
-          else Level(ls.size, failures.get(), pct(ls, 0.50), pct(ls, 0.95),
+            Level(0, failed, 0.0, 0.0, 0.0, 0.0, wall, shedCount.get() - shed0)
+          else Level(ls.size, failed, pct(ls, 0.50), pct(ls, 0.95),
             ls.sum / ls.size, ls.size / wall, wall, shedCount.get() - shed0)
         } finally ctxs.foreach(_.client.close())
       }
@@ -541,7 +463,7 @@ object FleetBench {
 
       // ---- the POOLED composed door (r15 verdict items 2+6): the SAME
       // routed workload as fleet_routed's top level, but through ONE
-      // shared SemanticSearch over a PooledFleetTier (FleetDoor checkout
+      // shared SemanticSearch over a FleetTier (FleetDoor checkout
       // per request) with the FleetCoordinator's health loop attached —
       // the deployment shape a real server loop uses. The row pins that
       // promoting the control plane out of the bench costs no QPS: the
@@ -558,7 +480,7 @@ object FleetBench {
           backoffBaseMs = 100).start()
         val pooledDoor = new SemanticSearch(corpus, HashingTfEmbedder(dim),
           idCol = "vec_id", textCol = "label", embCol = "embedding",
-          memory = Some(new graft.serve.PooledFleetTier(door)))
+          memory = Some(new FleetTier(door)))
         try {
           // bit-identity first: pooled door == in-process routed door
           (0 until 8).foreach { i =>
@@ -567,34 +489,13 @@ object FleetBench {
               inRouted.searchResponseJson(req),
               "pooled fleet door != in-process routed door")
           }
-          val lat = new java.util.concurrent.ConcurrentLinkedQueue[Double]()
-          val failures = new java.util.concurrent.atomic.AtomicInteger(0)
-          val t0 = System.nanoTime()
-          val threads = (0 until n).map { t =>
-            val th = new Thread(() => {
-              var i = 0
-              while (i < reqs) {
-                val s = System.nanoTime()
-                try {
-                  val resp = pooledDoor.searchResponseJson(
-                    jsonReq(qvecs((t * 7 + i) % qvecs.size), 5))
-                  require(resp.contains("\"results\":[{"),
-                    s"pooled response empty: ${resp.take(60)}")
-                  lat.add((System.nanoTime() - s) / 1e6): Unit
-                } catch { case e: Throwable =>
-                  failures.incrementAndGet()
-                  System.err.println(s"[fleet] pooled t$t req$i FAILED: ${e.getMessage}")
-                }
-                i += 1
-              }
-            })
-            th.start(); th
+          val (_, ls, failed, wall) = storm("pooled", n, _ < reqs)(()) { (t, i) =>
+            val resp = pooledDoor.searchResponseJson(
+              jsonReq(qvecs((t * 7 + i) % qvecs.size), 5))
+            require(resp.contains("\"results\":[{"),
+              s"pooled response empty: ${resp.take(60)}")
           }
-          threads.foreach(_.join())
-          val wall = (System.nanoTime() - t0) / 1e9
-          val ls = lat.asScala.toIndexedSeq.sorted
-          require(failures.get() == 0,
-            s"${failures.get()} pooled requests failed")
+          require(failed == 0, s"$failed pooled requests failed")
           val qps = ls.size / wall
           chosenLevels.get(("fleet_routed", n)).foreach { base =>
             require(qps >= 0.7 * base.qps,
@@ -627,7 +528,7 @@ object FleetBench {
           backoffBaseMs = 100).start()
         val pooledDoor = new SemanticSearch(corpus, HashingTfEmbedder(dim),
           idCol = "vec_id", textCol = "label", embCol = "embedding",
-          memory = Some(new graft.serve.PooledFleetTier(door)))
+          memory = Some(new FleetTier(door)))
         def awaitUntil(ms: Long)(cond: => Boolean): Boolean = {
           val deadline = System.nanoTime() + ms * 1000000L
           var ok = cond
@@ -641,54 +542,38 @@ object FleetBench {
             require(pooledDoor.searchResponseJson(jsonReq(qvecs(i), 5))
               .contains("\"results\":[{"), "churn warm-up failed"))
           @volatile var stop = false
-          val lat = new java.util.concurrent.ConcurrentLinkedQueue[Double]()
-          val failures = new java.util.concurrent.atomic.AtomicInteger(0)
           val t0 = System.nanoTime()
-          val threads = (0 until n).map { t =>
-            val th = new Thread(() => {
-              var i = 0
-              while (!stop) {
-                val s = System.nanoTime()
-                try {
-                  val resp = pooledDoor.searchResponseJson(
-                    jsonReq(qvecs((t * 7 + i) % qvecs.size), 5))
-                  require(resp.contains("\"results\":[{"),
-                    s"churn response empty: ${resp.take(60)}")
-                  lat.add((System.nanoTime() - s) / 1e6): Unit
-                } catch { case e: Throwable =>
-                  failures.incrementAndGet()
-                  System.err.println(s"[fleet] churn t$t req$i FAILED: ${e.getMessage}")
-                }
-                i += 1
-              }
-            })
-            th.start(); th
-          }
+          def since0: Double = (System.nanoTime() - t0) / 1e6
           // controller: the churn script, inside the storm
-          Thread.sleep(1500) // steady state
-          System.err.println("[fleet] churn: killing shard 1")
-          val tKill = (System.nanoTime() - t0) / 1e6
-          shardProcs(1).destroyForcibly(): Unit
-          require(awaitUntil(15000)(door.anyDead(1)),
-            "churn: no pooled client ever marked the killed shard dead")
-          val minLiveDuring = door.minLiveShards
-          Thread.sleep(300)
-          shardProcs(1) = spawnShard(1, ports(1))
-          val tRespawn = (System.nanoTime() - t0) / 1e6
-          require(awaitUntil(20000)(!door.anyDead(1) &&
-            coord.liveShards == nShards),
-            "churn: coordinator never recovered the replacement shard")
-          val tRecovered = (System.nanoTime() - t0) / 1e6
-          // the republish lands while traffic still flows
-          val republishWindowMs = coord.republishParallel()
-          Thread.sleep(1000) // post-churn traffic
-          stop = true
-          threads.foreach(_.join())
-          val wall = (System.nanoTime() - t0) / 1e9
-          val ls = lat.asScala.toIndexedSeq.sorted
-          require(failures.get() == 0,
-            s"${failures.get()} requests failed across the churn — degraded " +
+          val (churned, ls, failed, wall) = storm("churn", n, _ => !stop)(try {
+            Thread.sleep(1500) // steady state
+            System.err.println("[fleet] churn: killing shard 1")
+            val tKill = since0
+            shardProcs(1).destroyForcibly(): Unit
+            require(awaitUntil(15000)(door.anyDead(1)),
+              "churn: no pooled client ever marked the killed shard dead")
+            val minLive = door.minLiveShards
+            Thread.sleep(300)
+            shardProcs(1) = spawnShard(1, ports(1))
+            val tRespawn = since0
+            require(awaitUntil(20000)(!door.anyDead(1) &&
+              coord.liveShards == nShards),
+              "churn: coordinator never recovered the replacement shard")
+            val tRecovered = since0
+            // the republish lands while traffic still flows
+            val window = coord.republishParallel()
+            Thread.sleep(1000) // post-churn traffic
+            (tKill, minLive, tRespawn, tRecovered, window)
+          } finally stop = true) { (t, i) =>
+            val resp = pooledDoor.searchResponseJson(
+              jsonReq(qvecs((t * 7 + i) % qvecs.size), 5))
+            require(resp.contains("\"results\":[{"),
+              s"churn response empty: ${resp.take(60)}")
+          }
+          require(failed == 0,
+            s"$failed requests failed across the churn — degraded " +
               "mode must absorb kill+republish with partial results, not errors")
+          val (tKill, minLiveDuring, tRespawn, tRecovered, republishWindowMs) = churned
           require(minLiveDuring == nShards - 1,
             s"expected ${nShards - 1} live during the kill, got $minLiveDuring")
           require(door.minLiveShards == nShards,
@@ -711,12 +596,40 @@ object FleetBench {
         // in the lex/sparse tables (replicated ids overlap numerically)
         val lexIds = lexRows.iterator.map(_._2._1).toSet
         val victim = denseRows.iterator.map(_._1)
-          .find(id => ShardedAnnIndex.shardOf(id, nShards) == 0 && lexIds(id))
+          .find(id => Sharded.shardOf(id, nShards) == 0 && lexIds(id))
           .getOrElse(sys.error("no victim id on shard 0"))
         val victimVec = denseRows.find(_._1 == victim).get._2
         val victimTerm = lexRows.collectFirst {
           case (t, (id, _, _)) if id == victim && t.nonEmpty => t
         }.getOrElse(sys.error("victim has no terms"))
+        /** Run `swap` under background full-fleet dense queries; its
+          * result and the number of queries served meanwhile. Every
+          * background query must succeed (serving continuity).
+          */
+        def underLoad[A](what: String)(swap: => A): (A, Int) = {
+          val served = new java.util.concurrent.atomic.AtomicInteger(0)
+          val failed = new java.util.concurrent.atomic.AtomicInteger(0)
+          @volatile var stop = false
+          val bg = new Thread(() => {
+            val cl = new FleetClient(ports, timeoutMs = timeoutMs)
+            try {
+              var i = 0
+              while (!stop) {
+                try {
+                  if (cl.dense(qvecs(i % qvecs.size), 10).length == 10)
+                    served.incrementAndGet(): Unit
+                  else failed.incrementAndGet(): Unit
+                } catch { case _: Throwable => failed.incrementAndGet(): Unit }
+                i += 1
+              }
+            } finally cl.close()
+          })
+          bg.start()
+          val out = try swap finally { stop = true; bg.join() }
+          require(failed.get() == 0,
+            s"${failed.get()} background queries failed during the $what")
+          (out, served.get())
+        }
         val probe = new FleetClient(ports, timeoutMs = timeoutMs)
         try {
           // pre-purge: the victim's own vector must surface it (cos = 1)
@@ -726,34 +639,15 @@ object FleetBench {
           val tAmend0 = System.nanoTime()
           writeShardFiles(Set(victim))
           val amendMs = (System.nanoTime() - tAmend0) / 1e6
-          // background load: full-fleet queries during the whole swap
-          val bgCount = new java.util.concurrent.atomic.AtomicInteger(0)
-          val bgFailed = new java.util.concurrent.atomic.AtomicInteger(0)
-          @volatile var bgStop = false
-          val bg = new Thread(() => {
-            val cl = new FleetClient(ports, timeoutMs = timeoutMs)
-            try {
-              var i = 0
-              while (!bgStop) {
-                try {
-                  val n = cl.dense(qvecs(i % qvecs.size), 10).length
-                  if (n == 10) bgCount.incrementAndGet()
-                  else bgFailed.incrementAndGet()
-                } catch { case _: Throwable => bgFailed.incrementAndGet() }
-                i += 1
-              }
-            } finally cl.close()
-          })
-          bg.start()
-          val tSwap0 = System.nanoTime()
-          val reloadMs = (0 until nShards).map { sh =>
-            val t0 = System.nanoTime()
-            probe.reload(sh)
-            (System.nanoTime() - t0) / 1e6
+          val ((reloadMs, windowMs), swapQueries) = underLoad("swap") {
+            val tSwap0 = System.nanoTime()
+            val ms = (0 until nShards).map { sh =>
+              val t0 = System.nanoTime()
+              probe.reload(sh)
+              (System.nanoTime() - t0) / 1e6
+            }
+            (ms, (System.nanoTime() - tSwap0) / 1e6)
           }
-          val windowMs = (System.nanoTime() - tSwap0) / 1e6
-          bgStop = true
-          bg.join()
           // post-swap: the victim must be unservable from EVERY shard —
           // its own vector as the query, and its strongest term lexically
           (0 until nShards).foreach { sh =>
@@ -763,8 +657,6 @@ object FleetBench {
           }
           require(!probe.lex(Seq(victimTerm), 50).exists(_._1 == victim),
             s"purged doc $victim still in the lexical fleet")
-          require(bgFailed.get() == 0,
-            s"${bgFailed.get()} background queries failed during the swap")
 
           // ---- the PARALLEL swap lever, measured on a second victim:
           // all shards reload CONCURRENTLY (each reload runs on its own
@@ -775,46 +667,26 @@ object FleetBench {
           // asserted the same way (zero failed background queries).
           val victim2 = denseRows.iterator.map(_._1)
             .find(id => id != victim && lexIds(id) &&
-              ShardedAnnIndex.shardOf(id, nShards) == 1)
+              Sharded.shardOf(id, nShards) == 1)
             .getOrElse(sys.error("no second victim id on shard 1"))
           val victim2Vec = denseRows.find(_._1 == victim2).get._2
           writeShardFiles(Set(victim, victim2))
-          val bg2Count = new java.util.concurrent.atomic.AtomicInteger(0)
-          val bg2Failed = new java.util.concurrent.atomic.AtomicInteger(0)
-          @volatile var bg2Stop = false
-          val bg2 = new Thread(() => {
-            val cl = new FleetClient(ports, timeoutMs = timeoutMs)
-            try {
-              var i = 0
-              while (!bg2Stop) {
-                try {
-                  if (cl.dense(qvecs(i % qvecs.size), 10).length == 10)
-                    bg2Count.incrementAndGet(): Unit
-                  else bg2Failed.incrementAndGet(): Unit
-                } catch { case _: Throwable => bg2Failed.incrementAndGet(): Unit }
-                i += 1
-              }
-            } finally cl.close()
-          })
-          bg2.start()
-          val tPar0 = System.nanoTime()
-          val parThreads = (0 until nShards).map { sh =>
-            val th = new Thread(() => probe.reload(sh)) // distinct conns: safe
-            th.start(); th
+          val (parWindowMs, parQueries) = underLoad("parallel swap") {
+            val tPar0 = System.nanoTime()
+            val parThreads = (0 until nShards).map { sh =>
+              val th = new Thread(() => probe.reload(sh)) // distinct conns: safe
+              th.start(); th
+            }
+            parThreads.foreach(_.join())
+            (System.nanoTime() - tPar0) / 1e6
           }
-          parThreads.foreach(_.join())
-          val parWindowMs = (System.nanoTime() - tPar0) / 1e6
-          bg2Stop = true
-          bg2.join()
           (0 until nShards).foreach { sh =>
             require(!probe.denseOn(sh, victim2Vec, 1).exists(_._1 == victim2),
               s"purged doc $victim2 still served by shard $sh after parallel swap")
           }
-          require(bg2Failed.get() == 0,
-            s"${bg2Failed.get()} background queries failed during the parallel swap")
 
           val row =
-            f"""{"fleet_shards":$nShards,"docs":${denseRows.length},"purged":1,"amend_ms":$amendMs%.1f,"reload_ms":[${reloadMs.map(m => f"$m%.1f").mkString(",")}],"staleness_window_ms":$windowMs%.1f,"queries_during_swap":${bgCount.get()},"failed_during_swap":0,"victim_absent_all_shards":true,"parallel_window_ms":$parWindowMs%.1f,"parallel_queries_during_swap":${bg2Count.get()},"parallel_failed":0}"""
+            f"""{"fleet_shards":$nShards,"docs":${denseRows.length},"purged":1,"amend_ms":$amendMs%.1f,"reload_ms":[${reloadMs.map(m => f"$m%.1f").mkString(",")}],"staleness_window_ms":$windowMs%.1f,"queries_during_swap":$swapQueries,"failed_during_swap":0,"victim_absent_all_shards":true,"parallel_window_ms":$parWindowMs%.1f,"parallel_queries_during_swap":$parQueries,"parallel_failed":0}"""
           // splice into REPUBLISH.json next to the single-process rows
           val repPath = java.nio.file.Paths.get("REPUBLISH.json")
           if (java.nio.file.Files.exists(repPath)) {
@@ -844,52 +716,31 @@ object FleetBench {
         val killAt = (n.toLong * reqs / 3).toInt // ~1/3 into the level
         val fired = new java.util.concurrent.atomic.AtomicInteger(0)
         val killed = new java.util.concurrent.atomic.AtomicBoolean(false)
-        val lat = new java.util.concurrent.ConcurrentLinkedQueue[Double]()
-        val failures = new java.util.concurrent.atomic.AtomicInteger(0)
         val ctxs = (0 until n).map(_ => newCtx())
-        val t0 = System.nanoTime()
-        val threads = ctxs.zipWithIndex.map { case (ctx, t) =>
-          val th = new Thread(() => {
-            var i = 0
-            while (i < reqs) {
-              val c = fired.incrementAndGet()
-              if (c == killAt && killed.compareAndSet(false, true)) {
-                System.err.println(s"[fleet] killing shard 1 at request $c")
-                shardProcs(1).destroyForcibly(): Unit
-              }
-              val s = System.nanoTime()
-              try {
-                val got = ctx.client.dense(qvecs((t * 7 + i) % qvecs.size), 10)
-                require(got.length == 10,
-                  s"degraded dense returned ${got.length} rows")
-                lat.add((System.nanoTime() - s) / 1e6): Unit
-              } catch { case e: Throwable =>
-                failures.incrementAndGet()
-                System.err.println(s"[fleet] degraded t$t req$i FAILED: ${e.getMessage}")
-              }
-              i += 1
-            }
-          })
-          th.start(); th
+        val (_, ls, failed, wall) = storm("degraded", n, _ < reqs)(()) { (t, i) =>
+          val c = fired.incrementAndGet()
+          if (c == killAt && killed.compareAndSet(false, true)) {
+            System.err.println(s"[fleet] killing shard 1 at request $c")
+            shardProcs(1).destroyForcibly(): Unit
+          }
+          val got = ctxs(t).client.dense(qvecs((t * 7 + i) % qvecs.size), 10)
+          require(got.length == 10, s"degraded dense returned ${got.length} rows")
         }
-        threads.foreach(_.join())
-        val wall = (System.nanoTime() - t0) / 1e9
         val minLive = ctxs.map(_.client.liveShards).min
         ctxs.foreach(_.client.close())
         require(minLive == nShards - 1,
           s"expected ${nShards - 1} live shards after the kill, got $minLive")
-        require(failures.get() == 0,
-          s"${failures.get()} requests failed across the kill — the degraded " +
+        require(failed == 0,
+          s"$failed requests failed across the kill — the degraded " +
             "mode must absorb a shard death with partial results, not errors")
-        val ls = lat.asScala.toIndexedSeq.sorted
         val row =
-          f"""{"path":"fleet_dense_degraded","concurrency":$n,"requests":${ls.size},"failed":${failures.get()},"p50_ms":${pct(ls, 0.50)}%.1f,"p95_ms":${pct(ls, 0.95)}%.1f,"mean_ms":${ls.sum / ls.size}%.1f,"qps":${ls.size / wall}%.1f,"wall_s":$wall%.2f,"killed_shard":1,"live_shards_after":$minLive}"""
+          f"""{"path":"fleet_dense_degraded","concurrency":$n,"requests":${ls.size},"failed":$failed,"p50_ms":${pct(ls, 0.50)}%.1f,"p95_ms":${pct(ls, 0.95)}%.1f,"mean_ms":${ls.sum / ls.size}%.1f,"qps":${ls.size / wall}%.1f,"wall_s":$wall%.2f,"killed_shard":1,"live_shards_after":$minLive}"""
         extraRows += row
       }
 
       val allResults = results ++ extraRows.filter(_.contains("\"path\""))
       val line =
-        s"""{"metric":"fleet_bench","sf":"$sfDir","replicas":$repl,"shards":$nShards,"dense_docs":${denseRows.length},"lex_docs":${dstats.getLong(1)},"dim":$dim,"cpus":${GraftSession.cpus},"pinned":$pinned,"results":[${allResults.mkString(",")}]}"""
+        s"""{"metric":"fleet_bench","sf":"$sfDir","replicas":$repl,"shards":$nShards,"dense_docs":${denseRows.length},"lex_docs":${lexStats.n},"dim":$dim,"cpus":${GraftSession.cpus},"pinned":$pinned,"results":[${allResults.mkString(",")}]}"""
       println(line)
       val fleetOut = if (pinned) "FLEET_BENCH_PINNED.json" else "FLEET_BENCH.json"
       try java.nio.file.Files.writeString(

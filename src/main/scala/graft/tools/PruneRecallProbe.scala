@@ -29,14 +29,6 @@ import graft.serve.{MemoryAnnIndex, MemoryPostingsIndex, MemorySparseIndex, Meta
   */
 object PruneRecallProbe {
 
-  private def replicate(df: DataFrame, idCol: String, n: Int): DataFrame =
-    if (n <= 1) df
-    else {
-      val stride = df.agg(max(col(idCol))).head().getLong(0) + 1
-      (0 until n).map(i => df.withColumn(idCol, col(idCol) + lit(i * stride)))
-        .reduce(_ unionByName _)
-    }
-
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val repls = (if (args.length > 1) args(1) else "1,10")
@@ -49,7 +41,7 @@ object PruneRecallProbe {
     val ks = Seq(1, 5, 10, 50)
 
     repls.foreach { repl =>
-      val docs = replicate(
+      val docs = graft.bench.ServeBench.replicate(
         spark.read.parquet(s"$sfDir/documents.parquet"), "doc_id", repl)
         .localCheckpoint(true)
       val nDocs = docs.count()
@@ -57,15 +49,9 @@ object PruneRecallProbe {
       // ---- lexical WAND (BM25 postings) vs exhaustive TAAT
       val postings = Bm25.buildPostings(docs, "doc_id", "text")
         .localCheckpoint(true)
-      val dstats = docs
-        .select(size(split(col("text"), " ")).cast("long").as("dl"))
-        .agg(sum("dl"), count(lit(1))).head()
-      val avgdl = dstats.getLong(0).toDouble / dstats.getLong(1).toDouble
-      val dfMap = postings.groupBy("term").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      val idfMap = Bm25.idfByTerm(dfMap, nDocs, spark)
+      val stats = Bm25.corpusStats(docs, "text", postings)
       val memLex = MemoryPostingsIndex.fromDataFrame(
-        postings, "doc_id", idfMap, avgdl)
+        postings, "doc_id", stats.idf, stats.avgdl)
       println(s"\n### lexical WAND @ ${repl}x ($nDocs docs)")
       println("| query | k | recall@k | order+bits equal | docs evaluated |")
       println("|---|---|---|---|---|")
@@ -102,7 +88,7 @@ object PruneRecallProbe {
       }
 
       // ---- payload-index filtered dense scan vs full filtered scan
-      val emb = replicate(
+      val emb = graft.bench.ServeBench.replicate(
         spark.read.parquet(s"$sfDir/embeddings.parquet"), "vec_id", repl)
         .localCheckpoint(true)
       val cents = Ann.sampleCentroids(emb, "vec_id", "embedding", 16)

@@ -59,14 +59,9 @@ object RepublishProbe {
         .reduce(_ unionByName _).localCheckpoint(true)
       val postings = Bm25.buildPostings(docs, "doc_id", "text")
         .localCheckpoint(true)
-      val dstats = docs
-        .select(size(split(col("text"), " ")).cast("long").as("dl"))
-        .agg(sum("dl"), count(lit(1))).head()
-      val (sumDl, n) = (dstats.getLong(0), dstats.getLong(1))
-      val dfMap = postings.groupBy("term").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      val idf = Bm25.idfByTerm(dfMap, n, spark)
-      val avgdl = sumDl.toDouble / n.toDouble
+      val stats = Bm25.corpusStats(docs, "text", postings)
+      val (sumDl, n, dfMap) = (stats.sumDl, stats.n, stats.df)
+      val (idf, avgdl) = (stats.idf, stats.avgdl)
       val serving = new java.util.concurrent.atomic.AtomicReference(
         MemoryPostingsIndex.fromDataFrame(postings, "doc_id", idf, avgdl))
 

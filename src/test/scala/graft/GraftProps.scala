@@ -117,9 +117,9 @@ object GraftProps extends Properties("graft") {
       viaSort == viaHeap
     }
 
-  /** The fan-out lemma every sharded tier (ShardedAnnIndex /
-    * ShardedPostingsIndex / ShardedSparseIndex / ShardedHybridServer's
-    * legs) rests on: over a DISJOINT cover of the rows, the k-bounded
+  /** The fan-out lemma [[graft.serve.Sharded]] rests on for every tier
+    * (dense, BM25, learned-sparse, and both hybrid legs): over a DISJOINT
+    * cover of the rows, the k-bounded
     * merge of per-shard top-k's under (score DESC, id ASC) equals the
     * global top-k — for any shard count, any k, with score ties
     * (quantized scores force them). Randomized here over the real
@@ -134,7 +134,7 @@ object GraftProps extends Properties("graft") {
         xs.sortBy { case (id, s) => (-s, id) }.take(k)
       val global = rank(rows)
       val perShard = (0 until nShards).map(sh => rows.filter { case (id, _) =>
-        graft.serve.ShardedAnnIndex.shardOf(id, nShards) == sh })
+        graft.serve.Sharded.shardOf(id, nShards) == sh })
       // the cover is disjoint and complete
       val cover = perShard.flatMap(_.map(_._1))
       cover.distinct.lengthCompare(cover.length) == 0 &&

@@ -711,7 +711,7 @@ class ServeSpec extends SparkSpec {
 
   test("sharded postings tier: fan-out merge == unsharded WAND == TAAT bit-for-bit") {
     import graft.operators.Bm25
-    import graft.serve.{MemoryPostingsIndex, ShardedPostingsIndex}
+    import graft.serve.{MemoryPostingsIndex, Sharded}
     val lexDocs = Seq.tabulate(150)(i =>
       (i.toLong, (Seq.fill(i % 4 + 1)("common") ++
         (if (i % 9 == 0) Seq("rare") else Nil) ++
@@ -728,31 +728,31 @@ class ServeSpec extends SparkSpec {
     val idf = Bm25.idfByTerm(dfMap, stats.getLong(1), spark)
     val whole = MemoryPostingsIndex.fromDataFrame(postings, "doc_id", idf, avgdl)
     for (n <- Seq(1, 3, 4, 16)) {
-      val sharded = ShardedPostingsIndex.fromDataFrame(
+      val sharded = MemoryPostingsIndex.sharded(
         postings, "doc_id", idf, avgdl, nShards = n)
       // 16 shards over 150 docs: empty slices drop, occupied ones serve
-      assert(sharded.nShards <= n && sharded.nShards >= 1)
+      assert(sharded.size <= n && sharded.size >= 1)
       for (terms <- Seq(Seq("common"), Seq("rare", "common"),
                         Seq("rare", "w7"), Seq("unknownterm"));
            k <- Seq(1, 5, 10)) {
-        assert(sharded.search(terms, k) == whole.searchWand(terms, k),
+        assert(Sharded.topK(sharded, k)(_.searchWand(terms, k)) == whole.searchWand(terms, k),
           s"sharded($n) != unsharded for $terms k=$k")
-        assert(sharded.search(terms, k) == whole.search(terms, k),
+        assert(Sharded.topK(sharded, k)(_.searchWand(terms, k)) == whole.search(terms, k),
           s"sharded($n) != TAAT for $terms k=$k")
       }
     }
     // pruning survives the fan-out: counters still report skipping
-    val sh4 = ShardedPostingsIndex.fromDataFrame(
+    val sh4 = MemoryPostingsIndex.sharded(
       postings, "doc_id", idf, avgdl, nShards = 4)
-    val (_, evaluated, skipped) = sh4.searchCounted(Seq("rare", "common"), 3)
+    val (_, evaluated, skipped) = Sharded.counted(sh4, 3)(_.searchWandCounted(Seq("rare", "common"), 3))
     assert(skipped > 0 && evaluated < 150,
       s"per-shard WAND lost pruning (evaluated=$evaluated, skipped=$skipped)")
   }
 
   test("sharded hybrid server: sharded legs + local RRF == MemoryServer.searchHybrid bit-for-bit") {
     import graft.operators.Bm25
-    import graft.serve.{MemoryAnnIndex, MemoryPostingsIndex, MemoryServer,
-      ShardedAnnIndex, ShardedHybridServer, ShardedPostingsIndex}
+    import graft.serve.{HybridTier, MemoryAnnIndex, MemoryPostingsIndex, MemoryServer,
+      Sharded}
     // lexical ids overlap the dense corpus (0..149 ⊂ 0..299) so the RRF
     // fusion actually merges ids seen by both legs
     val lexDocs = Seq.tabulate(150)(i =>
@@ -776,10 +776,10 @@ class ServeSpec extends SparkSpec {
         "ivf_cell", annCents),
       Some(MemoryPostingsIndex.fromDataFrame(postings, "doc_id", idf, avgdl)))
     for (n <- Seq(1, 3, 4)) {
-      val sharded = new ShardedHybridServer(
-        ShardedAnnIndex.fromDataFrame(annAssigned, "vec_id", "embedding",
+      val sharded = Sharded.hybrid(
+        MemoryAnnIndex.sharded(annAssigned, "vec_id", "embedding",
           "ivf_cell", annCents, nShards = n),
-        ShardedPostingsIndex.fromDataFrame(postings, "doc_id", idf, avgdl,
+        MemoryPostingsIndex.sharded(postings, "doc_id", idf, avgdl,
           nShards = n))
       for (q <- annQueries;
            terms <- Seq(Seq("common"), Seq("rare", "common"), Seq("rare", "w7"));
@@ -791,25 +791,24 @@ class ServeSpec extends SparkSpec {
     }
     // the JSON front door routes onto the sharded server too: same
     // request, LocalRelation plan, rows == the memory route == the job
-    val sh4 = new ShardedHybridServer(
-      ShardedAnnIndex.fromDataFrame(annAssigned, "vec_id", "embedding",
+    val sh4 = Sharded.hybrid(
+      MemoryAnnIndex.sharded(annAssigned, "vec_id", "embedding",
         "ivf_cell", annCents, nShards = 4),
-      ShardedPostingsIndex.fromDataFrame(postings, "doc_id", idf, avgdl,
+      MemoryPostingsIndex.sharded(postings, "doc_id", idf, avgdl,
         nShards = 4))
-    def door(m: Option[MemoryServer],
-             s: Option[ShardedHybridServer]) = new graft.api.HybridSearch(
+    def door(m: Option[HybridTier]) = new graft.api.HybridSearch(
       annAssigned, "vec_id", "embedding", postings, "doc_id", idf, avgdl,
-      memory = m, sharded = s)
+      memory = m)
     def isLocal(df: org.apache.spark.sql.DataFrame): Boolean =
       df.queryExecution.optimizedPlan.isInstanceOf[
         org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
     val q0 = annQueries.head
     val req = s"""{"query_vector":[${q0.mkString(",")}],
       |"terms":["rare","common"],"limit":10,"pool_k":20}""".stripMargin
-    val viaSharded = door(None, Some(sh4)).search(req)
+    val viaSharded = door(Some(sh4)).search(req)
     assert(isLocal(viaSharded), "sharded server must serve the door job-free")
-    val viaMemory = door(Some(whole), None).search(req)
-    val viaJob = door(None, None).search(req)
+    val viaMemory = door(Some(whole)).search(req)
+    val viaJob = door(None).search(req)
     assert(!isLocal(viaJob))
     assert(viaSharded.collect().map(_.toSeq).toSeq ===
       viaMemory.collect().map(_.toSeq).toSeq)
@@ -845,7 +844,7 @@ class ServeSpec extends SparkSpec {
   }
 
   test("sharded flat/IVF tier: disjoint cover; fan-out merge == unsharded bit-for-bit") {
-    import graft.serve.{MemoryAnnIndex, MetaFilter, ShardedAnnIndex}
+    import graft.serve.{MemoryAnnIndex, MetaFilter, Sharded}
     val tagged = annAssigned
       .withColumn("grp", pmod(col("vec_id"), lit(7)).cast("int"))
       .withColumn("cat",
@@ -853,35 +852,35 @@ class ServeSpec extends SparkSpec {
       .localCheckpoint(true)
     val whole = MemoryAnnIndex.fromDataFrame(tagged, "vec_id", "embedding",
       "ivf_cell", annCents, metaCols = Seq("grp", "cat"))
-    val sharded = ShardedAnnIndex.fromDataFrame(tagged, "vec_id",
+    val sharded = MemoryAnnIndex.sharded(tagged, "vec_id",
       "embedding", "ivf_cell", annCents, nShards = 4,
       metaCols = Seq("grp", "cat"))
     // disjoint cover: every id in exactly one shard, sizes sum
-    assert(sharded.nShards == 4 && sharded.size == whole.size)
-    val perShardIds = sharded.shards.map(sh =>
+    assert(sharded.size == 4 && sharded.map(_.size).sum == whole.size)
+    val perShardIds = sharded.map(sh =>
       sh.topK(annQueries.head, sh.size).map(_._1).toSet)
     assert(perShardIds.map(_.size).sum == whole.size,
       "shards must partition the corpus")
     perShardIds.foreach(s => s.foreach(id =>
-      assert(ShardedAnnIndex.shardOf(id, 4) ==
+      assert(Sharded.shardOf(id, 4) ==
         perShardIds.indexWhere(_.contains(id)))))
     annQueries.foreach { q =>
-      assert(sharded.topK(q, 9) == whole.topK(q, 9),
+      assert(Sharded.topK(sharded, 9)(_.topK(q, 9)) == whole.topK(q, 9),
         "flat fan-out merge drifted from the unsharded scan")
-      assert(sharded.topKIvf(q, 9, nProbe = 2) == whole.topKIvf(q, 9, 2),
+      assert(Sharded.topK(sharded, 9)(_.topKIvf(q, 9, nProbe = 2)) == whole.topKIvf(q, 9, 2),
         "IVF fan-out (same centroids per shard) drifted")
-      assert(sharded.topK(q, 6, Seq(MetaFilter("grp", 2, 4))) ==
+      assert(Sharded.topK(sharded, 6)(_.topK(q, 6, Seq(MetaFilter("grp", 2, 4)))) ==
         whole.topK(q, 6, Seq(MetaFilter("grp", 2, 4))),
         "numeric-filtered fan-out drifted")
-      assert(sharded.topKStringEq(q, 6, "cat", "cat1") ==
+      assert(Sharded.topK(sharded, 6)(sh => sh.topK(q, 6, Seq(sh.stringFilter("cat", "cat1")))) ==
         whole.topK(q, 6, Seq(whole.stringFilter("cat", "cat1"))),
         "per-shard dictionary resolution drifted")
     }
     // a corpus smaller than the shard count serves from occupied shards
-    val tiny = ShardedAnnIndex.fromDataFrame(
+    val tiny = MemoryAnnIndex.sharded(
       tagged.where(col("vec_id") < 3), "vec_id", "embedding",
       "ivf_cell", annCents, nShards = 8)
-    assert(tiny.size == 3 && tiny.topK(annQueries.head, 3).size == 3)
+    assert(tiny.map(_.size).sum == 3 && Sharded.topK(tiny, 3)(_.topK(annQueries.head, 3)).size == 3)
   }
 
   test("memory MRL tier: prefix prune-and-rerank == Ann.topKMatryoshka bit-for-bit") {
@@ -1448,18 +1447,39 @@ class ServeSpec extends SparkSpec {
   }
 
   test("sharded dense build evaluates its input plan once") {
-    import graft.serve.{MemoryAnnIndex, ShardedAnnIndex}
+    import graft.serve.{MemoryAnnIndex, Sharded}
     val evals = spark.sparkContext.longAccumulator("sharded-build-evals")
     val tap = udf((id: Long) => { evals.add(1L); id }).asNondeterministic()
     val counted = annAssigned.withColumn("vec_id", tap(col("vec_id")))
-    val sharded = ShardedAnnIndex.fromDataFrame(counted, "vec_id",
+    val sharded = MemoryAnnIndex.sharded(counted, "vec_id",
       "embedding", "ivf_cell", annCents, nShards = 4)
     assert(evals.value == 300L,
       s"${evals.value} row evaluations for 300 rows: the input ran more than once")
     val whole = MemoryAnnIndex.fromDataFrame(annAssigned, "vec_id",
       "embedding", "ivf_cell", annCents)
-    assert(sharded.nShards == 4 && sharded.size == 300)
-    annQueries.foreach(q => assert(sharded.topK(q, 9) == whole.topK(q, 9)))
+    assert(sharded.size == 4 && sharded.map(_.size).sum == 300)
+    annQueries.foreach(q => assert(Sharded.topK(sharded, 9)(_.topK(q, 9)) == whole.topK(q, 9)))
+  }
+
+  test("sharded tiers over an empty corpus answer as the unsharded ones: Nil, or dense refuses") {
+    import graft.operators.{Bm25, Sparse}
+    import graft.serve.{MemoryAnnIndex, MemoryPostingsIndex, MemorySparseIndex, Sharded}
+    val noDocs = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    val postings = Bm25.buildPostings(noDocs, "doc_id", "text")
+    val lex = MemoryPostingsIndex.sharded(postings, "doc_id", Map.empty, 1.0, nShards = 4)
+    assert(MemoryPostingsIndex.fromDataFrame(postings, "doc_id", Map.empty, 1.0)
+      .searchWand(Seq("dup"), 5).isEmpty)
+    assert(Sharded.counted(lex, 5)(_.searchWandCounted(Seq("dup"), 5)) == ((Nil, 0L, 0L)))
+    val sv = Sparse.tfVectors(noDocs, "doc_id", "text")
+    val sparse = MemorySparseIndex.sharded(sv, "doc_id", nShards = 4)
+    assert(MemorySparseIndex.fromDataFrame(sv, "doc_id").topKWand(Map("dup" -> 1L), 5).isEmpty)
+    assert(Sharded.countedLong(sparse, 5)(_.topKWandCounted(Map("dup" -> 1L), 5)) ==
+      ((Nil, 0L, 0L)))
+    val noVecs = annAssigned.where(lit(false))
+    intercept[IllegalArgumentException](MemoryAnnIndex.fromDataFrame(
+      noVecs, "vec_id", "embedding", "ivf_cell", annCents))
+    intercept[IllegalArgumentException](MemoryAnnIndex.sharded(
+      noVecs, "vec_id", "embedding", "ivf_cell", annCents, nShards = 4))
   }
 
   // ---- one request rule and one response writer on every route

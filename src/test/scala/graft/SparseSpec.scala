@@ -102,7 +102,7 @@ class SparseSpec extends SparkSpec {
   }
 
   test("sharded sparse tier: fan-out merge == unsharded WAND == TAAT bit-for-bit") {
-    import graft.serve.ShardedSparseIndex
+    import graft.serve.Sharded
     // the same skewed corpus the WAND parity test uses — rare high-weight
     // term decides θ, common cursor must skip — so the fan-out is probed
     // under real pruning, not a trivial scan
@@ -119,23 +119,23 @@ class SparseSpec extends SparkSpec {
       Map("common" -> 1L),
       Map("zz" -> 5L, "mid" -> 3L)) // partially unknown term
     for (n <- Seq(1, 3, 4, 16)) {
-      val sharded = ShardedSparseIndex.fromDataFrame(rows, "doc_id", nShards = n)
-      assert(sharded.nShards <= n && sharded.nShards >= 1)
+      val sharded = MemorySparseIndex.sharded(rows, "doc_id", nShards = n)
+      assert(sharded.size <= n && sharded.size >= 1)
       for (q <- queries; k <- Seq(1, 5, 10, 50)) {
-        assert(sharded.topKWand(q, k) == whole.topKWand(q, k),
+        assert(Sharded.countedLong(sharded, k)(_.topKWandCounted(q, k))._1 == whole.topKWand(q, k),
           s"sharded($n) != unsharded WAND for $q k=$k")
-        assert(sharded.topKWand(q, k) == whole.topK(q, k),
+        assert(Sharded.countedLong(sharded, k)(_.topKWandCounted(q, k))._1 == whole.topK(q, k),
           s"sharded($n) != TAAT for $q k=$k")
       }
     }
     // pruning survives the fan-out; ties keep id order through the merge
-    val sh4 = ShardedSparseIndex.fromDataFrame(rows, "doc_id", nShards = 4)
+    val sh4 = MemorySparseIndex.sharded(rows, "doc_id", nShards = 4)
     val (res, evaluated, skipped) =
-      sh4.topKWandCounted(Map("rare" -> 1L, "common" -> 1L), 4)
+      Sharded.countedLong(sh4, 4)(_.topKWandCounted(Map("rare" -> 1L, "common" -> 1L), 4))
     assert(res.size == 4 && skipped > 0L,
       s"per-shard WAND lost pruning (evaluated=$evaluated, skipped=$skipped)")
-    val tieShards = ShardedSparseIndex.fromDataFrame(sv, "doc_id", nShards = 3)
-    assert(tieShards.topKWand(Map("a" -> 2L, "c" -> 1L), 3) ==
+    val tieShards = MemorySparseIndex.sharded(sv, "doc_id", nShards = 3)
+    assert(Sharded.countedLong(tieShards, 3)(_.topKWandCounted(Map("a" -> 2L, "c" -> 1L), 3))._1 ==
       Seq((1L, 5L), (3L, 5L), (5L, 5L)),
       "equal scores must keep id order through the shard merge")
   }
