@@ -206,13 +206,14 @@ private[serve] object DenseDelta {
     /** Offer every live slot's exact cosine to `top`. */
     def offerLive(top: TopK, query: Seq[Float]): Unit = {
       val q = Cosine.query(query)
-      val qNorm = Cosine.queryNorm(q, dim)
+      val batch = new CosineBatch(vecs, norms, dim, q, Cosine.queryNorm(q, dim),
+        ids, top)
       var r = 0
       while (r < len) {
-        if (live(r))
-          top.offer(Cosine.score(vecs, r * dim, norms(r), q, qNorm, dim), ids(r))
+        if (live(r)) batch.add(r)
         r += 1
       }
+      batch.result()
     }
 
     /** The live rows, id-ascending. */

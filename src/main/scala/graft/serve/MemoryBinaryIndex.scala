@@ -82,11 +82,10 @@ final class MemoryBinaryIndex private (
     val pool = rank(ham, math.max(k, TopK.satMul(rerankFactor, k)))
     // exact codegen-fold cosine over the float vector
     val q = Cosine.query(query)
-    val qNorm = Cosine.queryNorm(q, dim)
-    val top = TopK.largest(k, pool.length)
-    pool.foreach(r =>
-      top.offer(Cosine.score(vs, r * dim, norms.get(r), q, qNorm, dim), ids(r)))
-    top.toSeq
+    val batch = new CosineBatch(vs, norms.get, dim, q, Cosine.queryNorm(q, dim),
+      ids, TopK.largest(k, pool.length))
+    batch.addAll(pool)
+    batch.result().toSeq
   }
 }
 

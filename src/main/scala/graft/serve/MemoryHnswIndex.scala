@@ -72,6 +72,11 @@ final class MemoryHnswIndex private (
   private def sim(q: Array[Double], qNorm: Double, r: Int): Double =
     Cosine.score(vecs, r * dim, norms(r), q, qNorm, dim)
 
+  // a neighbour list's sims, four rows per pass
+  private def sims(q: Array[Double], qNorm: Double)(
+      rows: Array[Int], n: Int, out: Array[Double]): Unit =
+    Cosine.scores(vecs, norms, dim, rows, n, q, qNorm, out)
+
   /** Beam search one layer (Algorithm 2), optionally filter-aware: the
     * walk TRAVERSES every neighborhood (a failing node still routes —
     * blocking it would sever paths and crater recall under selective
@@ -87,7 +92,7 @@ final class MemoryHnswIndex private (
                           visited: java.util.BitSet,
                           accept: Int => Boolean = _ => true): ArrayBuffer[(Int, Double)] =
     MemoryHnswIndex.beamSearch(eps, ef, visited,
-      ids(_), r => links(r)(level), sim(q, qNorm, _), accept)
+      ids(_), r => links(r)(level), sims(q, qNorm), accept)
 
   /** Filtered approximate top-k: the walk routes through EVERY node
     * (filtering the traversal would sever paths), but only ids passing
@@ -119,21 +124,8 @@ final class MemoryHnswIndex private (
     var ep = (entryPoint, sim(q, qNorm, entryPoint))
     var level = topLevel
     while (level > 0) {
-      // greedy ef=1 descent (Algorithm 5's upper-layer walk)
-      var improved = true
-      while (improved) {
-        improved = false
-        val ns = links(ep._1)(level)
-        var i = 0
-        while (i < ns.length) {
-          val s = sim(q, qNorm, ns(i))
-          val cc = java.lang.Double.compare(s, ep._2)
-          if (cc > 0 || (cc == 0 && ids(ns(i)) < ids(ep._1))) {
-            ep = (ns(i), s); improved = true
-          }
-          i += 1
-        }
-      }
+      val lv = level
+      ep = MemoryHnswIndex.descend(ep, r => links(r)(lv), ids(_), sims(q, qNorm))
       level -= 1
     }
     val visited = new java.util.BitSet(ids.length)
@@ -163,10 +155,12 @@ object MemoryHnswIndex {
       visited: java.util.BitSet,
       idOf: Int => Long,
       neighborsOf: Int => scala.collection.IndexedSeq[Int],
-      simOf: Int => Double,
+      simsOf: (Array[Int], Int, Array[Double]) => Unit,
       accept: Int => Boolean): ArrayBuffer[(Int, Double)] = {
     val cand = TopK.queue(math.min(ef, visited.size))
     val res = TopK.largest(ef, visited.size)
+    var fresh = new Array[Int](16)
+    var sims = new Array[Double](16)
     eps.foreach { case (r, s) =>
       if (!visited.get(r)) {
         visited.set(r)
@@ -180,18 +174,29 @@ object MemoryHnswIndex {
       if (res.isFull && java.lang.Double.compare(cSim, res.rootScore) < 0) {
         cand.clear() // best candidate can no longer improve the beam
       } else {
+        // the unvisited neighbours, marked and then scored as one
+        // batch; their offers keep list order, so every decision is the
+        // one-at-a-time walk's (a sim does not depend on the heaps)
         val ns = neighborsOf(cRow)
+        if (ns.length > fresh.length) {
+          fresh = new Array[Int](ns.length); sims = new Array[Double](ns.length)
+        }
+        var nf = 0
         var i = 0
         while (i < ns.length) {
           val n = ns(i)
-          if (!visited.get(n)) {
-            visited.set(n)
-            val s = simOf(n)
-            val id = idOf(n)
-            if (res.admits(s, id)) {
-              cand.offer(s, id, n)
-              if (accept(n)) res.offer(s, id, n)
-            }
+          if (!visited.get(n)) { visited.set(n); fresh(nf) = n; nf += 1 }
+          i += 1
+        }
+        simsOf(fresh, nf, sims)
+        i = 0
+        while (i < nf) {
+          val n = fresh(i)
+          val s = sims(i)
+          val id = idOf(n)
+          if (res.admits(s, id)) {
+            cand.offer(s, id, n)
+            if (accept(n)) res.offer(s, id, n)
           }
           i += 1
         }
@@ -202,6 +207,36 @@ object MemoryHnswIndex {
     var p = 0
     while (p < m) { out += ((res.rowAt(p), res.scoreAt(p))); p += 1 }
     out
+  }
+
+  /** Greedy ef=1 descent through one upper layer (Algorithm 5's walk):
+    * move to the best neighbour under (sim DESC, id ASC) until none
+    * improves on the current node. Each neighbour list is scored as one
+    * batch, then compared in list order — the one-at-a-time walk's
+    * decisions. Shared by the serve path and the build.
+    */
+  private[serve] def descend(
+      ep0: (Int, Double),
+      neighborsOf: Int => scala.collection.IndexedSeq[Int],
+      idOf: Int => Long,
+      simsOf: (Array[Int], Int, Array[Double]) => Unit): (Int, Double) = {
+    var ep = ep0
+    var improved = true
+    while (improved) {
+      improved = false
+      val ns = neighborsOf(ep._1).toArray
+      val sims = new Array[Double](ns.length)
+      simsOf(ns, ns.length, sims)
+      var i = 0
+      while (i < ns.length) {
+        val cc = java.lang.Double.compare(sims(i), ep._2)
+        if (cc > 0 || (cc == 0 && idOf(ns(i)) < idOf(ep._1))) {
+          ep = (ns(i), sims(i)); improved = true
+        }
+        i += 1
+      }
+    }
+    ep
   }
 
   /** Persist the graph as a self-describing artifact: one parquet of
@@ -323,6 +358,11 @@ object MemoryHnswIndex {
     val norms = Cosine.norms(vecs, n, dim)
     def sim(q: Array[Double], qNorm: Double, row: Int): Double =
       Cosine.score(vecs, row * dim, norms(row), q, qNorm, dim)
+    def sims(q: Array[Double], qNorm: Double)(
+        rows: Array[Int], nr: Int, out: Array[Double]): Unit =
+      Cosine.scores(vecs, norms, dim, rows, nr, q, qNorm, out)
+    def widened(row: Int): Array[Double] =
+      Array.tabulate(dim)(j => vecs(row * dim + j).toDouble)
     def simRows(a: Int, b: Int): Double = {
       var dot = 0.0
       var j = 0
@@ -390,33 +430,21 @@ object MemoryHnswIndex {
     def searchLayer(q: Array[Double], qNorm: Double, eps: Seq[(Int, Double)],
                     ef: Int, level: Int): ArrayBuffer[(Int, Double)] =
       beamSearch(eps, ef, new java.util.BitSet(n),
-        ids(_), r => links(r)(level), sim(q, qNorm, _), _ => true)
+        ids(_), r => links(r)(level), sims(q, qNorm), _ => true)
 
     var entry = 0
     var top = levels(0)
     var i = 1
     while (i < n) {
-      val q = (0 until dim).map(j => vecs(i * dim + j).toDouble).toArray
+      val q = widened(i)
       val qNorm = norms(i) // the insert vector's own precomputed norm
       val l = levels(i)
       var ep = (entry, sim(q, qNorm, entry))
       var lc = top
       // greedy descent above the insert level
       while (lc > l) {
-        var improved = true
-        while (improved) {
-          improved = false
-          val ns = links(ep._1)(lc)
-          var t = 0
-          while (t < ns.length) {
-            val s = sim(q, qNorm, ns(t))
-            val cc = java.lang.Double.compare(s, ep._2)
-            if (cc > 0 || (cc == 0 && ids(ns(t)) < ids(ep._1))) {
-              ep = (ns(t), s); improved = true
-            }
-            t += 1
-          }
-        }
+        val lv = lc
+        ep = descend(ep, r => links(r)(lv), ids(_), sims(q, qNorm))
         lc -= 1
       }
       // beam-connect from min(l, top) down to 0
@@ -430,9 +458,14 @@ object MemoryHnswIndex {
           links(i)(lc) += c
           links(c)(lc) += i
           if (links(c)(lc).length > cap) {
-            // re-select c's neighborhood under the same heuristic
-            val all = links(c)(lc).toSeq.distinct
-              .map(x => (x, simRows(c, x)))
+            // re-select c's neighborhood under the same heuristic; the
+            // list scores as one batch against c's own widened row (the
+            // products and the norm product commute, so each sim is
+            // simRows(c, x) bit for bit)
+            val xs = links(c)(lc).distinct.toArray
+            val sx = new Array[Double](xs.length)
+            sims(widened(c), norms(c))(xs, xs.length, sx)
+            val all = xs.toSeq.zip(sx)
             val kept = selectHeuristic(c, all, cap)
             links(c)(lc).clear()
             links(c)(lc) ++= kept

@@ -36,8 +36,10 @@ final case class MetaFilter(col: String, min: Long, max: Long)
   *
   * Result contract: BIT-IDENTICAL to the DataFrame path. Scoring is the
   * codegen [[graft.functions.CosineSimilarity]] fold with the row norms
-  * hoisted to load ([[Cosine]]), cell probing uses [[Ann.topKIvf]]'s
-  * exact rule (cosine to centroids, ties to the lower cell id), and
+  * hoisted to load ([[Cosine]]), run four passing candidates per pass
+  * ([[CosineBatch]]; each row keeps its own fold order, so no score
+  * moves), cell probing uses [[Ann.topKIvf]]'s exact rule (cosine to
+  * centroids, ties to the lower cell id), and
   * selection is [[TopK]]'s (score DESC, id ASC) total order — so
   * `topK`/`topKIvf` return exactly the rows `Ann.topK`/`Ann.topKIvf`
   * would, in the same order, with the same score bits (ServeSpec pins
@@ -187,12 +189,16 @@ final class MemoryAnnIndex private (
         .sortBy(r => (arr(r), r))
     }
 
+  // a loaded metadata column, or the coverage error naming what is loaded
+  private def column(name: String): Array[Long] =
+    meta.getOrElse(name, sys.error(
+      s"metadata column '$name' not loaded (have: ${meta.keys.mkString(",")})"))
+
   /** (lo, hi) positions in the column's sorted row array covering
     * values in [f.min, f.max] — candidate count = hi - lo.
     */
   private def sortedRange(f: MetaFilter): (Array[Int], Int, Int) = {
-    val arr = meta.getOrElse(f.col, sys.error(
-      s"metadata column '${f.col}' not loaded (have: ${meta.keys.mkString(",")})"))
+    val arr = column(f.col)
     val sorted = metaSorted(f.col)
     // first index with value >= min
     var lo = 0; var hi = sorted.length
@@ -210,10 +216,40 @@ final class MemoryAnnIndex private (
     (sorted, start, lo)
   }
 
+  /** A conjunction's columns, minimums and maximums as three primitive
+    * arrays, built once per request: [[passes]] is the one per-row
+    * filter test of every scan here.
+    */
+  private final class Conjunction(filters: Seq[MetaFilter]) {
+    private val cols = filters.map(f => column(f.col)).toArray
+    private val mins = filters.map(_.min).toArray
+    private val maxs = filters.map(_.max).toArray
+
+    def passes(r: Int): Boolean = {
+      var fi = 0
+      while (fi < cols.length) {
+        val v = cols(fi)(r)
+        if (v < mins(fi) || v > maxs(fi)) return false
+        fi += 1
+      }
+      true
+    }
+  }
+
+  /** The most selective filter's sorted range (sorted rows, lo, hi) and
+    * the conjunction of the others, which candidates in it must pass.
+    */
+  private def narrowest(filters: Seq[MetaFilter]): (Array[Int], Int, Int, Conjunction) = {
+    val ranged = filters.map(f => (f, sortedRange(f)))
+    val (bestF, (sorted, lo, hi)) = ranged.minBy { case (_, (_, l, h)) => h - l }
+    (sorted, lo, hi, new Conjunction(filters.filterNot(_ eq bestF)))
+  }
+
   /** Filtered top-k through the payload index: the MOST SELECTIVE
     * filter's sorted range enumerates candidates directly (scored rows =
     * that filter's match count, not the corpus), remaining filters test
-    * per candidate. Falls back to the scan path when the best range
+    * per candidate, and the candidates that pass score four per pass
+    * ([[CosineBatch]]). Falls back to the scan path when the best range
     * still covers most of the corpus (> `scanFraction` of rows — then
     * the scan's sequential locality wins). Results are IDENTICAL to
     * [[topK]] with the same filters — same fold, same (score DESC,
@@ -228,29 +264,18 @@ final class MemoryAnnIndex private (
       "topKFilteredIndexed needs at least one filter (use topK for none)")
     require(query.length == dim, s"query dim ${query.length} != index dim $dim")
     if (k <= 0) return Nil
-    val ranged = filters.map(f => (f, sortedRange(f)))
-    val (bestF, (sorted, lo, hi)) = ranged.minBy { case (_, (_, l, h)) => h - l }
+    val (sorted, lo, hi, rest) = narrowest(filters)
     if (hi - lo > scanFraction * size) return topK(query, k, filters)
-    val rest = filters.filterNot(_ eq bestF)
-      .map(f => (meta(f.col), f.min, f.max))
     val q = Cosine.query(query)
-    val qNorm = Cosine.queryNorm(q, dim)
-    val top = TopK.largest(k, hi - lo)
+    val batch = new CosineBatch(vecs, norms, dim, q, Cosine.queryNorm(q, dim),
+      ids, TopK.largest(k, hi - lo))
     var p = lo
     while (p < hi) {
       val r = sorted(p)
-      var pass = true
-      var fi = 0
-      while (pass && fi < rest.length) {
-        val (arr, mn, mx) = rest(fi)
-        val v = arr(r)
-        pass = v >= mn && v <= mx
-        fi += 1
-      }
-      if (pass) top.offer(Cosine.score(vecs, r * dim, norms(r), q, qNorm, dim), ids(r))
+      if (rest.passes(r)) batch.add(r)
       p += 1
     }
-    top.toSeq
+    batch.result().toSeq
   }
 
   /** Exact match count for a conjunction (the planner's selectivity
@@ -259,23 +284,11 @@ final class MemoryAnnIndex private (
     */
   def countMatching(filters: Seq[MetaFilter]): Int = {
     if (filters.isEmpty) return size
-    val ranged = filters.map(f => (f, sortedRange(f)))
-    val (bestF, (sorted, lo, hi)) = ranged.minBy { case (_, (_, l, h)) => h - l }
-    val rest = filters.filterNot(_ eq bestF)
-      .map(f => (meta(f.col), f.min, f.max))
+    val (sorted, lo, hi, rest) = narrowest(filters)
     var n = 0
     var p = lo
     while (p < hi) {
-      val r = sorted(p)
-      var pass = true
-      var fi = 0
-      while (pass && fi < rest.length) {
-        val (arr, mn, mx) = rest(fi)
-        val v = arr(r)
-        pass = v >= mn && v <= mx
-        fi += 1
-      }
-      if (pass) n += 1
+      if (rest.passes(sorted(p))) n += 1
       p += 1
     }
     n
@@ -305,8 +318,10 @@ final class MemoryAnnIndex private (
   private def topKInCells(query: Seq[Float], k: Int,
                           cells: Seq[Int],
                           filters: Seq[MetaFilter]): Seq[(Long, Double)] =
-    topKInCellsWhere(query, k, cells, filters, (_, _) => true)
+    topKInCellsWhere(query, k, cells, filters, CosineBatch.admitAll)
 
+  // the cell scan: rows passing the conjunction score four per pass,
+  // and `admit` (a keyset cursor) sees every score before the heap does
   private def topKInCellsWhere(query: Seq[Float], k: Int,
                                cells: Seq[Int],
                                filters: Seq[MetaFilter],
@@ -314,35 +329,20 @@ final class MemoryAnnIndex private (
     // k <= 0 is an ordinary request for nothing (the DataFrame front
     // door's .limit(0) shape) — empty result, not a crashed heap
     if (k <= 0) return Nil
-    val fcols = filters.map { f =>
-      (meta.getOrElse(f.col, sys.error(
-        s"metadata column '${f.col}' not loaded (have: ${meta.keys.mkString(",")})")),
-        f.min, f.max)
-    }
+    val conj = new Conjunction(filters)
     require(query.length == dim, s"query dim ${query.length} != index dim $dim")
     val q = Cosine.query(query)
-    val qNorm = Cosine.queryNorm(q, dim)
-    val top = TopK.largest(k, size)
+    val batch = new CosineBatch(vecs, norms, dim, q, Cosine.queryNorm(q, dim),
+      ids, TopK.largest(k, size), admit)
     cells.foreach { cell =>
       var r = cellOffsets(cell)
       val end = cellOffsets(cell + 1)
       while (r < end) {
-        var pass = true
-        var fi = 0
-        while (pass && fi < fcols.length) {
-          val (arr, mn, mx) = fcols(fi)
-          val v = arr(r)
-          pass = v >= mn && v <= mx
-          fi += 1
-        }
-        if (pass) {
-          val score = Cosine.score(vecs, r * dim, norms(r), q, qNorm, dim)
-          if (admit(score, ids(r))) top.offer(score, ids(r))
-        }
+        if (conj.passes(r)) batch.add(r)
         r += 1
       }
     }
-    top.toSeq
+    batch.result().toSeq
   }
 }
 
@@ -583,11 +583,10 @@ final class MemorySq8Index private (
     if (k <= 0) return Nil
     val (scores, qd) = approxScores(query)
     val pool = rank(scores, math.max(k, TopK.satMul(rerankFactor, k)))
-    val qNorm = Cosine.queryNorm(qd, dim)
-    val top = TopK.largest(k, pool.length)
-    pool.foreach(r =>
-      top.offer(Cosine.score(vs, r * dim, norms.get(r), qd, qNorm, dim), ids(r)))
-    top.toSeq
+    val batch = new CosineBatch(vs, norms.get, dim, qd, Cosine.queryNorm(qd, dim),
+      ids, TopK.largest(k, pool.length))
+    batch.addAll(pool)
+    batch.result().toSeq
   }
 }
 
@@ -689,20 +688,17 @@ final class MemoryMrlIndex private (
     val q = Cosine.query(query)
     // candidate pool by (prefix score DESC, id ASC) — the DataFrame
     // stage's TakeOrderedAndProject rule over the SLICED column
-    val pool = TopK.largest(TopK.satMul(k, rerankFactor), ids.length)
-    val qPrefixNorm = Cosine.queryNorm(q, prefixDim)
+    val scan = new CosineBatch(prefix, prefixNorms, prefixDim, q,
+      Cosine.queryNorm(q, prefixDim), ids,
+      TopK.largest(TopK.satMul(k, rerankFactor), ids.length))
     var r = 0
-    while (r < ids.length) {
-      pool.offer(Cosine.score(prefix, r * prefixDim, prefixNorms(r), q,
-        qPrefixNorm, prefixDim), ids(r), r)
-      r += 1
-    }
+    while (r < ids.length) { scan.add(r); r += 1 }
+    val pool = scan.result()
     // exact rerank over the pool (bounded: k·rerankFactor rows)
-    val qNorm = Cosine.queryNorm(q, dim)
-    val top = TopK.largest(k, pool.size)
-    pool.rowsBestFirst().foreach(row =>
-      top.offer(Cosine.score(vecs, row * dim, norms(row), q, qNorm, dim), ids(row)))
-    top.toSeq
+    val rerank = new CosineBatch(vecs, norms, dim, q, Cosine.queryNorm(q, dim),
+      ids, TopK.largest(k, pool.size))
+    rerank.addAll(pool.rowsBestFirst())
+    rerank.result().toSeq
   }
 }
 
@@ -797,11 +793,10 @@ final class MemoryPqIndex private (
     r = 0
     while (r < n) { pool.offer(adc(r), ids(r), r); r += 1 }
     val q = Cosine.query(query)
-    val qNorm = Cosine.queryNorm(q, dim)
-    val top = TopK.largest(k, pool.size)
-    pool.rowsBestFirst().foreach(ri =>
-      top.offer(Cosine.score(vecs, ri * dim, norms(ri), q, qNorm, dim), ids(ri)))
-    top.toSeq
+    val batch = new CosineBatch(vecs, norms, dim, q, Cosine.queryNorm(q, dim),
+      ids, TopK.largest(k, pool.size))
+    batch.addAll(pool.rowsBestFirst())
+    batch.result().toSeq
   }
 }
 

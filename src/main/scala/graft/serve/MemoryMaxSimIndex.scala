@@ -38,17 +38,24 @@ final class MemoryMaxSimIndex private (
     val qs = queryBag.map(Cosine.query).toArray
     val qNorms = qs.map(Cosine.queryNorm(_, dim))
     val top = TopK.largest(k, docIds.length)
+    // a doc's part rows, scored four per pass against each query vector
+    var parts = new Array[Int](0)
+    var cs = new Array[Double](0)
     var d = 0
     while (d < docIds.length) {
+      val np = offsets(d + 1) - offsets(d)
+      if (np > parts.length) { parts = new Array[Int](np); cs = new Array[Double](np) }
+      var p = 0
+      while (p < np) { parts(p) = offsets(d) + p; p += 1 }
       var score = 0.0
       var qi = 0
       var first = true
       while (qi < qs.length) {
+        Cosine.scores(vecs, norms, dim, parts, np, qs(qi), qNorms(qi), cs)
         var m = Double.NegativeInfinity
-        var p = offsets(d)
-        while (p < offsets(d + 1)) {
-          val c = Cosine.score(vecs, p * dim, norms(p), qs(qi), qNorms(qi), dim)
-          if (c > m) m = c
+        p = 0
+        while (p < np) {
+          if (cs(p) > m) m = cs(p)
           p += 1
         }
         // left-assoc query-ascending fold, the DataFrame tier's

@@ -58,11 +58,10 @@ final class MemoryRpqIndex private (
       }
     }
     val q = Cosine.query(query)
-    val qNorm = Cosine.queryNorm(q, dim)
-    val top = TopK.largest(k, pool.size)
-    pool.rowsBestFirst().foreach(r =>
-      top.offer(Cosine.score(vecs, r * dim, norms(r), q, qNorm, dim), ids(r)))
-    top.toSeq
+    val batch = new CosineBatch(vecs, norms, dim, q, Cosine.queryNorm(q, dim),
+      ids, TopK.largest(k, pool.size))
+    batch.addAll(pool.rowsBestFirst())
+    batch.result().toSeq
   }
 }
 

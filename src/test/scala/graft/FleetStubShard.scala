@@ -13,8 +13,11 @@ import graft.serve.FleetProtocol
   */
 final class FleetStubShard(hits: Seq[(Long, Double)], port0: Int = 0) {
   private val ss = new ServerSocket(port0)
-  private val accepted =
-    java.util.Collections.synchronizedList(new java.util.ArrayList[java.net.Socket]())
+  // `accepted` and `killed` change only under `lock`: a socket accepted
+  // after kill() is closed by the acceptor instead of being served
+  private val lock = new Object
+  private val accepted = new java.util.ArrayList[java.net.Socket]()
+  private var killed = false
   @volatile private var served = 0
   @volatile private var reloads = 0
   def port: Int = ss.getLocalPort
@@ -25,7 +28,14 @@ final class FleetStubShard(hits: Seq[(Long, Double)], port0: Int = 0) {
     try {
       while (true) {
         val sock = ss.accept()
-        accepted.add(sock)
+        val live = lock.synchronized {
+          if (!killed) accepted.add(sock)
+          !killed
+        }
+        if (!live) {
+          try sock.close() catch { case _: Throwable => () }
+          throw new java.net.SocketException("killed")
+        }
         val th = new Thread(() => {
           try {
             sock.setTcpNoDelay(true)
@@ -63,8 +73,11 @@ final class FleetStubShard(hits: Seq[(Long, Double)], port0: Int = 0) {
   acceptor.setDaemon(true)
   acceptor.start()
 
-  /** SIGKILL analog: close the listener and every accepted connection. */
-  def kill(): Unit = {
+  /** SIGKILL analog: close the listener and every accepted connection,
+    * including one the acceptor returns from `accept()` during the kill.
+    */
+  def kill(): Unit = lock.synchronized {
+    killed = true
     try ss.close() catch { case _: Throwable => () }
     accepted.forEach(s => try s.close() catch { case _: Throwable => () })
   }

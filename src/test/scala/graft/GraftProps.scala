@@ -1,7 +1,7 @@
 package graft
 
 import org.scalacheck.{Gen, Prop, Properties}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.{forAll, forAllNoShrink}
 
 import graft.functions.PortableHash
 import graft.ml.BpeTokenizer
@@ -497,6 +497,102 @@ object GraftProps extends Properties("graft") {
       tier.topK(q, k) == twin.topK(q, k) &&
         tier.topKWand(q, k) == tier.topK(q, k) &&
         tier.deltaSize == live.size.toLong
+    }
+  }
+
+  // float elements with every special the fold can meet: NaN, ±0.0, ±Inf,
+  // subnormals. Mostly ordinary values over a wide exponent range, so
+  // that most folds stay finite and round, and a changed add order shows
+  // in the bits
+  private val specialFloat: Gen[Float] = Gen.frequency(
+    20 -> Gen.zip(Gen.chooseNum(-4f, 4f), Gen.chooseNum(-12, 12))
+      .map { case (x, e) => x * math.scalb(1f, e) },
+    1 -> Gen.oneOf(Float.NaN, 0.0f, -0.0f, Float.PositiveInfinity,
+      Float.NegativeInfinity, Float.MinPositiveValue, -Float.MinPositiveValue,
+      1.0e-40f, -3.0e-39f, Float.MaxValue))
+
+  /** The 4-row fold ([[graft.serve.Cosine.dot4]]) keeps every lane's
+    * bits: each lane's dot, divided by its norms, equals the one-row
+    * [[graft.serve.Cosine.score]] (NaN compared as NaN), and
+    * [[graft.serve.Cosine.scores]] equals n one-row calls for every n
+    * from 0 to 9 — every tail length — over any rows, repeats included.
+    * Neither property here shrinks: shrinking their nested float lists
+    * runs for minutes, and the drawn case is printed as it is.
+    */
+  property("serve.cosine-four-row-fold-equals-one-row-bitwise") = {
+    import graft.serve.Cosine
+    forAllNoShrink(Gen.chooseNum(1, 24)) { dim =>
+      forAllNoShrink(Gen.listOfN(6 * dim, specialFloat), Gen.listOfN(dim, specialFloat),
+        Gen.listOf(Gen.chooseNum(0, 5)).map(_.take(9))) { (flat, qf, picks) =>
+        val vecs = flat.toArray
+        val norms = Cosine.norms(vecs, 6, dim)
+        val q = Cosine.query(qf)
+        val qNorm = Cosine.queryNorm(q, dim)
+        def bits(d: Double) = java.lang.Double.doubleToLongBits(d)
+        def one(r: Int) = Cosine.score(vecs, r * dim, norms(r), q, qNorm, dim)
+        val dots = new Array[Double](5)
+        Cosine.dot4(vecs, 2 * dim, 0, 5 * dim, 2 * dim, q, dim, dots, 1)
+        val lanes = Seq(2, 0, 5, 2).zipWithIndex.forall { case (r, i) =>
+          bits(dots(i + 1) / (norms(r) * qNorm)) == bits(one(r))
+        }
+        val rows = picks.toArray
+        val out = new Array[Double](rows.length)
+        Cosine.scores(vecs, norms, dim, rows, rows.length, q, qNorm, out)
+        Prop(lanes) :| "dot4 lanes" &&
+          Prop(rows.indices.forall(i => bits(out(i)) == bits(one(rows(i))))) :|
+            s"scores over ${rows.length} rows"
+      }
+    }
+  }
+
+  /** Batched scoring is unobservable at the tier: for 0–9 passing
+    * candidates (every tail of the 4-row pass), duplicate vectors and so
+    * tied scores, non-finite elements, k from 0 to past the corpus, and
+    * keyset cursors, every exact [[graft.serve.MemoryAnnIndex]] entry
+    * point equals the brute-force (score DESC, id ASC) ranking bit for
+    * bit — whichever of the scan and payload-index paths serves it.
+    */
+  property("serve.batched-exact-topk-equals-brute-force") = {
+    val dim = 6
+    val base: Gen[List[Float]] = Gen.listOfN(dim, specialFloat)
+      .map(xs => if (xs.forall(_ == 0f)) 1f :: xs.tail else xs)
+    val rowsGen = for {
+      pool <- Gen.listOfN(3, base)
+      n <- Gen.chooseNum(1, 12)
+      rows <- Gen.listOfN(n, Gen.zip(
+        Gen.oneOf(Gen.oneOf(pool), base), Gen.chooseNum(0, 1), Gen.chooseNum(0L, 3L)))
+    } yield rows.zipWithIndex.map { case ((v, c, t), i) => (i.toLong * 3, v, c, t) }
+    val cents = Seq(Seq.fill(dim)(1f), Seq.tabulate(dim)(j => if (j % 2 == 0) 1f else -1f))
+    forAllNoShrink(rowsGen, base, Gen.chooseNum(0, 16), Gen.chooseNum(0L, 3L),
+      Gen.chooseNum(0L, 3L), Gen.chooseNum(0, 20)) { (rows, q, k, fa, fb, cur) =>
+      val (lo, hi) = (math.min(fa, fb), math.max(fa, fb))
+      val idx = graft.serve.MemoryAnnIndex.fromRows(
+        rows.map(r => (r._1, r._2, r._3)), cents,
+        metaCols = Seq("tag"), metaVals = rows.map(r => Seq(r._4)))
+      def desc(a: (Long, Double), b: (Long, Double)): Boolean = {
+        val c = java.lang.Double.compare(b._2, a._2)
+        c < 0 || (c == 0 && a._1 < b._1)
+      }
+      def bits(xs: Seq[(Long, Double)]) =
+        xs.map { case (id, s) => (id, java.lang.Double.doubleToLongBits(s)) }
+      def brute(pred: Long => Boolean) = rows.filter(r => pred(r._4))
+        .map(r => (r._1, Ann.cosine(r._2, q))).sortWith(desc)
+      val all = brute(_ => true)
+      val inRange = brute(t => t >= lo && t <= hi)
+      val f = Seq(graft.serve.MetaFilter("tag", lo, hi))
+      // a cursor at a real row (or before the first), as a page boundary
+      val (cid, cs) = if (cur < inRange.length) inRange(cur) else (-1L, Double.NaN)
+      val after = inRange.filter { case (id, s) =>
+        val c = java.lang.Double.compare(s, cs)
+        c < 0 || (c == 0 && id > cid)
+      }
+      Prop(bits(idx.topK(q, k)) == bits(all.take(k))) :| "topK" &&
+        Prop(bits(idx.topK(q, k, f)) == bits(inRange.take(k))) :| "filtered scan" &&
+        Prop(bits(idx.topKFilteredIndexed(q, k, f, scanFraction = 1.0)) ==
+          bits(inRange.take(k))) :| "payload index" &&
+        Prop(bits(idx.topKIvf(q, k, 2, f)) == bits(inRange.take(k))) :| "full probe" &&
+        Prop(bits(idx.topKAfter(q, k, cs, cid, f)) == bits(after.take(k))) :| "cursor" &&
+        Prop(idx.countMatching(f) == inRange.length) :| "count"
     }
   }
 }
